@@ -39,12 +39,10 @@ def free_local_checkpoint(df: DataFrame) -> None:
     """Release the executor storage behind a localCheckpoint'ed
     DataFrame. ``df.unpersist()`` is a no-op for checkpoints (the RDD
     is persisted outside the CacheManager); the handle lives on the
-    LogicalRDD plan node. Safe to call on anything — silently does
-    nothing when the plan isn't a checkpoint."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    LogicalRDD plan node. A no-op when the plan isn't a checkpoint."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _star_contraction(

@@ -265,22 +265,26 @@ def release_pinned_indexes() -> int:
     RDD has truncated lineage: a consumer materialized after release
     fails with missing-checkpoint-block errors instead of
     recomputing — callers must fully materialize every derived frame
-    before releasing. Returns the number of frames released.
+    before releasing. Frames pinned under a session that has since
+    been stopped are dropped uncounted; any other failure raises.
+    Returns the number of frames released.
     """
+    from pyspark import SparkContext
+
+    from .graph import free_local_checkpoint
+
+    active = SparkContext._active_spark_context
     n = 0
     while _PINNED_INDEX_FRAMES:
         f = _PINNED_INDEX_FRAMES.pop()
-        try:
-            f.unpersist()
-            # a localCheckpoint'ed pin (corpus_funnel stage frames) is
-            # persisted outside the CacheManager — unpersist() is a
-            # no-op for it; release the underlying RDD blocks too
-            from .graph import free_local_checkpoint
-
-            free_local_checkpoint(f)
-            n += 1
-        except Exception:
-            pass  # session already stopped; nothing to release
+        if active is None or f.sparkSession.sparkContext is not active:
+            continue  # its session was stopped; the blocks went with it
+        f.unpersist()
+        # a localCheckpoint'ed pin (corpus_funnel stage frames) is
+        # persisted outside the CacheManager — unpersist() is a no-op
+        # for it; release the underlying RDD blocks too
+        free_local_checkpoint(f)
+        n += 1
     return n
 
 

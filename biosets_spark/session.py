@@ -6,6 +6,19 @@ multi-executor cluster in mind:
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic join-strategy switching replace hand-tuned partition counts
   when the data is 1000x bigger.
+- Cached pins sized by their bytes
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``): a
+  ``.cache()`` pin gets AQE's coalesced partition count, as a
+  ``localCheckpoint`` pin already does, instead of keeping all
+  ``spark.sql.shuffle.partitions`` for every stage that reads it.
+  AQE's ``parallelismFirst`` coalescing with its 1 MB minimum keeps a
+  corpus-sized pin at ``defaultParallelism`` or more partitions, so
+  only pins under ``defaultParallelism`` MB shrink: at bench scale the
+  LSH bucket and hot-bucket tables, candidate sets and the
+  connected-components edge list. Measured on the benchmark's
+  decision_heavy workload (sf0.01, 4 cores): 692 tasks -> 71 tasks per
+  pass, q_components_user_chains alone 499 -> 33. A user-given
+  ``repartition(n)`` is never coalesced.
 - Broadcast threshold raised to 32 MiB: the dimension tables of a
   star schema (region/nation/customer at 100 TB fact scale) should
   broadcast, never shuffle.
@@ -22,6 +35,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# the directory that holds the biosets_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _state_store_provider() -> str:
@@ -74,6 +90,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -116,7 +133,23 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
     return spark
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Put the directory holding ``biosets_spark`` on the Python
+    workers' PYTHONPATH, so the Arrow-UDF operators (``mapInPandas``,
+    ``applyInPandas``) import the package whatever the driver's working
+    directory. Spark merges this entry with the workers' own path and
+    the process environment's; it applies to every UDF built after the
+    call. It reaches workers that share the driver's filesystem (local
+    masters); a cluster's executors need the package installed or
+    shipped with ``--py-files``."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
 
 
 def apply_session_conf(spark: SparkSession) -> SparkSession:
@@ -127,6 +160,8 @@ def apply_session_conf(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    _ship_package(spark)
     try:
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     except Exception:

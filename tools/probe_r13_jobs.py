@@ -1,8 +1,11 @@
 """Per-job duration dump (guide §1.5/§7.1): run one target query and
 list every Spark job (duration, stage count, description) from the UI
-REST API, so the eager decision-job cost is attributable job by job."""
+REST API, so the eager decision-job cost is attributable job by job.
+
+Usage: python tools/probe_r13_jobs.py QUERY_NAME [QUERY_NAME ...]"""
 from __future__ import annotations
 
+import calendar
 import json
 import os
 import sys
@@ -18,9 +21,18 @@ from biosets_spark import release_pinned_indexes  # noqa: E402
 from biosets_spark.session import get_spark  # noqa: E402
 
 
+def gmt_epoch(s: str) -> float:
+    """Epoch seconds of a REST API timestamp such as
+    ``2026-10-17T04:50:53.123GMT``, with the ``.mmm`` sub-second part."""
+    return calendar.timegm(time.strptime(s[:19], "%Y-%m-%dT%H:%M:%S")) + float("0." + s[20:23])
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:]
+    if not names:
+        print(__doc__.rsplit("\n\n", 1)[1], file=sys.stderr)
+        sys.exit(1)
     spark = get_spark("probe-r13-jobs", extra_conf={"spark.ui.enabled": "true"})
     sc = spark.sparkContext
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
@@ -33,14 +45,11 @@ def main() -> None:
             data = json.loads(r.read())
         out = []
         for j in data:
-            st = time.mktime(time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S"))
+            st = gmt_epoch(j["submissionTime"])
             if st >= min_t - 1:
                 dur = None
                 if j.get("completionTime"):
-                    # sub-second precision from the GMT strings' .mmm
-                    def ms(s):
-                        return time.mktime(time.strptime(s[:19], "%Y-%m-%dT%H:%M:%S")) + float("0." + s[20:23])
-                    dur = round(ms(j["completionTime"]) - ms(j["submissionTime"]), 3)
+                    dur = round(gmt_epoch(j["completionTime"]) - st, 3)
                 out.append({"id": j["jobId"], "dur": dur,
                             "stages": len(j.get("stageIds", [])),
                             "tasks": j.get("numTasks"),
