@@ -126,12 +126,13 @@ def cleanup_cache_files(cache_directory: str) -> int:
 
 
 def release_pinned_indexes() -> int:
-    """Unpersist the partition-layout intermediates pinned by index-
-    based operators (kfold, slicing, horizontal align). Call between
-    jobs in a long-running session, after results are materialized."""
-    from .operators.joins import release_pinned_indexes as _release
+    """Free every intermediate the operators and queries pinned (caches
+    and checkpoints, see ``biosets_spark.pins``) and return how many.
+    Call between jobs in a long-running session, after results are
+    materialized."""
+    from .pins import release
 
-    return _release()
+    return release()
 
 
 __all__ = [

@@ -52,6 +52,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from .. import pins
+
 SCALE = 1_000_000
 # strictly greater than SCALE * max|component| (contract: |x| < 2.0);
 # makes every offset-space component positive so the M-step's
@@ -205,7 +207,7 @@ def kmeans_fit(
         # and re-scaling the source per pass (the MLlib convention).
         # Released before return — the caller's final assignment plan
         # keeps its own lineage.
-        v = v.persist()
+        v = pins.pin(v)
     try:
         cents = sample_centroids(v, k, id_col, "_v", seed)
         dim = len(cents[0]) if cents else 0
@@ -229,7 +231,7 @@ def kmeans_fit(
         return assign_cells(v, cents).drop("_v"), cents
     finally:
         if iters > 0:
-            v.unpersist()
+            pins.unpin(v)
 
 
 def prune_farthest(

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from .joins import pin_intermediate
+from .. import pins
 
 # Candidate-id sets up to this size broadcast in the LSH verification
 # prune (long ids: 2M ~ 16 MB serialized, inside the session's 32 MB
@@ -92,9 +92,9 @@ def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
     # exactly what the self-join and later reps reuse. The cache holds
     # (id, bucket) pairs only — far smaller than the shingle-array
     # cache the minhash caller already pins.
-    buckets = pin_intermediate(buckets.cache())
+    buckets = pins.pin(buckets)
     hot = buckets.groupBy(key).agg(*aggs).filter(col("_bsz") > cap)
-    hot = pin_intermediate(hot.cache())
+    hot = pins.pin(hot)
     if hot.limit(1).count() == 0:
         return plain_pairs(buckets).distinct()
     # The star-degradation path changes the OUTPUT CONTRACT (pair
@@ -230,7 +230,6 @@ def ngram_jaccard_pairs(
         )
         # hot set is small by construction — broadcast anti-join
         sh = sh.join(F.broadcast(hot), "_sh", "left_anti")
-    sh = pin_intermediate(sh.cache())
     # Fill the cache with ONE serial job before the consumers fan out:
     # without it, the per-doc counts aggregate and both self-join sides
     # race to materialize the cold cache and BlockManager write locks
@@ -238,8 +237,8 @@ def ngram_jaccard_pairs(
     # clearCache between reps, 3 alternating rounds: racing cache
     # 3.4-3.8 s, prefilled 3.3 s — and the same fix pattern as the
     # minhash/simhash decision probes, which fill their caches as a
-    # side effect). The count result itself is unused.
-    sh.count()
+    # side effect).
+    sh = pins.pin(sh, eager=True)
     counts = sh.groupBy("_id").agg(F.count("*").alias("_n"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -287,10 +286,9 @@ def containment_pairs(
             .select("_sh")
         )
         sh = sh.join(F.broadcast(hot), "_sh", "left_anti")
-    sh = pin_intermediate(sh.cache())
     # serial cache fill before the consumer fan-out — see
     # ngram_jaccard_pairs for the measured race it avoids
-    sh.count()
+    sh = pins.pin(sh, eager=True)
     counts = sh.groupBy("_id").agg(F.count("*").alias("_n"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -360,11 +358,10 @@ def minhash_lsh_pairs(
     r = num_perm // bands
     # one shingle-ARRAY pass feeds both the signature aggregate and
     # the (pruned) verification explode
-    base = pin_intermediate(
+    base = pins.pin(
         df.select(col(id_col).alias("_id"),
                   shingles(col(text_col), shingle_n).alias("_arr"))
         .filter(col("_arr").isNotNull())
-        .cache()
     )
     sh = base.select("_id", F.explode(col("_arr")).alias("_sh"))
     # single string hash, then k cheap long re-hashes (see
@@ -408,7 +405,7 @@ def minhash_lsh_pairs(
     if n_docs <= _PRUNE_MIN_DOCS:
         verif = base
     else:
-        cands = pin_intermediate(cands.cache())
+        cands = pins.pin(cands)
         n_pairs_probe = cands.limit(_BROADCAST_ID_LIMIT // 2 + 1).count()
         cand_ids = (
             cands.select(col("id_a").alias("_id"))
@@ -556,8 +553,7 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     if n_chunks > 32:
         raise ValueError("max_hamming > 31 leaves chunks under 2 bits; use a different blocker")
     width = 64 // n_chunks
-    sig = pin_intermediate(
-        simhash(df, text_col, id_col, shingle_n, portable=portable).cache())
+    sig = pins.pin(simhash(df, text_col, id_col, shingle_n, portable=portable))
 
     def chunk_expr(i: int):
         # last chunk absorbs the remainder bits

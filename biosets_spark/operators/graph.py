@@ -34,15 +34,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-
-def free_local_checkpoint(df: DataFrame) -> None:
-    """Release the executor storage behind a localCheckpoint'ed
-    DataFrame. ``df.unpersist()`` is a no-op for checkpoints (the RDD
-    is persisted outside the CacheManager); the handle lives on the
-    LogicalRDD plan node. A no-op when the plan isn't a checkpoint."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.nodeName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+from .. import pins
 
 
 def _star_contraction(
@@ -74,7 +66,7 @@ def _star_contraction(
         before declaring convergence (the checksum alone is a
         2^-64-ish collision risk, not a proof)."""
         obs = Observation()
-        ck = frame.observe(
+        ck = pins.pin(frame.observe(
             obs,
             F.count(lit(1)).alias("n"),
             # decimal accumulator: a long sum of xxhash64 values
@@ -83,7 +75,7 @@ def _star_contraction(
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
                 lit(0).cast("decimal(38,0)"),
             ).alias("chk"),
-        ).localCheckpoint(eager=True)
+        ), checkpoint=True, eager=True)
         m = obs.get
         return ck, int(m["n"]), int(m["chk"])
 
@@ -118,7 +110,7 @@ def _star_contraction(
             changed = new_e.join(e, ["u", "v"], "left_anti").limit(1).count()
         else:
             changed = 1
-        free_local_checkpoint(e)
+        pins.unpin(e)
         e, n_e, chk_e = new_e, n_new, chk_new
         if changed == 0:
             converged = True
@@ -145,7 +137,7 @@ def _star_contraction(
         .groupBy("node")
         .agg(F.min("component").alias("component"))
     )
-    out = (
+    out = pins.pin(
         edges.select("u")
         .distinct()
         .alias("n")
@@ -153,10 +145,9 @@ def _star_contraction(
         .select(
             col("n.u").alias("node"),
             F.coalesce(col("l.component"), col("n.u")).alias("component"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    free_local_checkpoint(e)
+        ),
+        checkpoint=True, eager=True)
+    pins.unpin(e)
     return out
 
 
@@ -199,18 +190,17 @@ def connected_components(
     round — marginally cheaper on the diameter-1-2 graphs near-dup
     detectors emit).
 
-    Storage note: the returned frame is backed by the FINAL
-    iteration's localCheckpoint, which stays pinned on the executors
-    (intermediate rounds are freed as the loop runs). Long-running
-    sessions that call this repeatedly should release it once the
-    result is materialized/persisted:
-    ``free_local_checkpoint(result)`` (as embedding_dup_pairs does).
+    Storage note: on the distributed path the returned frame is backed
+    by the final localCheckpoint, which stays pinned on the executors
+    (intermediate rounds are freed as the loop runs). It is a
+    ``pins.pin``, so ``release_pinned_indexes()`` frees it once the
+    result has been materialized.
     """
     if on_nonconvergence not in ("raise", "warn"):
         raise ValueError("on_nonconvergence must be 'raise' or 'warn'")
     if algorithm not in ("star", "label"):
         raise ValueError("algorithm must be 'star' or 'label'")
-    edges = (
+    edges = pins.pin(
         pairs.select(col(a_col).alias("u"), col(b_col).alias("v"))
         .union(pairs.select(col(b_col).alias("u"), col(a_col).alias("v")))
         # a null endpoint carries no similarity information; dropping
@@ -219,7 +209,6 @@ def connected_components(
         # orphan row in the join path — r6 review)
         .dropna()
         .distinct()
-        .cache()
     )
     n_edges = edges.count()
     if n_edges <= small_graph_threshold:
@@ -255,15 +244,15 @@ def connected_components(
         out = pairs.sparkSession.createDataFrame(
             [(n, comp_min[find(n)]) for n in parent], out_schema
         )
-        edges.unpersist()
+        pins.unpin(edges)
         return out
 
     if algorithm == "star":
         out = _star_contraction(edges, max_iterations, on_nonconvergence)
-        edges.unpersist()
+        pins.unpin(edges)
         return out
 
-    labels = edges.select("u").distinct().withColumn("component", col("u")).cache()
+    labels = pins.pin(edges.select("u").distinct().withColumn("component", col("u")))
 
     changed = 1
     for _ in range(max_iterations):
@@ -289,7 +278,7 @@ def connected_components(
         # instead of growing with the accumulated iterative lineage —
         # at 50+ rounds the un-truncated plan is itself a bottleneck
         obs = Observation()
-        new_labels = (
+        new_labels = pins.pin(
             labels.select("u", "component", lit(True).alias("_own"))
             .union(neighbor_labels)
             .groupBy("u")
@@ -308,18 +297,14 @@ def connected_components(
                     lit(0),
                 ).alias("changed"),
             )
-            .select("u", "component")
-            .localCheckpoint(eager=True)
-        )
+            .select("u", "component"),
+            checkpoint=True, eager=True)
         changed = int(obs.get["changed"])
-        # frees the cached round-0 labels AND each round's checkpoint
-        # (unpersist() alone is a no-op for checkpointed frames)
-        labels.unpersist()
-        free_local_checkpoint(labels)
+        pins.unpin(labels)  # the cached round-0 labels, then each round's checkpoint
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
+    pins.unpin(edges)
     if changed != 0:
         msg = (
             f"connected_components did not converge in {max_iterations} "

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast
 
+from .. import pins
 from ..schema import roles
 
 JOIN_TYPES = {
@@ -214,78 +215,13 @@ def zip_with_index(df: DataFrame, order_by: list[str] | None = None, col_name: s
     shuffle, rows never leave the JVM.
 
     The returned frame references a cached intermediate (the pinned
-    partition layout). Every pinned intermediate is registered in a
-    module-level registry; once the indexed result (or anything
-    derived from it) has been materialized, call
-    ``release_pinned_indexes()`` to unpersist them all — batch jobs
-    can ignore this (executor teardown frees the cache), long-running
-    sessions should call it between jobs (r5 verdict task: explicit
-    lifecycle instead of a documented ``clearCache()``).
+    partition layout, taken with ``pins.pin``). Once the indexed result
+    (or anything derived from it) has been materialized, call
+    ``release_pinned_indexes()`` to free it — batch jobs can ignore
+    this (executor teardown frees the cache), long-running sessions
+    should call it between jobs.
     """
     return _zip_with_index_impl(df, order_by, col_name)[0]
-
-
-# Pinned partition-layout intermediates (the .cache() inside
-# _zip_with_index_impl), kept so their lifecycle is explicit. Callers
-# (kfold_assign, align_horizontal, select_indices, shard) hand lazy
-# frames to the user, so the unpersist point is necessarily after the
-# USER materializes — hence a registry + release function rather than
-# an unpersist inside the operator. The registry is BOUNDED: past
-# _PINNED_MAX entries the oldest Python reference is dropped (not
-# unpersisted — its derived result may still be un-materialized), which
-# re-enables Spark's GC-driven ContextCleaner reclamation for it once
-# the caller's own references die; without the bound, a session that
-# never calls release_pinned_indexes() would accumulate pinned caches
-# forever (r6 review).
-_PINNED_INDEX_FRAMES: list[DataFrame] = []
-_PINNED_MAX = 64
-
-
-def pin_intermediate(df: DataFrame) -> DataFrame:
-    """Register an already-cached intermediate in the shared lifecycle
-    registry so ``release_pinned_indexes()`` frees it — the one
-    unpersist point for every operator-internal ``.cache()`` (zip
-    indexes here, shingle/signature tables in operators.dedup)."""
-    _PINNED_INDEX_FRAMES.append(df)
-    if len(_PINNED_INDEX_FRAMES) > _PINNED_MAX:
-        del _PINNED_INDEX_FRAMES[0]  # oldest falls back to GC cleanup
-    return df
-
-
-def release_pinned_indexes() -> int:
-    """Unpersist every operator-internal cached intermediate pinned
-    since the last release (``zip_with_index`` partition layouts, and
-    the dedup detectors' shingle/signature tables via
-    ``pin_intermediate``). Safe to call any time AFTER the derived
-    results have been materialized (collect/write). For plain
-    ``.cache()`` pins, a later re-materialization of a still-lazy
-    derived frame recomputes from source — guaranteed identical only
-    for deterministic sources. For ``localCheckpoint``-backed pins,
-    this ALSO frees the checkpoint's RDD blocks, and a checkpointed
-    RDD has truncated lineage: a consumer materialized after release
-    fails with missing-checkpoint-block errors instead of
-    recomputing — callers must fully materialize every derived frame
-    before releasing. Frames pinned under a session that has since
-    been stopped are dropped uncounted; any other failure raises.
-    Returns the number of frames released.
-    """
-    from pyspark import SparkContext
-
-    from .graph import free_local_checkpoint
-
-    active = SparkContext._active_spark_context
-    n = 0
-    while _PINNED_INDEX_FRAMES:
-        f = _PINNED_INDEX_FRAMES.pop()
-        if active is None or f.sparkSession.sparkContext is not active:
-            continue  # its session was stopped; the blocks went with it
-        f.unpersist()
-        # a localCheckpoint'ed pin (corpus_funnel stage frames) is
-        # persisted outside the CacheManager — unpersist() is a no-op
-        # for it; release the underlying RDD blocks too
-        free_local_checkpoint(f)
-        n += 1
-    return n
 
 
 def _zip_with_index_impl(
@@ -296,9 +232,8 @@ def _zip_with_index_impl(
     tmp = (
         tmp.withColumn("_pid", F.shiftrightunsigned(F.col("_mid"), 33).cast("long"))
         .withColumn("_pos", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
-        .cache()  # pin the partition layout: both passes must see the same ids
     )
-    pin_intermediate(tmp)
+    tmp = pins.pin(tmp)  # pin the partition layout: both passes must see the same ids
     counts = sorted(
         (r["_pid"], r["n"]) for r in tmp.groupBy("_pid").agg(F.count("*").alias("n")).collect()
     )

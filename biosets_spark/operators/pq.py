@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from .. import pins
 from .cluster import SCALE  # 1e-6 grid, shared with kmeans/semantic
 
 
@@ -220,7 +221,7 @@ def pq_train_codebooks(
     if iters > 1:
         # each iteration re-reads the vectors (encode + M-step); pin
         # them once instead of re-scanning the source per pass
-        src = src.persist()
+        src = pins.pin(src)
     try:
         grid = (col(vec_col) if pre_scaled
                 else scaled_vec(col(vec_col)))
@@ -262,7 +263,7 @@ def pq_train_codebooks(
         return cbs
     finally:
         if iters > 1:
-            src.unpersist()
+            pins.unpin(src)
 
 
 def pq_distance_table(
@@ -481,7 +482,7 @@ def ivfpq_build(
     )
     if train_iters > 0:
         # training re-reads the residuals every iteration — pin once
-        resid = resid.persist()
+        resid = pins.pin(resid)
     try:
         cbs = pq_train_codebooks(resid, m=m, n_codes=n_codes,
                                  iters=train_iters, id_col=id_col,
@@ -495,7 +496,7 @@ def ivfpq_build(
         return encoded, cents, cbs
     finally:
         if train_iters > 0:
-            resid.unpersist(blocking=False)
+            pins.unpin(resid)
 
 
 def ivfpq_adc_topk(

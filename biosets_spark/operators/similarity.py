@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from .. import pins
 from .pq import _double_array_lit
 
 from ..functions.vectors import cosine, dot, norm
@@ -441,9 +442,9 @@ def embedding_dup_pairs(
         # materialize before destroying the broadcast the plan reads;
         # destroy in finally so a failed checkpoint can't leak it
         try:
-            out = src.mapInPandas(
-                block, schema="id_a long, id_b long, sim double"
-            ).localCheckpoint(eager=True)
+            out = pins.pin(
+                src.mapInPandas(block, schema="id_a long, id_b long, sim double"),
+                checkpoint=True, eager=True)
         finally:
             b.destroy()
         return out
@@ -555,9 +556,9 @@ def knn_all(
                 yield pd.DataFrame({"qid": out_a, "nid": out_b, "sim": out_s})
 
         try:
-            cand = src.mapInPandas(
-                block, schema="qid long, nid long, sim double"
-            ).localCheckpoint(eager=True)
+            cand = pins.pin(
+                src.mapInPandas(block, schema="qid long, nid long, sim double"),
+                checkpoint=True, eager=True)
         finally:
             b.destroy()
         return (

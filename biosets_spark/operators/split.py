@@ -180,7 +180,7 @@ def kfold(df: DataFrame, k: int, order_by: list[str]) -> list[tuple[DataFrame, D
     fold assignment via ``kfold_assign`` (no single-partition sort).
 
     The fold frame references a cached partition layout; long-running
-    sessions should call ``joins.release_pinned_indexes()`` after
+    sessions should call ``biosets_spark.release_pinned_indexes()`` after
     materializing all folds (see zip_with_index docstring).
     """
     with_fold = kfold_assign(df, k, order_by)

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
-from .. import tables
+from .. import pins, tables
 from . import dsum, q
 
 
@@ -85,7 +85,9 @@ def q_bom_explosion(spark, sf_dir):
     levels = [frontier]
     cur = frontier
     for depth in range(1, 33):
-        nxt = (
+        # truncate lineage per level: without this the plan tree
+        # doubles every iteration (the graph.py precedent)
+        nxt = pins.pin(
             cur.alias("c")
             .join(edges.alias("e"), col("c.node") == col("e.parent"))
             .select(
@@ -93,11 +95,8 @@ def q_bom_explosion(spark, sf_dir):
                 col("e.child").alias("node"),
                 F.lit(depth).alias("depth"),
                 (col("c.ext_qty") * col("e.qty")).alias("ext_qty"),
-            )
-            # truncate lineage per level: without this the plan tree
-            # doubles every iteration (graph.py:42 precedent)
-            .localCheckpoint(eager=True)
-        )
+            ),
+            checkpoint=True, eager=True)
         if nxt.isEmpty():
             break
         levels.append(nxt)

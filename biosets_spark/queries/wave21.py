@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-from .. import tables
+from .. import pins, tables
 from ..operators.dedup import portable_hash60
 from . import pair_expand, q
 
@@ -86,14 +86,14 @@ def q_triangle_count(spark, sf_dir):
     )
     # Three consumers below fan out over this subtree and Catalyst does
     # not unify the aliased branches into a ReusedExchange — truncate
-    # the lineage once. A pin_intermediate(edge.cache()) variant (the
-    # wave49 lever) was A/B'd in r12 and kept OUT here: the triangle
+    # the lineage once. A lazy cache pin (the wave49 lever) was
+    # A/B'd in r12 and kept OUT here: the triangle
     # self-join fans three concurrent leaf stages over the cache, which
     # race to materialize it (cold collect 1.1 -> 4.2 s, two alternating
     # rounds), costing more one-shot than the checkpoint's build-time
     # toRdd pays (~1.1 s); warm reps favored the cache, but the bench
     # adjudicates the one-shot wall.
-    edge = edge.localCheckpoint(eager=False)
+    edge = pins.pin(edge, checkpoint=True)
     deg = (
         edge.select(col("x").alias("v")).unionAll(edge.select(col("y").alias("v")))
         .groupBy("v").agg(F.count("*").alias("d"))
@@ -197,7 +197,7 @@ def q_bloom_audit(spark, sf_dir):
     d = tables.load(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("fp"), (col("doc_id") % 10 == 0).alias("is_test")
     )
-    d = d.localCheckpoint(eager=False)  # four consumers below
+    d = pins.pin(d, checkpoint=True)  # four consumers below
     hashed = d.crossJoin(broadcast(
         spark.range(3).select(col("id").cast("int").alias("i"))
     )).withColumn(

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-from .. import tables
+from .. import pins, tables
 from . import dfloor, q
 
 # Shared SQL prelude: centered 6-dec components of the first K dims.
@@ -274,13 +274,13 @@ def q_pca_power(spark, sf_dir):
     # without the truncation each sweep re-derives the whole prior
     # chain twice — a 2^sweeps subtree blowup (the graph.py
     # per-iteration lever).
-    upper = (
+    upper = pins.pin(
         ints.select("xi")
         .mapInPandas(_partials, schema="i int, j int, p long")
         .groupBy("i", "j")
         .agg((F.sum("p").cast("double") / F.lit(1e12)).alias("c"))
-        .repartition(1)
-    ).localCheckpoint(eager=False)
+        .repartition(1),
+        checkpoint=True)
     cov = upper.unionAll(
         upper.filter(col("i") != col("j")).select(
             col("j").alias("i"), col("i").alias("j"), "c"
@@ -288,15 +288,15 @@ def q_pca_power(spark, sf_dir):
     )
     v = cov.select("i").distinct().select(col("i").alias("pos"), lit(0.125).alias("v"))
     for _ in range(3):
-        u = (
+        u = pins.pin(
             cov.join(broadcast(v.select(col("pos").alias("j"), "v")), "j")
             .groupBy("i")
             .agg(
                 (F.sum(F.floor(col("c") * col("v") * lit(1e12) + lit(0.5))
                        .cast("decimal(38,0)"))
                  .cast("double") / lit(1e12)).alias("u")
-            )
-        ).localCheckpoint(eager=False)
+            ),
+            checkpoint=True)
         linf = u.agg(F.max(F.abs(col("u"))).alias("linf"))
         v = u.crossJoin(broadcast(linf)).select(
             col("i").alias("pos"),

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
-from .. import tables
+from .. import pins, tables
 from ..operators.dedup import portable_hash60
 from . import dfloor, q
 
@@ -159,7 +159,7 @@ def q_survival_km(spark, sf_dir):
         .withColumn("t", F.expr("us DIV 3600000000"))
     )
     risk = conv.groupBy("t").agg(F.count("*").alias("d"))
-    risk = risk.localCheckpoint(eager=False)  # three self-join consumers
+    risk = pins.pin(risk, checkpoint=True)  # three self-join consumers
     r2 = risk.select(col("t").alias("t2"), col("d").alias("d2"))
     tbl = (
         risk.join(broadcast(r2), col("t2") >= col("t"))

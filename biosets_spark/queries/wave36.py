@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-from .. import tables
+from .. import pins, tables
 from . import q
 from .wave12 import _langid_confusion_oracle
 
@@ -140,12 +140,9 @@ def q_cohens_kappa(spark, sf_dir):
     # re-runs the regex-heavy lang_id scan once per branch (measured
     # 3x). localCheckpoint the <=25-cell table so the corpus is
     # scanned once.
-    cells = (
-        T.lang_id(docs)
-        .groupBy("lang", "lang_pred")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
-    )
+    cells = pins.pin(
+        T.lang_id(docs).groupBy("lang", "lang_pred").agg(F.count("*").alias("n")),
+        checkpoint=True, eager=True)
     rm = cells.groupBy(col("lang").alias("k")).agg(F.sum("n").alias("nr"))
     cm = cells.groupBy(col("lang_pred").alias("k")).agg(F.sum("n").alias("nc"))
     pe = (

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
-from .. import tables
+from .. import pins, tables
 from . import dfloor, pair_expand, q
 
 _EDGE_SQL = """
@@ -65,7 +65,7 @@ def _edges(spark, sf_dir):
     # the checkpoint); powerlaw one-shot ckpt 1.7-3.7 vs cache 3.4-7.9.
     # The cache's apparent warm-rep win was an artifact of reps reading
     # the already-filled cache — the bench regime pays cold, once.
-    return edge.localCheckpoint(eager=False)
+    return pins.pin(edge, checkpoint=True)
 
 
 @q(

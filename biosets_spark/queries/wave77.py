@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
-from .. import tables
+from .. import pins, tables
 from . import dfloor, q
 
 _HALVES_SQL = """
@@ -196,7 +196,7 @@ def q_kendall_rankings(spark, sf_dir):
     # cold cache materialization — the wave49 lesson). Safe here
     # because the frame never escapes the query: no post-release
     # re-materialization can hit the truncated lineage.
-    both = both.localCheckpoint(eager=False)
+    both = pins.pin(both, checkpoint=True)
     pa, pb = both.alias("pa"), both.alias("pb")
     conc = (
         F.when(

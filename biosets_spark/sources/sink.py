@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import pins
 from ..schema import roles
 
 STATE_FILE = "_biosets_state.json"
@@ -207,9 +208,8 @@ def upsert_parquet(
     # second full-table scan
     from pyspark.sql import functions as F
 
-    upd_keys = updates.select(*keys).distinct().cache()
-    base_key_counts = base.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("_n")).cache()
+    upd_keys = pins.pin(updates.select(*keys).distinct())
+    base_key_counts = pins.pin(base.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n")))
     row = base_key_counts.agg(
         F.coalesce(F.sum("_n"), F.lit(0)).alias("rows"),
         F.count(F.lit(1)).alias("nkeys")).collect()[0]
@@ -224,8 +224,8 @@ def upsert_parquet(
     tmp = path.rstrip("/") + "__upsert_tmp__"
     merged.write.mode("overwrite").parquet(tmp)
     n_total = spark.read.parquet(tmp).count()
-    upd_keys.unpersist()
-    base_key_counts.unpersist()
+    pins.unpin(upd_keys)
+    pins.unpin(base_key_counts)
     old = path.rstrip("/") + "__upsert_old__"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)

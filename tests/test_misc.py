@@ -1093,7 +1093,7 @@ def test_bm25_empty_corpus(spark):
 
 def test_release_pinned_frees_dedup_caches(spark, docs_corpus=None):
     from biosets_spark.operators import dedup as D
-    from biosets_spark.operators.joins import release_pinned_indexes
+    from biosets_spark import release_pinned_indexes
 
     release_pinned_indexes()  # start clean
     df = spark.createDataFrame(

@@ -262,6 +262,31 @@ def test_no_explode_of_higher_order_function():
     )
 
 
+def test_only_pins_module_pins_or_frees():
+    """Design rule: biosets_spark/pins.py is the one owner of pinned
+    intermediates, so that every cache and checkpoint is registered and
+    release_pinned_indexes() frees all of them. No other source file may
+    call cache, persist, localCheckpoint or unpersist; prose mentions in
+    docstrings and comments are not calls and do not count."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "biosets_spark")
+    banned = {"cache", "persist", "localCheckpoint", "unpersist"}
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, root)
+        if rel == "pins.py":
+            continue
+        for node in ast.walk(ast.parse(open(path).read())):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in banned):
+                offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
+    assert not offenders, (
+        f"pin outside biosets_spark/pins.py: {offenders}; use pins.pin / pins.unpin")
+
+
 def test_driver_checked_tail_ordered_oldest_green_first():
     """Post-drain re-verification machinery (r6 verdict task #2, built
     in r7): the checked tail of the driver ordering is sorted by

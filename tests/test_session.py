@@ -12,8 +12,8 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql import functions as F
 
+from biosets_spark import pins
 from biosets_spark.operators import joins
-from biosets_spark.operators.graph import free_local_checkpoint
 from biosets_spark.session import apply_session_conf
 
 CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -61,38 +61,45 @@ def test_zip_with_index_stays_contiguous_over_coalesced_range_partitions(spark):
         rows = out.collect()
     finally:
         spark.conf.set(key, prev)
-        joins.release_pinned_indexes()
+        pins.release()
     assert 1 < n_parts < int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert sorted((r.idx, r.k) for r in rows) == [(i, i) for i in range(n)]
 
 
-def test_free_local_checkpoint_frees_checkpoints_only(spark):
+def test_unpin_frees_either_kind_of_pin(spark):
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     plain = spark.range(10)
     before = set(persistent().keySet())
-    free_local_checkpoint(plain)  # no-op on a plan that is not a checkpoint
+    pins.unpin(plain)  # no-op on a frame that is not pinned
     assert set(persistent().keySet()) == before
-    cp = spark.range(10).localCheckpoint()
+    cp = pins.pin(spark.range(10), checkpoint=True, eager=True)
     rdd_id = cp._jdf.queryExecution().analyzed().rdd().id()
     assert rdd_id in set(persistent().keySet())
-    free_local_checkpoint(cp)
+    pins.unpin(cp)
     assert rdd_id not in set(persistent().keySet())
+    cached = pins.pin(spark.range(10), eager=True)
+    assert cached.storageLevel.useMemory
+    assert set(persistent().keySet()) - before
+    pins.unpin(cached)
+    assert not cached.storageLevel.useMemory
+    assert set(persistent().keySet()) - before == set()
+    assert all(p is not cp and p is not cached for p in pins._PINS)
 
 
-def test_release_pinned_indexes_skips_stopped_sessions_and_raises_otherwise(spark):
-    joins.release_pinned_indexes()
+def test_release_skips_stopped_sessions_and_raises_otherwise(spark):
+    pins.release()
     stopped = SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=object()))
-    joins._PINNED_INDEX_FRAMES.append(stopped)
-    assert joins.release_pinned_indexes() == 0
-    assert joins._PINNED_INDEX_FRAMES == []
+    pins._PINS.append(stopped)
+    assert pins.release() == 0
+    assert pins._PINS == []
 
     def fail():
         raise RuntimeError("unpersist failed")
 
-    broken = SimpleNamespace(sparkSession=spark, unpersist=fail)
-    joins._PINNED_INDEX_FRAMES.append(broken)
+    broken = SimpleNamespace(sparkSession=spark, is_cached=True, unpersist=fail)
+    pins._PINS.append(broken)
     with pytest.raises(RuntimeError, match="unpersist failed"):
-        joins.release_pinned_indexes()
+        pins.release()
 
 
 FOREIGN_CWD_SCRIPT = textwrap.dedent("""

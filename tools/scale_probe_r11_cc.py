@@ -45,7 +45,8 @@ def chain_plus_cliques(spark, chain_n, clique_edges):
 def main():
     n_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 
-    from biosets_spark.operators.graph import connected_components, free_local_checkpoint
+    from biosets_spark import release_pinned_indexes
+    from biosets_spark.operators.graph import connected_components
     from biosets_spark.session import get_spark
     spark = get_spark("scale-probe-r11-cc")
     spark.sparkContext.setLogLevel("ERROR")
@@ -59,7 +60,7 @@ def main():
         n_comp = comp.select("component").distinct().count()
         print(f"stars {algo:5}: {time.monotonic()-t0:6.1f}s "
               f"components={n_comp}", flush=True)
-        free_local_checkpoint(comp)
+        release_pinned_indexes()
     g.unpersist()
 
     g2 = chain_plus_cliques(spark, 200_000, n_edges - 200_000).cache()
@@ -72,7 +73,7 @@ def main():
     n_comp = comp.select("component").distinct().count()
     print(f"chain+cliques star: {time.monotonic()-t0:6.1f}s "
           f"components={n_comp} chain_mislabels={chain_bad}", flush=True)
-    free_local_checkpoint(comp)
+    release_pinned_indexes()
     try:
         connected_components(g2, small_graph_threshold=0,
                              algorithm="label", max_iterations=30)

@@ -49,7 +49,7 @@ def main():
     sf1_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
 
     from biosets_spark import queries as _q
-    from biosets_spark.operators.joins import release_pinned_indexes
+    from biosets_spark import release_pinned_indexes
     from biosets_spark.session import get_spark
 
     spark = get_spark("scale-probe-r11-sf1")

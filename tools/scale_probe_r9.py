@@ -114,7 +114,7 @@ def main():
     }
     print(f"{'operator':22} {'wall_s':>8} {'pairs':>9} {'planted%':>9} "
           f"{'shufW_MB':>9} {'shufR_MB':>9} {'shufW/text':>10}")
-    from biosets_spark.operators.joins import release_pinned_indexes
+    from biosets_spark import release_pinned_indexes
 
     for name, fn in ops.items():
         best, pairs, sw, sr = float("inf"), None, None, None
