@@ -275,15 +275,11 @@ class BioDataset:
     # ---- casts / structure (P9-P10) ----------------------------------
     def cast_column(self, col: str, dtype: T.DataType | str,
                     feature_type: str | None = None) -> "BioDataset":
-        meta = dict(self.df.schema[col].metadata or {})
-        if feature_type:
-            meta[roles.FEATURE_TYPE_KEY] = feature_type
-        out = self.df.withColumn(col, roles.qcol(col).cast(dtype))
-        out = out.select(*[
-            roles.qcol(c).alias(c, metadata=meta) if c == col else roles.qcol(c)
-            for c in out.columns
-        ])
-        return self._wrap(out)
+        # a cast drops the column's metadata, so it is re-attached in
+        # the same projection
+        updates = {roles.FEATURE_TYPE_KEY: feature_type} if feature_type else {}
+        return self._wrap(roles.with_roles(
+            self.df, {col: updates}, exprs={col: roles.qcol(col).cast(dtype)}))
 
     def flatten(self) -> "BioDataset":
         """P9: recursively explode struct columns into ``parent.child``
@@ -476,7 +472,7 @@ class BioDataset:
         cache = FingerprintCache(cache_dir)
         fp = plan_fingerprint(self.df)
         snap = roles.roles_snapshot(self.df)
-        out = roles.apply_roles(cache.materialize(self.df), snap)
+        out = roles.apply_roles(cache.materialize(self.df, fp=fp), snap)
         return BioDataset(out, split=self.split, fingerprint=fp)
 
     def profile(self) -> dict:

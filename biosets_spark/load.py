@@ -23,6 +23,7 @@ dictionary and the (small) feature-metadata table.
 
 from __future__ import annotations
 
+import functools
 import re
 import warnings
 
@@ -331,10 +332,14 @@ def load_dataset(
             t_col = target_column or _match_col(df.columns, TARGET_PATTERNS)
 
         # -- tag roles ---------------------------------------------------
+        # every column's tag is collected into one {column: updates}
+        # dict and applied in ONE projection below (roles.with_roles)
+        fields = df.schema.fields
+        tags: dict[str, dict] = {}
         if s_col and s_col in df.columns:
-            df = roles.with_role(df, s_col, roles.ROLE_SAMPLE)
+            tags[s_col] = roles.role_updates(roles.ROLE_SAMPLE)
         if b_col and b_col in df.columns:
-            df = roles.with_role(df, b_col, roles.ROLE_BATCH)
+            tags[b_col] = roles.role_updates(roles.ROLE_BATCH)
         for c in df.columns:
             if c in (s_col, b_col, t_col):
                 continue
@@ -343,7 +348,7 @@ def load_dataset(
             # they must not land in the feature matrix), plus anything
             # matching the metadata name patterns
             if c not in pre_enrich_cols or _match_col([c], METADATA_PATTERNS):
-                df = roles.with_role(df, c, roles.ROLE_METADATA)
+                tags[c] = roles.role_updates(roles.ROLE_METADATA)
 
         # J5: set-containment feature-key detection (biodata.py:681-686)
         # — no name-pattern key matched, so pick the first feature-
@@ -367,22 +372,24 @@ def load_dataset(
             feature_meta, feature_names_ordered = _feature_meta_from_rows(fm_rows, fm_key)
 
         # feature columns: everything untagged; attach per-column metadata (J4)
-        for f in df.schema.fields:
-            if (f.metadata or {}).get(roles.ROLE_KEY) is None and f.name != t_col:
-                meta_for = (feature_meta or {}).get(f.name)
-                df = roles.with_role(
-                    df, f.name, roles.ROLE_FEATURE,
-                    feature_type=feature_type or "value_with_metadata",
-                    meta=meta_for,
-                )
+        feature_tag = functools.partial(
+            roles.role_updates, roles.ROLE_FEATURE,
+            feature_type or "value_with_metadata")
+        for f in fields:
+            if (f.name not in tags and f.name != t_col
+                    and (f.metadata or {}).get(roles.ROLE_KEY) is None):
+                tags[f.name] = feature_tag(meta=(feature_meta or {}).get(f.name))
         if feature_meta:
             missing = set(feature_meta) - set(df.columns)
             if missing:
                 warnings.warn(f"feature metadata rows with no matching data column: {sorted(missing)}")
+        has_target = bool(t_col) and t_col in df.columns
+        if has_target:
+            tags[t_col] = roles.role_updates(roles.ROLE_TARGET)
+        df = roles.with_roles(df, tags)
 
         # -- 5. label encoding (A1-A3) ----------------------------------
-        if t_col and t_col in df.columns:
-            df = roles.with_role(df, t_col, roles.ROLE_TARGET)
+        if has_target:
             if _labels.task_type(df, t_col) == "classification" or positive_labels or negative_labels:
                 if labels is None and not (positive_labels or negative_labels) and multi_shard:
                     # Reference errors on multi-file label inference
@@ -406,18 +413,17 @@ def load_dataset(
         # matrix breaks downstream assembly silently
         if add_missing_columns and feature_meta:
             fill_type = roles.FEATURE_TYPES.get(feature_type or "")
-            for name in feature_names_ordered:
-                if name not in df.columns:
-                    if fill_type is not None:
-                        fill = (F.lit(0).cast(fill_type) if zero_as_missing
-                                else F.lit(None).cast(fill_type))
-                    else:  # no registered dtype: legacy untyped fills
-                        fill = (F.lit(0) if zero_as_missing
-                                else F.lit(None).cast(T.StringType()))
-                    df = df.withColumn(name, fill)
-                    df = roles.with_role(df, name, roles.ROLE_FEATURE,
-                                         feature_type=feature_type or "value_with_metadata",
-                                         meta=(feature_meta or {}).get(name))
+            if fill_type is not None:
+                fill = (F.lit(0).cast(fill_type) if zero_as_missing
+                        else F.lit(None).cast(fill_type))
+            else:  # no registered dtype: legacy untyped fills
+                fill = (F.lit(0) if zero_as_missing
+                        else F.lit(None).cast(T.StringType()))
+            present = set(df.columns)
+            fills = [fill.alias(name, metadata=feature_tag(meta=feature_meta.get(name)))
+                     for name in dict.fromkeys(feature_names_ordered) if name not in present]
+            if fills:
+                df = df.select("*", *fills)
 
         out[split_name] = BioDataset(df, split=split_name)
 

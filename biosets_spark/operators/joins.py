@@ -181,9 +181,9 @@ def join_sample_metadata(
     snap = {**roles.roles_snapshot(dsel), **roles.roles_snapshot(msel)}
     out = dsel.join(broadcast(msel), on=sample_col, how="left")
     data_cols = [c for c in dsel.columns if c != sample_col]
-    out = out.select(sample_col, *meta_cols, *data_cols)
-    out = roles.apply_roles(out, snap)
-    return roles.with_role(out, sample_col, roles.ROLE_SAMPLE)
+    out = out.select(*(roles.qcol(c) for c in [sample_col, *meta_cols, *data_cols]))
+    snap[sample_col] = {**snap.get(sample_col, {}), **roles.role_updates(roles.ROLE_SAMPLE)}
+    return roles.with_roles(out, snap)
 
 
 def zip_with_index_counted(

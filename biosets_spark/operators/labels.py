@@ -83,26 +83,25 @@ def encode_labels(
     The dictionary is pinned into the output column's StructField
     metadata so downstream ``decode`` needs no recomputation.
     """
-    if output_col in df.columns:
+    cols = df.columns
+    if output_col in cols:
         output_col = output_col + "_"  # rename-on-collision, biodata.py:634-638
+    # the tagged column is appended in one projection; a column already
+    # holding the renamed name is replaced, as withColumn would
+    base = df.drop(output_col) if output_col in cols else df
     if positive_labels or negative_labels:
         expr = binary_encode_expr(F.col(target_col), positive_labels, negative_labels)
-        out = df.withColumn(output_col, expr)
-        out = roles.with_role(
-            out,
-            output_col,
+        tag = roles.role_updates(
             roles.ROLE_TARGET,
             feature_type="bin_class_label",
             positive_labels=positive_labels or [],
             negative_labels=negative_labels or [],
         )
-        return out, [0, 1]
+        return base.select("*", expr.alias(output_col, metadata=tag)), [0, 1]
     if labels is None:
         labels = label_dictionary(df, target_col)
-    out = df.withColumn(output_col, encode_expr(F.col(target_col), labels))
-    out = roles.with_role(
-        out, output_col, roles.ROLE_TARGET, feature_type="class_label", labels=labels
-    )
+    tag = roles.role_updates(roles.ROLE_TARGET, feature_type="class_label", labels=labels)
+    out = base.select("*", encode_expr(F.col(target_col), labels).alias(output_col, metadata=tag))
     return out, labels
 
 

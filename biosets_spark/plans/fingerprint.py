@@ -28,19 +28,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 def _input_files_snapshot(df: DataFrame) -> list[tuple[str, int, int]]:
     out = []
-    try:
-        for f in df.inputFiles():
-            p = f.replace("file:", "")
-            try:
-                st = os.stat(p)
-                # nanosecond mtime: a same-size rewrite within the same
-                # second must change the fingerprint (same bug class as
-                # tables.py's snapshot, fixed there with st_mtime_ns)
-                out.append((f, st.st_size, st.st_mtime_ns))
-            except OSError:
-                out.append((f, -1, -1))
-    except Exception:
-        pass
+    for f in df.inputFiles():
+        p = f.replace("file:", "")
+        try:
+            st = os.stat(p)
+            # nanosecond mtime: a same-size rewrite within the same
+            # second must change the fingerprint (same bug class as
+            # tables.py's snapshot, fixed there with st_mtime_ns)
+            out.append((f, st.st_size, st.st_mtime_ns))
+        except OSError:
+            out.append((f, -1, -1))
     return sorted(out)
 
 
@@ -65,22 +62,15 @@ def plan_fingerprint(df: DataFrame, params: dict | None = None) -> str:
     # plans/audit.executed_plan_string.
     spark = df.sparkSession
     key = "spark.sql.debug.maxToStringFields"
-    saved = None
-    try:
-        saved = spark.conf.get(key, None)
-        spark.conf.set(key, "100000")
-    except Exception:
-        pass
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "100000")
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     finally:
-        try:
-            if saved is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, saved)
-        except Exception:
-            pass
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
     canon = _EPHEMERAL.sub("#", plan)
     payload = json.dumps(
         {"plan": canon, "inputs": _input_files_snapshot(df), "params": params or {}},
@@ -141,10 +131,13 @@ class FingerprintCache:
 
         return _table_commit_lock(self.cache_dir, lock_name="_fpcache")
 
-    def materialize(self, df: DataFrame, params: dict | None = None) -> DataFrame:
-        """Return a cached-or-computed materialization of ``df``."""
+    def materialize(self, df: DataFrame, params: dict | None = None, *,
+                    fp: str | None = None) -> DataFrame:
+        """Return a cached-or-computed materialization of ``df``.
+        ``fp`` is ``plan_fingerprint(df, params)`` when the caller has
+        already computed it."""
         spark: SparkSession = df.sparkSession
-        fp = plan_fingerprint(df, params)
+        fp = fp or plan_fingerprint(df, params)
         p = self.path_for(fp)
         with self._lock():
             if self.has(fp):

@@ -24,7 +24,7 @@ Keys:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -92,18 +92,64 @@ def qcol(name: str):
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def _set_field_metadata(df: DataFrame, col: str, updates: dict) -> DataFrame:
-    field = df.schema[col]
-    meta = dict(field.metadata or {})
-    for k, v in updates.items():
-        if v is None:
-            meta.pop(k, None)
-        else:
-            meta[k] = v
-    cols = [
-        qcol(f.name).alias(f.name, metadata=meta) if f.name == col else qcol(f.name)
-        for f in df.schema.fields
-    ]
+def role_updates(
+    role: str,
+    feature_type: str | None = None,
+    meta: dict | None = None,
+    labels: list | None = None,
+    positive_labels: list | None = None,
+    negative_labels: list | None = None,
+) -> dict:
+    """The ``bio.*`` metadata entries of one role tag; arguments left
+    as None add no key."""
+    updates: dict = {ROLE_KEY: role}
+    if feature_type is not None:
+        updates[FEATURE_TYPE_KEY] = feature_type
+    if meta is not None:
+        updates[META_KEY] = meta
+    if labels is not None:
+        updates[LABELS_KEY] = list(labels)
+    if positive_labels is not None:
+        updates[POS_LABELS_KEY] = list(positive_labels)
+    if negative_labels is not None:
+        updates[NEG_LABELS_KEY] = list(negative_labels)
+    return updates
+
+
+def with_roles(
+    df: DataFrame,
+    updates: dict[str, dict],
+    exprs: dict[str, Column] | None = None,
+) -> DataFrame:
+    """Merge per-column metadata ``updates`` ({column: {key: value}})
+    into the existing StructField metadata in ONE projection; a None
+    value removes its key. ``exprs`` optionally replaces a tagged
+    column's values in the same projection (``cast_column``).
+
+    Tagging column by column would stack one full-width Project per
+    column: width² column objects on the driver, and a plan whose
+    string rendering (``plan_fingerprint``) grows with it.
+    """
+    if not updates:
+        return df
+    fields = df.schema.fields
+    unknown = set(updates) - {f.name for f in fields}
+    if unknown:
+        raise KeyError(f"with_roles: no such columns {sorted(unknown)}")
+    exprs = exprs or {}
+    cols = []
+    for f in fields:
+        if f.name not in updates:
+            cols.append(qcol(f.name))
+            continue
+        meta = dict(f.metadata or {})
+        for k, v in updates[f.name].items():
+            if v is None:
+                meta.pop(k, None)
+            else:
+                meta[k] = v
+        expr = exprs[f.name] if f.name in exprs else qcol(f.name)
+        cols.append(expr.alias(f.name, metadata=meta))
     return df.select(*cols)
 
 
@@ -119,18 +165,8 @@ def with_role(
 ) -> DataFrame:
     """Tag a column with a semantic role (and optional feature type /
     label dictionary), preserving all other column metadata."""
-    updates: dict = {ROLE_KEY: role}
-    if feature_type is not None:
-        updates[FEATURE_TYPE_KEY] = feature_type
-    if meta is not None:
-        updates[META_KEY] = meta
-    if labels is not None:
-        updates[LABELS_KEY] = list(labels)
-    if positive_labels is not None:
-        updates[POS_LABELS_KEY] = list(positive_labels)
-    if negative_labels is not None:
-        updates[NEG_LABELS_KEY] = list(negative_labels)
-    return _set_field_metadata(df, col, updates)
+    return with_roles(df, {col: role_updates(
+        role, feature_type, meta, labels, positive_labels, negative_labels)})
 
 
 def get_role(df: DataFrame, col: str) -> str | None:
@@ -166,12 +202,7 @@ def roles_snapshot(df: DataFrame) -> dict[str, dict]:
 
 
 def apply_roles(df: DataFrame, snapshot: dict[str, dict]) -> DataFrame:
-    cols = []
-    for f in df.schema.fields:
-        if f.name in snapshot:
-            meta = dict(f.metadata or {})
-            meta.update(snapshot[f.name])
-            cols.append(F.col(f.name).alias(f.name, metadata=meta))
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
+    """Re-apply a ``roles_snapshot``; columns absent from ``df`` are
+    skipped."""
+    names = set(df.columns)
+    return with_roles(df, {c: m for c, m in snapshot.items() if c in names})

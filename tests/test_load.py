@@ -451,3 +451,70 @@ def test_streaming_dir_includes_subdirs_and_skips_preamble_opts(spark, tmp_path)
 
     with pytest.raises(ValueError, match="no streaming translation"):
         load_dataset(path=str(tmp_path), streaming=True, skip_rows=1, spark=spark)
+
+
+def _project_nodes(plan) -> int:
+    children = plan.children()
+    return int(plan.nodeName() == "Project") + sum(
+        _project_nodes(children.apply(i)) for i in range(children.size()))
+
+
+def _write_wide_cohort(d, width: int) -> list[str]:
+    """Six samples x ``width`` features, one of them dotted, plus a
+    feature declared in the feature metadata but absent from the data."""
+    features = ["OTU.1"] + [f"gene_{j}" for j in range(width - 1)]
+    d.mkdir()
+    (d / "counts.csv").write_text("".join(
+        ",".join(row) + "\n" for row in
+        [["sample", *features]]
+        + [[f"s{i}", *(str(i * j) for j in range(width))] for i in range(6)]))
+    (d / "sample_metadata.csv").write_text("sample,batch,age,target\n" + "".join(
+        f"s{i},b{i % 2},{30 + i},{'ab'[i % 2]}\n" for i in range(6)))
+    (d / "feature_metadata.csv").write_text("feature,symbol\n" + "".join(
+        f"{f},SYM_{f}\n" for f in [*features, "absent_gene"]))
+    return features
+
+
+def test_role_tagging_projection_count_is_width_invariant(spark, tmp_path):
+    """Every column's role is applied in one projection, so the analyzed
+    plan has as many Project nodes at width 64 as at width 4 (tagging
+    column by column stacked one Project per column). Roles, feature
+    types, per-column feature metadata (J4), the label dictionary and
+    the add_missing_columns fill all keep their tags, and the tags are
+    in the Parquet files of a materialized cache entry, not only
+    re-applied on read."""
+    import glob
+    import warnings as W
+
+    projects = {}
+    for width in (4, 64):
+        d = tmp_path / f"w{width}"
+        features = _write_wide_cohort(d, width)
+        with W.catch_warnings():
+            W.simplefilter("ignore")
+            ds = load_dataset(path=str(d), experiment_type="otu",
+                              add_missing_columns=True, spark=spark)
+        projects[width] = _project_nodes(ds.df._jdf.queryExecution().analyzed())
+
+        df = ds.df
+        assert roles.columns_with_role(df, roles.ROLE_SAMPLE) == ["sample"]
+        assert roles.columns_with_role(df, roles.ROLE_BATCH) == ["batch"]
+        assert roles.columns_with_role(df, roles.ROLE_METADATA) == ["age"]
+        assert roles.columns_with_role(df, roles.ROLE_TARGET) == ["target", "encoded_labels"]
+        assert roles.columns_with_role(df, roles.ROLE_FEATURE) == [*features, "absent_gene"]
+        for f in [*features, "absent_gene"]:
+            meta = df.schema[f].metadata
+            assert meta[roles.FEATURE_TYPE_KEY] == "abundance"
+            assert meta[roles.META_KEY] == {"symbol": f"SYM_{f}"}
+        assert df.schema["absent_gene"].dataType == roles.FEATURE_TYPES["abundance"]
+        assert roles.get_labels(df, "encoded_labels") == ["a", "b"]
+        assert df.schema["encoded_labels"].metadata[roles.FEATURE_TYPE_KEY] == "class_label"
+        rows = {r["sample"]: r for r in ds.head(6)}
+        assert rows["s3"]["OTU.1"] == 0 and rows["s3"]["gene_0"] == 3
+        assert rows["s3"]["encoded_labels"] == 1 and rows["s3"]["absent_gene"] is None
+
+        cache_dir = tmp_path / f"cache{width}"
+        ds.materialize(str(cache_dir))
+        (entry,) = glob.glob(str(cache_dir / "cache-*.parquet"))
+        assert roles.roles_snapshot(spark.read.parquet(entry)) == roles.roles_snapshot(df)
+    assert projects[4] == projects[64]

@@ -287,6 +287,38 @@ def test_only_pins_module_pins_or_frees():
         f"pin outside biosets_spark/pins.py: {offenders}; use pins.pin / pins.unpin")
 
 
+def test_no_role_tagging_inside_loops():
+    """Design rule: a frame's roles are applied in one projection
+    (roles.with_roles). with_role and apply_roles each rebuild the whole
+    frame, so calling them inside a for/while body or a comprehension
+    stacks one full-width Project per column: driver time and plan size
+    quadratic in the frame's width."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "biosets_spark")
+    banned = {"with_role", "apply_roles"}
+    loops = (ast.For, ast.AsyncFor, ast.While, ast.ListComp, ast.SetComp,
+             ast.DictComp, ast.GeneratorExp)
+    offenders = set()
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, root)
+        for loop in ast.walk(ast.parse(open(path).read())):
+            if not isinstance(loop, loops):
+                continue
+            for node in ast.walk(loop):
+                if not isinstance(node, ast.Call):
+                    continue
+                func = node.func
+                name = getattr(func, "attr", None) or getattr(func, "id", None)
+                if name in banned:
+                    offenders.add(f"{rel}:{node.lineno} {name}(")
+    assert not offenders, (
+        f"role tagging inside a loop: {sorted(offenders)}; collect a "
+        "{column: updates} dict and call roles.with_roles once")
+
+
 def test_driver_checked_tail_ordered_oldest_green_first():
     """Post-drain re-verification machinery (r6 verdict task #2, built
     in r7): the checked tail of the driver ordering is sorted by

@@ -89,3 +89,26 @@ def test_roles_snapshot_reapply(spark):
     stripped = df.select("sample", "f1")  # metadata survives select; simulate loss via rebuild
     rebuilt = roles.apply_roles(stripped, snap)
     assert roles.get_role(rebuilt, "sample") == roles.ROLE_SAMPLE
+
+
+def test_with_roles_merges_in_one_projection(spark):
+    """with_roles merges each column's updates into its existing
+    metadata (a None value removes the key), leaves untagged columns
+    alone, handles dotted names, and rejects unknown columns."""
+    import pytest
+
+    df = spark.createDataFrame([("s1", 1, 2)], "sample string, `OTU.1` int, other int")
+    df = roles.with_role(df, "OTU.1", roles.ROLE_FEATURE, feature_type="abundance",
+                         meta={"unit": "count"})
+    out = roles.with_roles(df, {
+        "sample": roles.role_updates(roles.ROLE_SAMPLE),
+        "OTU.1": {roles.FEATURE_TYPE_KEY: "read_count", roles.META_KEY: None},
+    })
+    assert out.schema["sample"].metadata == {roles.ROLE_KEY: roles.ROLE_SAMPLE}
+    assert out.schema["OTU.1"].metadata == {
+        roles.ROLE_KEY: roles.ROLE_FEATURE, roles.FEATURE_TYPE_KEY: "read_count"}
+    assert out.schema["other"].metadata == {}
+    assert out.collect()[0]["OTU.1"] == 1
+    assert roles.with_roles(df, {}) is df
+    with pytest.raises(KeyError, match="missing"):
+        roles.with_roles(df, {"missing": roles.role_updates(roles.ROLE_BATCH)})
