@@ -469,10 +469,8 @@ class BioDataset:
         the parquet materialization instead of recomputing."""
         from .plans.fingerprint import FingerprintCache, plan_fingerprint
 
-        cache = FingerprintCache(cache_dir)
         fp = plan_fingerprint(self.df)
-        snap = roles.roles_snapshot(self.df)
-        out = roles.apply_roles(cache.materialize(self.df, fp=fp), snap)
+        out = FingerprintCache(cache_dir).materialize(self.df, fp=fp)
         return BioDataset(out, split=self.split, fingerprint=fp)
 
     def profile(self) -> dict:

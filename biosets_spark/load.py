@@ -7,7 +7,10 @@ biodata.py:1037-1198 physical pipeline):
 1. driver-side planning: resolve data/metadata files (glob
    conventions), infer splits from filenames;
 2. per split: scan data shards (extension dispatch, schema promotion
-   across shards), scan+union sample metadata;
+   across shards), scan+union sample metadata; files unchanged since
+   their last read in this session reuse the relation resolved then
+   (sources/relations.py), so a reload submits no header, inference
+   or footer job;
 3. infer column roles by name patterns (biodata.py:596-705,
    1381-1604);
 4. enrich: left-join sample metadata on the sample column (J1) or
@@ -18,7 +21,8 @@ biodata.py:1037-1198 physical pipeline):
 
 All heavy lifting is a Catalyst plan: scan -> broadcast join ->
 withColumn(map-lookup). The only collected data is the label
-dictionary and the (small) feature-metadata table.
+dictionary and the (small) feature-metadata table; with the sources
+resolved, those two collects are a reload's only jobs.
 """
 
 from __future__ import annotations

@@ -7,10 +7,11 @@ over dill-serialized transform args; cache file reuse in
 arrow_dataset.py).
 
 Spark re-expression: fingerprint = sha256 over (canonicalized logical
-plan string + input file listing (path, size, mtime) + params). A hit
-short-circuits the whole computation with a Parquet scan of the cached
-result; a miss computes, writes Parquet, then returns the scan of what
-was written (so downstream reuse is also IO-pruned).
+plan string + schema with field metadata + input file listing (path,
+size, mtime) + params). A hit short-circuits the whole computation with
+a Parquet scan of the cached result; a miss computes, writes Parquet,
+then returns the scan of what was written (so downstream reuse is also
+IO-pruned). Both scans are given the schema, so neither reads a footer.
 
 Driver-side library, not a Catalyst rule — mirrors the reference's
 position of caching outside the execution engine.
@@ -72,8 +73,13 @@ def plan_fingerprint(df: DataFrame, params: dict | None = None) -> str:
         else:
             spark.conf.set(key, saved)
     canon = _EPHEMERAL.sub("#", plan)
+    # the schema (types and field metadata) is part of the computation:
+    # the plan string renders neither a source's column types nor
+    # StructField metadata, so two loads of one CSV, with and without
+    # type inference, rendered identically and shared an entry
     payload = json.dumps(
-        {"plan": canon, "inputs": _input_files_snapshot(df), "params": params or {}},
+        {"plan": canon, "schema": df.schema.json(),
+         "inputs": _input_files_snapshot(df), "params": params or {}},
         sort_keys=True,
     )
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
@@ -133,9 +139,10 @@ class FingerprintCache:
 
     def materialize(self, df: DataFrame, params: dict | None = None, *,
                     fp: str | None = None) -> DataFrame:
-        """Return a cached-or-computed materialization of ``df``.
-        ``fp`` is ``plan_fingerprint(df, params)`` when the caller has
-        already computed it."""
+        """Return a cached-or-computed materialization of ``df``, a
+        Parquet scan with ``df.schema`` (every field nullable, as any
+        file scan). ``fp`` is ``plan_fingerprint(df, params)`` when the
+        caller has already computed it."""
         spark: SparkSession = df.sparkSession
         fp = fp or plan_fingerprint(df, params)
         p = self.path_for(fp)
@@ -149,7 +156,10 @@ class FingerprintCache:
                 # never evict the entry being returned, even if it
                 # alone exceeds the size bound
                 self._evict_locked(protect=p)
-        return spark.read.parquet(p)
+        # read back with the schema the entry was written with (the
+        # fingerprint covers it): no footer job, and the columns keep
+        # df's role metadata and types
+        return spark.read.schema(df.schema).parquet(p)
 
     def _entries(self) -> list[tuple[str, float, int]]:
         """(path, mtime, bytes) per cache entry, oldest first."""

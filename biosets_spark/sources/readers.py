@@ -10,7 +10,8 @@ partitioned, predicate-pushdown-capable, schema-merging. The 50k-row
 batching of the reference (csv.py:27) is subsumed by Spark's partition
 and row-group streaming. Arrow IPC files are read via pyarrow on the
 driver and parallelized (Arrow is an interchange format here; the
-at-scale storage format is Parquet).
+at-scale storage format is Parquet). ``read_files`` resolves each
+unchanged local input once per session (sources/relations.py).
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from . import relations
 
 TEXT_EXTS = {".csv", ".tsv", ".txt"}
 COMPRESSION_EXTS = {".gz", ".bz2", ".zst", ".zstd", ".lz4", ".deflate"}
@@ -316,6 +319,38 @@ def read_sql(spark: SparkSession, table_or_query: str, url: str, **options) -> D
     return reader.load()
 
 
+# formats Spark resolves itself, memoized by read_files. arrow and npz
+# reads, and the pure-Python avro fallback, hold driver-side data.
+_MEMO_FORMATS = frozenset({"csv", "tsv", "json", "parquet", "orc"})
+
+# session confs that schema resolution reads: CSV/JSON timestamp
+# inference, header and column-name case handling, Parquet's logical
+# type mapping, and partition-column typing of directory inputs
+_SCHEMA_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.timestampType",
+    "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+def _option_key(value):
+    """A reader option as a hashable memo-key part; a schema keys by
+    its JSON."""
+    if isinstance(value, T.DataType):
+        return value.json()
+    if isinstance(value, dict):
+        return tuple(sorted((k, _option_key(v)) for k, v in value.items()))
+    if isinstance(value, (list, tuple)):
+        return tuple(_option_key(v) for v in value)
+    return value
+
+
 def read_files(
     spark: SparkSession,
     files: list[str] | str,
@@ -325,9 +360,29 @@ def read_files(
     """Extension-dispatch reader (the reference's EXTENSION_TO_BUILDER
     map, biodata.py:187-196). All files in one call must share a
     format; heterogeneous inputs are grouped by the caller
-    (load.py) and unioned with schema promotion."""
+    (load.py) and unioned with schema promotion.
+
+    csv/tsv/json/parquet/orc reads go through the source-relation memo
+    (sources/relations.py): reading files unchanged since their last
+    read in this session, with the same options and schema-relevant
+    confs, returns the relation resolved then, with no header,
+    inference or footer job. Paths the driver cannot stat (remote or
+    ``file://`` URIs, globs) are resolved on every call."""
     files = files if isinstance(files, list) else [files]
     fmt = fmt or detect_format(files[0])
+    if fmt in _MEMO_FORMATS:
+        snapshot = tuple(relations.path_snapshot(f) for f in files)
+        if all(snapshot):
+            identity = ("read_files", fmt, tuple(files), _option_key(options),
+                        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+            return relations.relation(
+                spark, identity, snapshot,
+                lambda: _read_files(spark, files, fmt, options))
+    return _read_files(spark, files, fmt, options)
+
+
+def _read_files(spark: SparkSession, files: list[str], fmt: str,
+                options: dict) -> DataFrame:
     if fmt == "csv":
         return read_csv(spark, files, **options)
     if fmt == "tsv":

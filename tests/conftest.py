@@ -33,3 +33,25 @@ def fixture_dir(tmp_path):
         "feature,metadata1,metadata2\nheader1,x,1\nheader2,y,2\n"
     )
     return str(tmp_path)
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), number of Spark jobs fn submitted)``,
+    counted through the status tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job-start events reach the tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

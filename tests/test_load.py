@@ -518,3 +518,64 @@ def test_role_tagging_projection_count_is_width_invariant(spark, tmp_path):
         (entry,) = glob.glob(str(cache_dir / "cache-*.parquet"))
         assert roles.roles_snapshot(spark.read.parquet(entry)) == roles.roles_snapshot(df)
     assert projects[4] == projects[64]
+
+
+def _write_small_cohort(d, fmt: str) -> None:
+    """Four samples x two features plus sample metadata. Loaded with
+    explicit labels, so resolving the sources is a load's only job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d.mkdir()
+    data = {"sample": ["s1", "s2", "s3", "s4"], "g1": [1, 2, 3, 4], "g2": [5, 6, 7, 8]}
+    if fmt == "parquet":
+        pq.write_table(pa.table(data), str(d / "counts.parquet"))
+    else:
+        (d / "counts.csv").write_text("sample,g1,g2\n" + "".join(
+            f"{s},{a},{b}\n" for s, a, b in zip(*data.values())))
+    (d / "sample_metadata.csv").write_text("sample,target\ns1,a\ns2,b\ns3,a\ns4,b\n")
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet"])
+def test_reload_of_unchanged_cohort_submits_no_source_job(spark, tmp_path, count_jobs, fmt):
+    """The first load of a cohort resolves its sources (CSV header and
+    inference jobs, Parquet footer jobs); a second load of the unchanged
+    files in the same session reuses the resolved relations and submits
+    no job at all."""
+    d = tmp_path / fmt
+    _write_small_cohort(d, fmt)
+
+    def load():
+        return load_dataset(path=str(d), labels=["a", "b"], spark=spark)
+
+    first, cold = count_jobs(load)
+    again, warm = count_jobs(load)
+    assert cold > 0
+    assert warm == 0
+    assert again.df.schema == first.df.schema
+    rows = {r["sample"]: r for r in again.head(4)}
+    assert rows["s3"]["g1"] == 3 and rows["s3"]["encoded_labels"] == 0
+
+
+def test_materialize_reads_back_with_the_written_schema(spark, tmp_path, count_jobs):
+    """FingerprintCache reads an entry back with the frame's own schema:
+    a miss submits only the write's jobs, a hit submits none, and both
+    carry the frame's types and role metadata (every field nullable, as
+    any file scan)."""
+    d = tmp_path / "cohort"
+    _write_small_cohort(d, "csv")
+    ds = load_dataset(path=str(d), labels=["a", "b"], spark=spark)
+    cache_dir = str(tmp_path / "cache")
+
+    _, write_jobs = count_jobs(lambda: ds.df.write.parquet(str(tmp_path / "plain")))
+    miss, miss_jobs = count_jobs(lambda: ds.materialize(cache_dir))
+    hit, hit_jobs = count_jobs(lambda: ds.materialize(cache_dir))
+    assert miss_jobs == write_jobs
+    assert hit_jobs == 0
+    assert hit.fingerprint == miss.fingerprint
+    want = [(f.name, f.dataType, f.metadata) for f in ds.df.schema]
+    assert roles.columns_with_role(ds.df, roles.ROLE_TARGET) == ["target", "encoded_labels"]
+    for out in (miss, hit):
+        assert [(f.name, f.dataType, f.metadata) for f in out.df.schema] == want
+        assert all(f.nullable for f in out.df.schema)
+    assert sorted(map(tuple, hit.df.collect())) == sorted(map(tuple, ds.df.collect()))

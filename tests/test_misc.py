@@ -19,6 +19,26 @@ def test_plan_fingerprint_stability(spark):
     assert plan_fingerprint(df1, {"p": 1}) != plan_fingerprint(df1, {"p": 2})
 
 
+def test_fingerprint_covers_the_schema(spark, tmp_path):
+    """One CSV read with and without type inference renders the same
+    analyzed plan; the fingerprint covers the schema, so the cache
+    never hands the int-typed entry to the string-typed load."""
+    from biosets_spark.sources.readers import read_files
+
+    p = tmp_path / "ab.csv"
+    p.write_text("a,b\n1,2\n3,4\n")
+    typed = read_files(spark, str(p))
+    untyped = read_files(spark, str(p), infer_schema=False)
+    assert typed.schema.simpleString() == "struct<a:int,b:int>"
+    assert plan_fingerprint(typed) != plan_fingerprint(untyped)
+
+    cache = FingerprintCache(str(tmp_path / "fp"))
+    assert cache.materialize(typed).schema.simpleString() == "struct<a:int,b:int>"
+    back = cache.materialize(untyped)
+    assert back.schema.simpleString() == "struct<a:string,b:string>"
+    assert sorted(tuple(r) for r in back.collect()) == [("1", "2"), ("3", "4")]
+
+
 def test_fingerprint_cache_roundtrip(spark, tmp_path):
     cache = FingerprintCache(str(tmp_path / "fpcache"))
     df = spark.range(100).withColumn("y", F.col("id") % 7)
@@ -1118,7 +1138,7 @@ def test_operator_package_surface():
 
 
 def test_relation_cache_invalidates_nested_rewrite(spark, tmp_path):
-    """r7 ADVICE: _path_snapshot must recurse — an in-place rewrite of
+    """r7 ADVICE: path_snapshot must recurse — an in-place rewrite of
     a part-file INSIDE a partition subdirectory changes neither the
     subdir entry nor the top level, so a flat scandir served a stale
     plan on partitioned layouts."""
@@ -1500,7 +1520,7 @@ def test_path_snapshot_follows_directory_symlinks(tmp_path):
     hang the walk."""
     import os
 
-    from biosets_spark.tables import _path_snapshot
+    from biosets_spark.sources.relations import path_snapshot
 
     real = tmp_path / "real_parts"
     real.mkdir()
@@ -1509,17 +1529,17 @@ def test_path_snapshot_follows_directory_symlinks(tmp_path):
     tbl.mkdir()
     os.symlink(real, tbl / "linked", target_is_directory=True)
 
-    snap1 = _path_snapshot(str(tbl))
+    snap1 = path_snapshot(str(tbl))
     assert any("linked/part-0.bin" in rel for rel, _, _ in snap1)
 
     # same-size in-place rewrite behind the symlink: bump mtime only
     (real / "part-0.bin").write_bytes(b"v2-payload")
-    snap2 = _path_snapshot(str(tbl))
+    snap2 = path_snapshot(str(tbl))
     assert snap2 != snap1
 
     # symlink cycle: tbl/linked/back -> tbl must terminate
     os.symlink(tbl, real / "back", target_is_directory=True)
-    snap3 = _path_snapshot(str(tbl))
+    snap3 = path_snapshot(str(tbl))
     assert any("part-0.bin" in rel for rel, _, _ in snap3)
 
 

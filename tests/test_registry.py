@@ -287,6 +287,36 @@ def test_only_pins_module_pins_or_frees():
         f"pin outside biosets_spark/pins.py: {offenders}; use pins.pin / pins.unpin")
 
 
+def test_only_source_modules_read_files():
+    """Design rule: file sources are resolved in the sources layer, so
+    that every loader goes through the one source-relation memo
+    (sources/relations.py) and an unchanged file is resolved once per
+    session. No file outside sources/, streaming/, tables.py and
+    plans/fingerprint.py may use ``spark.read`` (``.read`` as an
+    attribute, not a call: ``f.read()`` on a file object is fine)."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "biosets_spark")
+    allowed_dirs = ("sources" + os.sep, "streaming" + os.sep)
+    allowed_files = {"tables.py", os.path.join("plans", "fingerprint.py")}
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, root)
+        if rel.startswith(allowed_dirs) or rel in allowed_files:
+            continue
+        tree = ast.parse(open(path).read())
+        called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute) and node.attr == "read"
+                    and id(node) not in called):
+                offenders.append(f"{rel}:{node.lineno} .read")
+    assert not offenders, (
+        f"spark.read outside the sources layer: {offenders}; read through "
+        "sources.readers.read_files (or tables.load)")
+
+
 def test_no_role_tagging_inside_loops():
     """Design rule: a frame's roles are applied in one projection
     (roles.with_roles). with_role and apply_roles each rebuild the whole

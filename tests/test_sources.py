@@ -1048,3 +1048,135 @@ def test_avro_unknown_codec_rejected(tmp_path):
     raw = open(g, "rb").read().replace(b"\x08null", b"\x08lz4!", 1)
     with pytest.raises(ValueError, match="unknown avro codec"):
         list(A.iter_records(raw))
+
+
+def test_read_files_sees_a_same_size_rewrite(spark, tmp_path):
+    """An unchanged file is resolved once per session; rewriting it in
+    place, even to the same size, is a memo miss: the new content's
+    inferred types are read, not the old relation's."""
+    from biosets_spark.sources.readers import read_files
+
+    p = tmp_path / "x.csv"
+    p.write_text("a,b\n1,2\n")
+    first = read_files(spark, str(p))
+    assert read_files(spark, str(p)) is first
+    assert first.schema.simpleString() == "struct<a:int,b:int>"
+
+    p.write_text("a,b\nx,y\n")
+    again = read_files(spark, str(p))
+    assert again is not first
+    assert again.schema.simpleString() == "struct<a:string,b:string>"
+    assert tuple(again.collect()[0]) == ("x", "y")
+
+
+def test_read_files_memo_keys_options_and_schema_confs(spark, tmp_path):
+    """Other reader options, a changed time zone or timestamp type each
+    resolve anew and give the schema an unmemoized read gives; the
+    original entry is still served once the confs are back."""
+    from pyspark.sql import types as T
+
+    from biosets_spark.sources.readers import _read_files, read_files
+
+    p = str(tmp_path / "t.csv")
+    with open(p, "w") as f:
+        f.write("id,ts\n1,2024-03-10 02:30:00\n2,2024-03-11 08:00:00\n")
+
+    def unmemoized(**options):
+        return _read_files(spark, [p], "csv", options).schema
+
+    default = read_files(spark, p)
+    assert default.schema == unmemoized()
+    pinned = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("ts", T.StringType())])
+    for options in ({"infer_schema": False}, {"schema": pinned},
+                    {"column_names": ["x", "y"]}, {"null_values": ["1", "NA"]}):
+        got = read_files(spark, p, **options)
+        assert got is not default
+        assert got.schema == unmemoized(**options), options
+
+    confs = {"spark.sql.session.timeZone": "America/New_York",
+             "spark.sql.timestampType": "TIMESTAMP_NTZ"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+            got = read_files(spark, p)
+            assert got is not default
+            assert got.schema == unmemoized(), k
+        assert got.schema["ts"].dataType == T.TimestampNTZType()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert read_files(spark, p) is default
+
+
+def test_read_files_memoizes_only_stat_able_native_reads(spark, tmp_path):
+    """A path the driver cannot stat (here a file:// URI) and an Arrow
+    read (driver-side data) are resolved on every call."""
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+
+    from biosets_spark.sources.readers import read_files
+
+    (tmp_path / "x.csv").write_text("a\n1\n")
+    uri = "file://" + str(tmp_path / "x.csv")
+    assert read_files(spark, uri) is not read_files(spark, uri)
+    arrow = str(tmp_path / "x.arrow")
+    with ipc.new_file(arrow, pa.schema([("a", pa.int64())])) as w:
+        w.write_table(pa.table({"a": [1]}))
+    assert read_files(spark, arrow) is not read_files(spark, arrow)
+
+
+def test_relation_memo_stays_at_its_bound(spark, tmp_path, monkeypatch):
+    """Archive members are unpacked to a fresh scratch directory on
+    every load, so each load is a new memo key; the memo drops its
+    oldest entries to stay at MAX_RELATIONS."""
+    from biosets_spark.sources import relations
+
+    monkeypatch.setattr(relations, "MAX_RELATIONS", 3)
+    zp = tmp_path / "data.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("data.csv", "sample,h1\ns1,1\ns2,2\n")
+    for _ in range(5):
+        assert load_dataset(data_files=[str(zp)], spark=spark).num_rows == 2
+        assert len(relations._RELATIONS) <= 3
+    assert len(relations._RELATIONS) == 3
+
+
+def test_relation_memo_is_thread_safe(monkeypatch):
+    """Threads sharing the memo neither lose its bound nor trip over
+    each other's evictions (listing stale keys while another thread
+    deletes them raised at the parent's tables memo)."""
+    import sys
+    import threading
+
+    from biosets_spark.sources import relations
+
+    monkeypatch.setattr(relations, "MAX_RELATIONS", 4)
+    monkeypatch.setattr(relations, "_RELATIONS", {})
+    session = object()  # no JVM handle: keyed by id()
+    errors = []
+
+    def worker(t):
+        try:
+            for i in range(2000):
+                ident, snap = ("stress", (t + i) % 6), (i % 3,)
+                got = relations.relation(session, ident, snap, lambda: (ident, snap))
+                assert got == (ident, snap)
+        except Exception as e:  # reported by the main thread below
+            errors.append(e)
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+    assert len(relations._RELATIONS) <= 4
+    assert len({k[:2] for k in relations._RELATIONS}) == len(relations._RELATIONS)
