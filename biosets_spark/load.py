@@ -21,8 +21,9 @@ biodata.py:1037-1198 physical pipeline):
 
 All heavy lifting is a Catalyst plan: scan -> broadcast join ->
 withColumn(map-lookup). The only collected data is the label
-dictionary and the (small) feature-metadata table; with the sources
-resolved, those two collects are a reload's only jobs.
+dictionary and the (small) feature-metadata table. Both are driver
+facts of the memoized relations (``relations.fact``), so a reload of
+unchanged files submits none.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from .operators import joins as _joins
 from .operators import labels as _labels
 from .schema import roles
 from .schema.lattice import union_promote
-from .sources import discovery, readers
+from .sources import discovery, readers, relations
 
 # column-name patterns for role inference, case-insensitive, leftmost
 # match wins (reference: biodata.py:577-580, 1533-1553)
@@ -267,12 +268,16 @@ def load_dataset(
         # limit(cap+1) scan — the LIMIT bounds what ever reaches the
         # driver, overflow past the cap raises, and the warn threshold
         # is judged from the collected length (no separate count()
-        # pre-scan of the metadata files; r5 ADVICE fix).
-        collected = fm_df.limit(FEATURE_METADATA_HARD_CAP + 1).collect()
-        if len(collected) > FEATURE_METADATA_HARD_CAP:
+        # pre-scan of the metadata files). The rows are a fact of the
+        # memoized relation, keyed by the cap they were limited to, and
+        # both guards are judged on every load, hit or miss.
+        cap = FEATURE_METADATA_HARD_CAP
+        collected = relations.fact(
+            spark, ("feature_metadata", cap), [fm_df],
+            lambda: tuple(fm_df.limit(cap + 1).collect()))
+        if len(collected) > cap:
             raise ValueError(
-                f"feature metadata has > hard cap "
-                f"{FEATURE_METADATA_HARD_CAP} rows; this is row-shaped "
+                f"feature metadata has > hard cap {cap} rows; this is row-shaped "
                 "data, not per-column metadata — pass it as data_files "
                 "or sample_metadata_files instead"
             )
@@ -318,12 +323,19 @@ def load_dataset(
         # never in the feature-metadata key column's values and would
         # defeat containment for every candidate key.
         pre_enrich_cols = list(df.columns)
+        # the relations the joined frame is a function of, given the
+        # key columns: an inferred label dictionary is memoized on them
+        # (J1 key join or no metadata; a J2 positional join is not)
+        label_inputs: list | None = [df]
+        m_col = None
         if sample_metadata_files:
             meta = _read_shards(spark, list(sample_metadata_files))
             m_col = sample_column or _match_col(meta.columns, SAMPLE_PATTERNS)
             if s_col and m_col:
                 df = _joins.join_sample_metadata(df, meta, s_col, m_col)
+                label_inputs.append(meta)
             else:
+                label_inputs = None
                 # ambiguity-warning path (reference test_biodata.py:
                 # 1270-1321 warns when the sample key cannot be matched)
                 warnings.warn(
@@ -406,8 +418,17 @@ def load_dataset(
                         "Multiple data files without explicit labels=: pass the full label "
                         "dictionary so codes are consistent across shards and splits."
                     )
+                split_labels = labels
+                if (labels is None and label_inputs is not None
+                        and not (positive_labels or negative_labels)):
+                    # computed on the JOINED frame: under the left join
+                    # a metadata row whose sample has no data row adds
+                    # no label, so the metadata alone would not do
+                    split_labels = list(relations.fact(
+                        spark, ("label_dictionary", s_col, m_col, t_col), label_inputs,
+                        lambda: tuple(_labels.label_dictionary(df, t_col))))
                 df, _ = _labels.encode_labels(
-                    df, t_col, labels=labels,
+                    df, t_col, labels=split_labels,
                     positive_labels=positive_labels, negative_labels=negative_labels,
                 )
 

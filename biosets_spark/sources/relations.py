@@ -17,10 +17,18 @@ An entry is keyed by (session, identity, snapshot):
 - a snapshot of the inputs, ``(path, size, mtime_ns)`` per file, so an
   in-place rewrite is a miss without a manual refresh.
 
+An entry can also carry a driver fact derived from memoized relations
+(``fact``): the collected feature-metadata rows and the inferred label
+dictionary of ``load_dataset``, which a reload of unchanged files would
+otherwise recompute with Spark jobs. A fact is keyed by (session,
+("fact", name, identities of its inputs), snapshots of its inputs), so
+a rewrite of any input is a miss, like the relation's own.
+
 A miss evicts the superseded snapshots of the same (session, identity),
 so a rewrite loop cannot grow the memo, and the memo holds at most
-``MAX_RELATIONS`` entries, least recently used dropped first. It holds
-lazy DataFrames only: no data is pinned, and ``pins.release()`` and
+``MAX_RELATIONS`` entries, facts included, least recently used dropped
+first. It holds lazy DataFrames and small immutable driver values
+only: no data is pinned on the cluster, and ``pins.release()`` and
 ``clearCache()`` do not touch it. ``tables.refresh()`` clears it.
 """
 
@@ -36,10 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 # load, so their keys never repeat; the bound keeps those from piling up
 MAX_RELATIONS = 128
 
-# (session key, identity, snapshot) -> resolved lazy DataFrame, in
-# least-recently-used-first order
-_RELATIONS: dict[tuple, DataFrame] = {}
+# (session key, identity, snapshot) -> resolved lazy DataFrame or
+# driver fact, in least-recently-used-first order
+_RELATIONS: dict[tuple, object] = {}
 _LOCK = threading.Lock()
+_MISSING = object()
 
 
 def path_snapshot(path: str) -> tuple:
@@ -100,27 +109,54 @@ def _session_key(spark: SparkSession) -> str:
         return str(id(spark))
 
 
-def relation(spark: SparkSession, identity: tuple, snapshot: tuple,
-             build: Callable[[], DataFrame]) -> DataFrame:
-    """The memoized relation for ``identity`` at ``snapshot`` in this
-    session, calling ``build()`` to resolve it on a miss. A ``build``
-    that raises stores nothing."""
-    key = (_session_key(spark), identity, snapshot)
+def _memo(key: tuple, build: Callable[[], object]):
+    """The entry under ``key``, calling ``build()`` to store it on a
+    miss. A ``build`` that raises stores nothing."""
     with _LOCK:
-        df = _RELATIONS.pop(key, None)
-        if df is not None:
-            _RELATIONS[key] = df
-            return df
-    # resolved outside the lock: it runs Spark jobs, and two threads
+        value = _RELATIONS.pop(key, _MISSING)
+        if value is not _MISSING:
+            _RELATIONS[key] = value
+            return value
+    # built outside the lock: it runs Spark jobs, and two threads
     # missing on one key at once only build it twice
-    df = build()
+    value = build()
     with _LOCK:
         for stale in [k for k in _RELATIONS if k[:2] == key[:2]]:
             del _RELATIONS[stale]
         while len(_RELATIONS) >= MAX_RELATIONS:
             del _RELATIONS[next(iter(_RELATIONS))]
-        _RELATIONS[key] = df
-    return df
+        _RELATIONS[key] = value
+    return value
+
+
+def relation(spark: SparkSession, identity: tuple, snapshot: tuple,
+             build: Callable[[], DataFrame]) -> DataFrame:
+    """The memoized relation for ``identity`` at ``snapshot`` in this
+    session, calling ``build()`` to resolve it on a miss. A ``build``
+    that raises stores nothing."""
+    return _memo((_session_key(spark), identity, snapshot), build)
+
+
+def fact(spark: SparkSession, name: tuple, inputs: list,
+         compute: Callable[[], object]):
+    """The memoized driver fact ``name`` derived from ``inputs``,
+    calling ``compute()`` on a miss. Every input must be a frame this
+    memo returned in this session; the fact is then keyed by their
+    identities and snapshots, so a rewrite of any input is a miss. Any
+    other input (an Arrow, npz or Avro read, a path that cannot be
+    stat'ed, a union of several formats, a renamed frame) makes it
+    ``compute()`` with nothing stored, as does a ``compute`` that
+    raises. The value is shared by every later hit: return an
+    immutable one."""
+    session = _session_key(spark)
+    with _LOCK:
+        keys = [next((k for k, v in _RELATIONS.items()
+                      if v is df and k[0] == session), None)
+                for df in inputs]
+    if any(k is None for k in keys):
+        return compute()
+    return _memo((session, ("fact", name, tuple(k[1] for k in keys)),
+                  tuple(k[2] for k in keys)), compute)
 
 
 def clear() -> None:

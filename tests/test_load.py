@@ -313,11 +313,17 @@ def test_feature_metadata_driver_collect_guard(spark, tmp_path, monkeypatch):
         "gene,weight\n" + "".join(f"g{i},{i}\n" for i in range(6))
     )
     monkeypatch.setattr(load_mod, "FEATURE_METADATA_WARN_ROWS", 2)
-    with pytest.warns(UserWarning, match="collected to the driver"):
-        load_dataset(path=str(tmp_path), spark=spark)
-    monkeypatch.setattr(load_mod, "FEATURE_METADATA_HARD_CAP", 5)
-    with pytest.raises(ValueError, match="row-shaped data"):
-        load_dataset(path=str(tmp_path), spark=spark)
+    # the rows are memoized after the first load: both guards are
+    # judged again on the repeat load
+    monkeypatch.setattr(load_mod, "FEATURE_METADATA_HARD_CAP", 3)
+    for _ in range(2):
+        with pytest.raises(ValueError, match="row-shaped data"):
+            load_dataset(path=str(tmp_path), spark=spark)
+    # rows limited to a smaller cap are not served under a larger one
+    monkeypatch.setattr(load_mod, "FEATURE_METADATA_HARD_CAP", 10)
+    for _ in range(2):
+        with pytest.warns(UserWarning, match="has 6 rows"):
+            load_dataset(path=str(tmp_path), spark=spark)
 
 
 def test_free_function_accessors(spark, fixture_dir):
@@ -520,20 +526,32 @@ def test_role_tagging_projection_count_is_width_invariant(spark, tmp_path):
     assert projects[4] == projects[64]
 
 
-def _write_small_cohort(d, fmt: str) -> None:
-    """Four samples x two features plus sample metadata. Loaded with
-    explicit labels, so resolving the sources is a load's only job."""
+def _write_small_cohort(d, fmt: str, targets: str = "abab", symbols: str = "AB") -> None:
+    """Four samples x two features, sample metadata with one target
+    label per character of ``targets`` (a fifth one is a sample no data
+    row has) and feature metadata with one symbol per feature."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d.mkdir()
+    d.mkdir(exist_ok=True)
     data = {"sample": ["s1", "s2", "s3", "s4"], "g1": [1, 2, 3, 4], "g2": [5, 6, 7, 8]}
     if fmt == "parquet":
         pq.write_table(pa.table(data), str(d / "counts.parquet"))
     else:
         (d / "counts.csv").write_text("sample,g1,g2\n" + "".join(
             f"{s},{a},{b}\n" for s, a, b in zip(*data.values())))
-    (d / "sample_metadata.csv").write_text("sample,target\ns1,a\ns2,b\ns3,a\ns4,b\n")
+    (d / "sample_metadata.csv").write_text("sample,target\n" + "".join(
+        f"s{i},{t}\n" for i, t in enumerate(targets, 1)))
+    (d / "feature_metadata.csv").write_text("feature,symbol\n" + "".join(
+        f"g{i},{s}\n" for i, s in enumerate(symbols, 1)))
+
+
+def _facts(ds) -> tuple:
+    """What a load derives from its files: schema with every role tag,
+    J4 feature metadata and label dictionary."""
+    df = ds.df
+    return (df.schema, roles.get_labels(df, "encoded_labels"),
+            {c: df.schema[c].metadata.get(roles.META_KEY) for c in ("g1", "g2")})
 
 
 @pytest.mark.parametrize("fmt", ["csv", "parquet"])
@@ -555,6 +573,73 @@ def test_reload_of_unchanged_cohort_submits_no_source_job(spark, tmp_path, count
     assert again.df.schema == first.df.schema
     rows = {r["sample"]: r for r in again.head(4)}
     assert rows["s3"]["g1"] == 3 and rows["s3"]["encoded_labels"] == 0
+
+
+# jobs of a cold load before the facts were memoized: the source
+# resolution, the feature-metadata collect and the label dictionary
+COLD_LOAD_JOBS = {"csv": 10, "parquet": 9}
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet"])
+def test_reload_with_inferred_labels_submits_no_job(spark, tmp_path, count_jobs, fmt):
+    """The feature-metadata rows and the inferred label dictionary are
+    facts of the memoized relations: a repeat load of unchanged files
+    submits no job and derives the same schema, role tags, J4 metadata
+    and dictionary; the cold load submits no more jobs than before."""
+    d = tmp_path / fmt
+    _write_small_cohort(d, fmt)
+
+    def load():
+        return load_dataset(path=str(d), spark=spark)
+
+    first, cold = count_jobs(load)
+    again, warm = count_jobs(load)
+    assert 0 < cold <= COLD_LOAD_JOBS[fmt]
+    assert warm == 0
+    assert _facts(again) == _facts(first)
+    assert _facts(first)[1:] == (["a", "b"], {"g1": {"symbol": "A"}, "g2": {"symbol": "B"}})
+    assert roles.columns_with_role(again.df, roles.ROLE_FEATURE) == ["g1", "g2"]
+    assert roles.columns_with_role(again.df, roles.ROLE_TARGET) == ["target", "encoded_labels"]
+
+
+def test_same_size_rewrite_invalidates_load_facts(spark, tmp_path):
+    """Rewriting a metadata file in place with the same size is a miss
+    of the facts derived from it: one label changed gives the new
+    dictionary, one symbol changed gives the new J4 metadata."""
+    d = tmp_path / "cohort"
+    _write_small_cohort(d, "csv")
+    size = (d / "sample_metadata.csv").stat().st_size
+
+    def load():
+        return _facts(load_dataset(path=str(d), spark=spark))
+
+    assert load()[1] == ["a", "b"]
+    _write_small_cohort(d, "csv", targets="abac")
+    assert (d / "sample_metadata.csv").stat().st_size == size
+    assert load()[1] == ["a", "b", "c"]
+    assert load()[2] == {"g1": {"symbol": "A"}, "g2": {"symbol": "B"}}
+    _write_small_cohort(d, "csv", targets="abac", symbols="AC")
+    assert load()[2] == {"g1": {"symbol": "A"}, "g2": {"symbol": "C"}}
+
+
+def test_label_dictionary_is_computed_on_the_joined_frame(spark, tmp_path, count_jobs):
+    """A sample-metadata row whose sample no data row has adds no label
+    under the left join, on the cold load and on the hit: computing
+    the dictionary on the metadata alone would add its label and shift
+    every code after it."""
+    d = tmp_path / "cohort"
+    _write_small_cohort(d, "csv", targets="bbaa0")
+
+    def load():
+        return load_dataset(path=str(d), spark=spark)
+
+    first, _ = count_jobs(load)
+    again, warm = count_jobs(load)
+    assert warm == 0
+    for ds in (first, again):
+        assert roles.get_labels(ds.df, "encoded_labels") == ["a", "b"]
+        rows = {r["sample"]: r["encoded_labels"] for r in ds.head(4)}
+        assert rows == {"s1": 1, "s2": 1, "s3": 0, "s4": 0}
 
 
 def test_materialize_reads_back_with_the_written_schema(spark, tmp_path, count_jobs):

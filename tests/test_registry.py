@@ -317,6 +317,34 @@ def test_only_source_modules_read_files():
         "sources.readers.read_files (or tables.load)")
 
 
+def test_load_path_actions_are_memoized_facts():
+    """Design rule: a repeat load of unchanged files submits no job, so
+    every driver action in load.py (collect, count, first, take, head)
+    runs inside a ``relations.fact`` compute, memoized with the
+    relations it is derived from."""
+    import ast
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "biosets_spark", "load.py")
+    tree = ast.parse(open(path).read())
+    actions = {"collect", "count", "first", "take", "head"}
+    memoized = set()
+    for node in ast.walk(tree):
+        func = getattr(node, "func", None)
+        if (isinstance(func, ast.Attribute) and func.attr == "fact"
+                and getattr(func.value, "id", None) == "relations"):
+            memoized.update(id(n) for arg in node.args for n in ast.walk(arg))
+    offenders = [
+        f"load.py:{node.lineno} .{node.func.attr}()"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr in actions and id(node) not in memoized
+    ]
+    assert not offenders, (
+        f"driver action outside a relations.fact compute: {offenders}; "
+        "memoize it with the relations it reads")
+
+
 def test_no_role_tagging_inside_loops():
     """Design rule: a frame's roles are applied in one projection
     (roles.with_roles). with_role and apply_roles each rebuild the whole

@@ -1136,11 +1136,57 @@ def test_relation_memo_stays_at_its_bound(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(relations, "MAX_RELATIONS", 3)
     zp = tmp_path / "data.zip"
     with zipfile.ZipFile(zp, "w") as z:
-        z.writestr("data.csv", "sample,h1\ns1,1\ns2,2\n")
+        z.writestr("data.csv", "sample,h1,target\ns1,1,a\ns2,2,b\n")
+    facts = 0
     for _ in range(5):
         assert load_dataset(data_files=[str(zp)], spark=spark).num_rows == 2
         assert len(relations._RELATIONS) <= 3
+        facts += any(k[1][0] == "fact" for k in relations._RELATIONS)
     assert len(relations._RELATIONS) == 3
+    # each load's label dictionary is a fact sharing the same bound
+    assert facts == 5
+
+
+def test_relation_fact_is_memoized_with_its_inputs(spark, tmp_path):
+    """A fact of memoized relations is computed once per snapshot of
+    its inputs: a rewrite is a miss that replaces it; an input the memo
+    did not return and a compute that raises store nothing."""
+    from biosets_spark.sources import relations
+    from biosets_spark.sources.readers import read_files
+
+    p = tmp_path / "t.csv"
+    p.write_text("a\n1\n")
+    calls = []
+
+    def fact(df, compute=None):
+        def counted():
+            calls.append(1)
+            return tuple(df.collect())
+        return relations.fact(spark, ("rows",), [df], compute or counted)
+
+    df = read_files(spark, str(p))
+    assert fact(df) == fact(df) == ((1,),)
+    assert len(calls) == 1
+    assert fact(read_files(spark, str(p))) == ((1,),) and len(calls) == 1
+    p.write_text("a\n2\n")
+    assert fact(read_files(spark, str(p))) == ((2,),) and len(calls) == 2
+    assert sum(k[1][0] == "fact" and k[1][1] == ("rows",)
+               for k in relations._RELATIONS) == 1
+
+    renamed = read_files(spark, str(p)).toDF("b")
+    assert fact(renamed) == fact(renamed) and len(calls) == 4
+
+    def fails():
+        raise RuntimeError("compute failed")
+
+    p.write_text("a\n3\n")
+    before = dict(relations._RELATIONS)
+    df = read_files(spark, str(p))
+    with pytest.raises(RuntimeError):
+        fact(df, fails)
+    assert {k for k in relations._RELATIONS if k[1][0] == "fact"} == \
+        {k for k in before if k[1][0] == "fact"}
+    assert fact(df) == ((3,),) and len(calls) == 5
 
 
 def test_relation_memo_is_thread_safe(monkeypatch):
@@ -1163,6 +1209,11 @@ def test_relation_memo_is_thread_safe(monkeypatch):
                 ident, snap = ("stress", (t + i) % 6), (i % 3,)
                 got = relations.relation(session, ident, snap, lambda: (ident, snap))
                 assert got == (ident, snap)
+                # a fact of the relation just served shares the lock and
+                # the bound (its input may be evicted meanwhile: then it
+                # is computed and not stored)
+                fact = relations.fact(session, ("len",), [got], lambda: len(got[0]))
+                assert fact == 2
         except Exception as e:  # reported by the main thread below
             errors.append(e)
 
