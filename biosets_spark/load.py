@@ -22,8 +22,12 @@ biodata.py:1037-1198 physical pipeline):
 All heavy lifting is a Catalyst plan: scan -> broadcast join ->
 withColumn(map-lookup). The only collected data is the label
 dictionary and the (small) feature-metadata table. Both are driver
-facts of the memoized relations (``relations.fact``), so a reload of
-unchanged files submits none.
+facts of the memoized relations (``relations.fact``), and so is each
+split's built frame, keyed by the call's plan-shaping arguments: a
+reload of unchanged files submits no job and rebuilds no plan. The
+feature-metadata guards are judged, and the build's warnings
+replayed, on every load. A J2 positional join pins its row index, so
+its plan is built on every load.
 """
 
 from __future__ import annotations
@@ -137,13 +141,13 @@ def _match_col(columns: list[str], patterns: list[str]) -> str | None:
     return None
 
 
-def _feature_meta_from_rows(rows: list[dict], key: str) -> tuple[dict[str, dict], list[str]]:
-    """Key a collected feature-metadata table by one of its columns
+def _feature_meta_from_rows(rows, key: str) -> tuple[dict[str, dict], list[str]]:
+    """Key collected feature-metadata Rows by one of their columns
     (reference _convert_feature_metadata_to_dict, biodata.py:706-717)."""
     meta: dict[str, dict] = {}
     order: list[str] = []
     for row in rows:
-        d = dict(row)
+        d = row.asDict(recursive=True)
         k = str(d.pop(key))
         meta[k] = d
         order.append(k)
@@ -254,10 +258,10 @@ def load_dataset(
     # patterns; (2) J5 set containment — the first metadata column whose
     # VALUES contain every data feature column name (decided per split,
     # once the data columns are known); (3) first column + warning.
-    feature_meta: dict[str, dict] | None = None
-    feature_names_ordered: list[str] = []
-    fm_rows: list[dict] | None = None
+    fm_df = None
+    fm_rows: tuple | None = None
     fm_cols: list[str] = []
+    fm_key: str | None = None
     if feature_metadata_files:
         fm_df = _read_shards(spark, list(feature_metadata_files))
         fm_cols = fm_df.columns
@@ -272,76 +276,67 @@ def load_dataset(
         # memoized relation, keyed by the cap they were limited to, and
         # both guards are judged on every load, hit or miss.
         cap = FEATURE_METADATA_HARD_CAP
-        collected = relations.fact(
+        fm_rows = relations.fact(
             spark, ("feature_metadata", cap), [fm_df],
             lambda: tuple(fm_df.limit(cap + 1).collect()))
-        if len(collected) > cap:
+        if len(fm_rows) > cap:
             raise ValueError(
                 f"feature metadata has > hard cap {cap} rows; this is row-shaped "
                 "data, not per-column metadata — pass it as data_files "
                 "or sample_metadata_files instead"
             )
-        if len(collected) > FEATURE_METADATA_WARN_ROWS:
+        if len(fm_rows) > FEATURE_METADATA_WARN_ROWS:
             warnings.warn(
-                f"feature metadata has {len(collected)} rows (> "
+                f"feature metadata has {len(fm_rows)} rows (> "
                 f"{FEATURE_METADATA_WARN_ROWS}); it is collected to the "
                 "driver — expect substantial driver memory use"
             )
-        fm_rows = [r.asDict(recursive=True) for r in collected]
         fm_key = _match_col(fm_cols, FEATURE_KEY_PATTERNS)
-        if fm_key:
-            feature_meta, feature_names_ordered = _feature_meta_from_rows(fm_rows, fm_key)
+    meta = (_read_shards(spark, list(sample_metadata_files))
+            if sample_metadata_files else None)
 
-    out: dict[str, BioDataset] = {}
     feature_type = roles.EXPERIMENT_TYPES.get(experiment_type or "", None)
+    fill_type = roles.FEATURE_TYPES.get(feature_type or "")
     multi_shard = len(data_files) > 1
+    # every argument that shapes a split's plan (experiment_type through
+    # the feature and fill types it resolves to); reader options are
+    # part of the data relation's identity
+    plan_args = (
+        feature_type, fill_type, sample_column, batch_column, target_column,
+        *(None if x is None else tuple(x)
+          for x in (labels, positive_labels, negative_labels)),
+        add_missing_columns, zero_as_missing, multi_shard)
 
-    for split_name, files in splits.items():
-        df = _read_shards(spark, files, **reader_options)
-
-        # npz-style positional feature naming (biodata.py:1099-1124)
-        unnamed = all(re.fullmatch(r"\d+|_c\d+", c) for c in df.columns)
-        if unnamed and fm_rows is not None and feature_meta is None:
-            # positional matrices can't containment-match (their columns
-            # are synthetic); fall back to the first fm column as key
-            warnings.warn(
-                f"feature metadata key column inferred as {fm_cols[0]!r}; "
-                "rename it to 'feature' to silence this warning"
-            )
-            feature_meta, feature_names_ordered = _feature_meta_from_rows(fm_rows, fm_cols[0])
-        if unnamed and feature_names_ordered and len(feature_names_ordered) == len(df.columns):
-            df = df.toDF(*feature_names_ordered)
+    def plan(data: DataFrame, names: list[str], s_col, m_col, fm_key):
+        """One split's frame from its read relations: J1/J2 join, role
+        tags, J4 metadata, label encoding and add_missing_columns fills.
+        Returns (frame, the warnings it raised, the feature-metadata
+        key it resolved), a pure function of the relations and the
+        call's arguments."""
+        notes: list[str] = []
+        df = data if names == data.columns else data.toDF(*names)
+        feature_meta, feature_names_ordered = (
+            (None, []) if fm_key is None else _feature_meta_from_rows(fm_rows, fm_key))
 
         # -- 3. role inference -----------------------------------------
-        s_col = sample_column or _match_col(df.columns, SAMPLE_PATTERNS)
-        b_col = batch_column or _match_col(df.columns, BATCH_PATTERNS)
-        t_col = target_column or _match_col(df.columns, TARGET_PATTERNS)
+        b_col = batch_column or _match_col(names, BATCH_PATTERNS)
+        t_col = target_column or _match_col(names, TARGET_PATTERNS)
 
         # -- 4. sample-metadata enrichment -----------------------------
         # J5 containment must be decided against the DATA columns, not
         # the post-join frame — joined covariates (age, sex, ...) are
         # never in the feature-metadata key column's values and would
         # defeat containment for every candidate key.
-        pre_enrich_cols = list(df.columns)
-        # the relations the joined frame is a function of, given the
+        # The relations the joined frame is a function of, given the
         # key columns: an inferred label dictionary is memoized on them
         # (J1 key join or no metadata; a J2 positional join is not)
         label_inputs: list | None = [df]
-        m_col = None
-        if sample_metadata_files:
-            meta = _read_shards(spark, list(sample_metadata_files))
-            m_col = sample_column or _match_col(meta.columns, SAMPLE_PATTERNS)
+        if meta is not None:
             if s_col and m_col:
                 df = _joins.join_sample_metadata(df, meta, s_col, m_col)
                 label_inputs.append(meta)
             else:
                 label_inputs = None
-                # ambiguity-warning path (reference test_biodata.py:
-                # 1270-1321 warns when the sample key cannot be matched)
-                warnings.warn(
-                    "no common sample column between data and metadata "
-                    f"(data={s_col!r}, metadata={m_col!r}); falling back to positional alignment"
-                )
                 df = _joins.align_horizontal(df, meta)
                 s_col = s_col or m_col if (s_col or m_col) in df.columns else s_col
             b_col = b_col or _match_col(df.columns, BATCH_PATTERNS)
@@ -363,16 +358,16 @@ def load_dataset(
             # regardless of their names (age/sex/... match no pattern;
             # they must not land in the feature matrix), plus anything
             # matching the metadata name patterns
-            if c not in pre_enrich_cols or _match_col([c], METADATA_PATTERNS):
+            if c not in names or _match_col([c], METADATA_PATTERNS):
                 tags[c] = roles.role_updates(roles.ROLE_METADATA)
 
         # J5: set-containment feature-key detection (biodata.py:681-686)
         # — no name-pattern key matched, so pick the first feature-
         # metadata column whose values contain every candidate data
         # feature column name, and key the per-column metadata by it.
-        if fm_rows is not None and feature_meta is None:
+        if fm_rows is not None and fm_key is None:
             dfeat = {
-                c for c in pre_enrich_cols
+                c for c in names
                 if c not in (s_col, b_col, t_col) and not _match_col([c], METADATA_PATTERNS)
             }
             fm_key = next(
@@ -381,7 +376,7 @@ def load_dataset(
             )
             if fm_key is None:
                 fm_key = fm_cols[0]
-                warnings.warn(
+                notes.append(
                     f"feature metadata key column inferred as {fm_key!r} (no name-pattern "
                     "or value-containment match); rename it to 'feature' to silence this"
                 )
@@ -398,7 +393,7 @@ def load_dataset(
         if feature_meta:
             missing = set(feature_meta) - set(df.columns)
             if missing:
-                warnings.warn(f"feature metadata rows with no matching data column: {sorted(missing)}")
+                notes.append(f"feature metadata rows with no matching data column: {sorted(missing)}")
         has_target = bool(t_col) and t_col in df.columns
         if has_target:
             tags[t_col] = roles.role_updates(roles.ROLE_TARGET)
@@ -437,7 +432,6 @@ def load_dataset(
         # int-literal-0) column inside an otherwise-numeric feature
         # matrix breaks downstream assembly silently
         if add_missing_columns and feature_meta:
-            fill_type = roles.FEATURE_TYPES.get(feature_type or "")
             if fill_type is not None:
                 fill = (F.lit(0).cast(fill_type) if zero_as_missing
                         else F.lit(None).cast(fill_type))
@@ -449,8 +443,54 @@ def load_dataset(
                      for name in dict.fromkeys(feature_names_ordered) if name not in present]
             if fills:
                 df = df.select("*", *fills)
+        return df, tuple(notes), fm_key
 
-        out[split_name] = BioDataset(df, split=split_name)
+    out: dict[str, BioDataset] = {}
+    for split_name, files in splits.items():
+        data = _read_shards(spark, files, **reader_options)
+        names = data.columns
+
+        # npz-style positional feature naming (biodata.py:1099-1124),
+        # decided before the plan: the key it settles holds for every
+        # later split
+        if fm_rows is not None and all(re.fullmatch(r"\d+|_c\d+", c) for c in names):
+            if fm_key is None:
+                # positional matrices can't containment-match (their
+                # columns are synthetic); fall back to the first fm
+                # column as key
+                warnings.warn(
+                    f"feature metadata key column inferred as {fm_cols[0]!r}; "
+                    "rename it to 'feature' to silence this warning"
+                )
+                fm_key = fm_cols[0]
+            order = _feature_meta_from_rows(fm_rows, fm_key)[1]
+            if order and len(order) == len(names):
+                names = order
+
+        s_col = sample_column or _match_col(names, SAMPLE_PATTERNS)
+        m_col = None if meta is None else (
+            sample_column or _match_col(meta.columns, SAMPLE_PATTERNS))
+        build = functools.partial(plan, data, names, s_col, m_col, fm_key)
+        if meta is not None and not (s_col and m_col):
+            # ambiguity-warning path (reference test_biodata.py:
+            # 1270-1321 warns when the sample key cannot be matched).
+            # The J2 positional join pins its row index, and a memoized
+            # plan holds no pin: it is built on every load.
+            warnings.warn(
+                "no common sample column between data and metadata "
+                f"(data={s_col!r}, metadata={m_col!r}); falling back to positional alignment"
+            )
+            frame, notes, fm_key = build()
+        else:
+            # the plan is a fact of the split's relations: a reload of
+            # unchanged files rebuilds nothing, and replays the
+            # warnings the build raised
+            frame, notes, fm_key = relations.fact(
+                spark, ("split_plan", split_name, fm_key, *plan_args),
+                [r for r in (data, meta, fm_df) if r is not None], build)
+        for note in notes:
+            warnings.warn(note)
+        out[split_name] = BioDataset(frame, split=split_name)
 
     if split is not None:
         if isinstance(split, (list, tuple)):

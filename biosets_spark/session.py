@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -152,6 +153,17 @@ def _ship_package(spark: SparkSession) -> None:
         env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
 
 
+def _set_if_allowed(spark: SparkSession, key: str, value: str) -> None:
+    """Set a runtime conf the session may refuse: a platform that owns
+    the session can lock confs, and Spark raises ``AnalysisException``
+    for a conf it will not change. A refused conf keeps the session's
+    value; any other error propagates."""
+    try:
+        spark.conf.set(key, value)
+    except AnalysisException:
+        pass
+
+
 def apply_session_conf(spark: SparkSession) -> SparkSession:
     """Apply engine-required runtime conf to an externally created session.
 
@@ -162,36 +174,28 @@ def apply_session_conf(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     _ship_package(spark)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass
+    _set_if_allowed(spark, "spark.sql.execution.arrow.pyspark.enabled", "true")
     # runtime-settable perf knobs, so an externally owned session plans
     # like the engine's own: star-schema dims should broadcast (32 MiB
     # threshold), and the 200-partition default is oversized for the
     # bench scales. Only the untouched default is overridden — a
     # caller's explicit partition count is respected.
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        # keep wide aggregates (128-perm minhash signatures) inside
-        # whole-stage codegen; the 100-field default drops them to
-        # interpreted mode (measured 2x on the signature stage)
-        spark.conf.set("spark.sql.codegen.maxFields", "400")
-        # RocksDB streaming state (see get_spark): read at query
-        # (re)start, so it only affects streams STARTED after this
-        # call — already-running queries keep their provider. NOTE
-        # this is CHECKPOINT-BREAKING for restarts: a checkpoint
-        # written under the HDFS-backed provider cannot be resumed
-        # under RocksDB (Spark reads providerClass from the current
-        # conf at restart) — delete/rebuild old checkpoints, or pin
-        # the legacy provider via the BIOSETS_SPARK_STATE_PROVIDER
-        # env var (honored here and in get_spark).
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            _state_store_provider(),
-        )
-    except Exception:
-        pass
+    _set_if_allowed(spark, "spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+    if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+        _set_if_allowed(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+    # keep wide aggregates (128-perm minhash signatures) inside
+    # whole-stage codegen; the 100-field default drops them to
+    # interpreted mode (measured 2x on the signature stage)
+    _set_if_allowed(spark, "spark.sql.codegen.maxFields", "400")
+    # RocksDB streaming state (see get_spark): read at query
+    # (re)start, so it only affects streams STARTED after this
+    # call — already-running queries keep their provider. NOTE
+    # this is CHECKPOINT-BREAKING for restarts: a checkpoint
+    # written under the HDFS-backed provider cannot be resumed
+    # under RocksDB (Spark reads providerClass from the current
+    # conf at restart) — delete/rebuild old checkpoints, or pin
+    # the legacy provider via the BIOSETS_SPARK_STATE_PROVIDER
+    # env var (honored here and in get_spark).
+    _set_if_allowed(
+        spark, "spark.sql.streaming.stateStore.providerClass", _state_store_provider())
     return spark

@@ -11,12 +11,21 @@ formats (.zip/.tar/.tar.gz/.7z) have no Hadoop codec; they go through
 a driver-side ingest-unpack step into a scratch directory, after which
 the normal extension-dispatch readers take over. At 100 TB the
 recommendation stands: unpack once at ingest, store Parquet.
+
+Each archive snapshot, ``(realpath, size, mtime_ns)``, is unpacked
+once into a directory of its own under the system temp directory and
+reused while the archive is unchanged: its members keep their paths,
+so a reload hits the source-relation memo (sources/relations.py). A
+rewritten archive is unpacked afresh and its superseded directory
+removed.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
 import tarfile
 import tempfile
 import urllib.parse
@@ -59,24 +68,51 @@ def _to_local(path: str) -> str:
     return parsed.path
 
 
-def extract(path: str, dest: str | None = None) -> list[str]:
-    """Unpack a zip/tar archive; returns the extracted member paths."""
-    dest = dest or tempfile.mkdtemp(prefix="biosets_unpack_")
-    path = _to_local(path)
+# one directory per unpacked archive snapshot
+_SCRATCH = os.path.join(tempfile.gettempdir(), "biosets_unpack")
+
+
+def _snapshot_dir(local: str, fill) -> str:
+    """The directory ``fill(dir)`` unpacks the archive ``local`` into,
+    named by its ``(realpath, size, mtime_ns)`` and reused while that
+    is unchanged. It is filled under a temporary name and renamed into
+    place, so a directory under a snapshot's name is complete. A new
+    snapshot removes the directories of the archive's older ones."""
+    real = os.path.realpath(local)
+    st = os.stat(real)
+    tag = hashlib.sha256(real.encode()).hexdigest()[:16]
+    name = f"{tag}-{st.st_size}-{st.st_mtime_ns}"
+    dest = os.path.join(_SCRATCH, name)
+    if os.path.isdir(dest):
+        return dest
+    os.makedirs(_SCRATCH, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{tag}-", dir=_SCRATCH)
+    try:
+        fill(tmp)
+        os.rename(tmp, dest)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        # unless another caller put the same snapshot in place first
+        if not os.path.isdir(dest):
+            raise
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    for old in os.listdir(_SCRATCH):
+        if old.startswith(tag + "-") and old != name:
+            shutil.rmtree(os.path.join(_SCRATCH, old), ignore_errors=True)
+    return dest
+
+
+def _unpack(path: str, dest: str) -> None:
     low = path.lower()
-    out: list[str] = []
     if low.endswith(".zip"):
         with zipfile.ZipFile(path) as z:
-            for m in z.namelist():
-                if m.endswith("/"):
-                    continue
-                z.extract(m, dest)
-                out.append(os.path.join(dest, m))
+            z.extractall(dest)
     elif low.endswith(_TARFILE_EXTS):
         # gz/bz2/xz all via the stdlib (mode "r:*" auto-detects)
         with tarfile.open(path, "r:*") as t:
             t.extractall(dest, filter="data")
-            out = [os.path.join(dest, m.name) for m in t.getmembers() if m.isfile()]
     elif low.endswith((".tar.zst", ".tzst")):
         # reference fixtures include zstd-tar (files.py:45-96); the
         # stdlib has no zstd codec, so gate behind the zstandard package
@@ -93,10 +129,9 @@ def extract(path: str, dest: str | None = None) -> list[str]:
         try:
             with tarfile.open(tmp_tar, "r:") as t:
                 t.extractall(dest, filter="data")
-                out = [os.path.join(dest, m.name) for m in t.getmembers() if m.isfile()]
         finally:
             os.unlink(tmp_tar)
-    elif low.endswith(".7z"):
+    else:  # .7z
         try:
             import py7zr
         except ImportError as e:
@@ -105,11 +140,19 @@ def extract(path: str, dest: str | None = None) -> list[str]:
             ) from e
         with py7zr.SevenZipFile(path) as z:
             z.extractall(dest)
-        for root, _dirs, names in os.walk(dest):
-            out.extend(os.path.join(root, n) for n in names)
-    else:
+
+
+def extract(path: str) -> list[str]:
+    """Unpack a zip/tar/7z archive; returns the paths of its member
+    files (symlinks left out), the same on every call while the
+    archive is unchanged."""
+    local = _to_local(path)
+    if not is_archive(local):
         raise ValueError(f"not a recognized archive: {path!r}")
-    return sorted(out)
+    dest = _snapshot_dir(local, lambda d: _unpack(local, d))
+    return sorted(
+        p for root, _dirs, names in os.walk(dest)
+        for p in (os.path.join(root, n) for n in names) if not os.path.islink(p))
 
 
 def _decompress_single(path: str) -> str:
@@ -122,9 +165,8 @@ def _decompress_single(path: str) -> str:
 
     local = _to_local(path)
     low = local.lower()
-    dest = tempfile.mkdtemp(prefix="biosets_decomp_")
     if low.endswith(".xz"):
-        opener = lzma.open(local, "rb")
+        opener = lzma.open
         base = os.path.basename(local)[: -len(".xz")]
     else:  # .zst / .zstd
         try:
@@ -134,18 +176,16 @@ def _decompress_single(path: str) -> str:
                 f"reading {path!r} requires the 'zstandard' package "
                 "(pip install zstandard)"
             ) from e
-        opener = zstandard.open(local, "rb")
+        opener = zstandard.open
         base = os.path.basename(local)
         base = base[: -len(".zstd")] if low.endswith(".zstd") \
             else base[: -len(".zst")]
-    out = os.path.join(dest, base)
-    with opener as src, open(out, "wb") as dst:
-        while True:
-            chunk = src.read(1 << 20)
-            if not chunk:
-                break
-            dst.write(chunk)
-    return out
+
+    def fill(dest: str) -> None:
+        with opener(local, "rb") as src, open(os.path.join(dest, base), "wb") as dst:
+            shutil.copyfileobj(src, dst, 1 << 20)
+
+    return os.path.join(_snapshot_dir(local, fill), base)
 
 
 _SINGLE_DECOMP_EXTS = (".xz", ".zst", ".zstd")

@@ -17,19 +17,23 @@ An entry is keyed by (session, identity, snapshot):
 - a snapshot of the inputs, ``(path, size, mtime_ns)`` per file, so an
   in-place rewrite is a miss without a manual refresh.
 
-An entry can also carry a driver fact derived from memoized relations
-(``fact``): the collected feature-metadata rows and the inferred label
-dictionary of ``load_dataset``, which a reload of unchanged files would
-otherwise recompute with Spark jobs. A fact is keyed by (session,
-("fact", name, identities of its inputs), snapshots of its inputs), so
-a rewrite of any input is a miss, like the relation's own.
+An entry can also carry a fact derived from memoized relations
+(``fact``). ``load_dataset`` keeps three kinds there: the collected
+feature-metadata rows and the inferred label dictionary, which a
+reload of unchanged files would otherwise recompute with Spark jobs,
+and each split's built frame, which it would otherwise rebuild on the
+driver. A fact is keyed by (session, ("fact", name, identities of its
+inputs), snapshots of its inputs), so a rewrite of any input is a
+miss, like the relation's own.
 
 A miss evicts the superseded snapshots of the same (session, identity),
 so a rewrite loop cannot grow the memo, and the memo holds at most
 ``MAX_RELATIONS`` entries, facts included, least recently used dropped
 first. It holds lazy DataFrames and small immutable driver values
-only: no data is pinned on the cluster, and ``pins.release()`` and
-``clearCache()`` do not touch it. ``tables.refresh()`` clears it.
+only: no data is pinned on the cluster, no memoized plan reads a pin
+(a plan that pins, like the J2 positional join, is built on every
+load), and ``pins.release()`` and ``clearCache()`` do not touch it.
+``tables.refresh()`` clears it.
 """
 
 from __future__ import annotations
@@ -40,8 +44,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# archive members are unpacked into a fresh scratch directory on every
-# load, so their keys never repeat; the bound keeps those from piling up
+# superseded snapshots are evicted on a miss; the bound caps what
+# distinct files and load arguments add
 MAX_RELATIONS = 128
 
 # (session key, identity, snapshot) -> resolved lazy DataFrame or

@@ -526,15 +526,18 @@ def test_role_tagging_projection_count_is_width_invariant(spark, tmp_path):
     assert projects[4] == projects[64]
 
 
-def _write_small_cohort(d, fmt: str, targets: str = "abab", symbols: str = "AB") -> None:
-    """Four samples x two features, sample metadata with one target
-    label per character of ``targets`` (a fifth one is a sample no data
-    row has) and feature metadata with one symbol per feature."""
+def _write_small_cohort(d, fmt: str, targets: str = "abab", symbols: str = "AB",
+                        g1: str = "1234") -> None:
+    """Four samples x two features, with one digit of ``g1`` per sample
+    for the first feature, sample metadata with one target label per
+    character of ``targets`` (a fifth one is a sample no data row has)
+    and feature metadata with one symbol per feature (a third one is a
+    feature no data column has)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     d.mkdir(exist_ok=True)
-    data = {"sample": ["s1", "s2", "s3", "s4"], "g1": [1, 2, 3, 4], "g2": [5, 6, 7, 8]}
+    data = {"sample": ["s1", "s2", "s3", "s4"], "g1": [int(c) for c in g1], "g2": [5, 6, 7, 8]}
     if fmt == "parquet":
         pq.write_table(pa.table(data), str(d / "counts.parquet"))
     else:
@@ -603,9 +606,10 @@ def test_reload_with_inferred_labels_submits_no_job(spark, tmp_path, count_jobs,
 
 
 def test_same_size_rewrite_invalidates_load_facts(spark, tmp_path):
-    """Rewriting a metadata file in place with the same size is a miss
-    of the facts derived from it: one label changed gives the new
-    dictionary, one symbol changed gives the new J4 metadata."""
+    """Rewriting a data or metadata file in place with the same size is
+    a miss of the facts and the plan derived from it: one label changed
+    gives the new dictionary, one symbol changed gives the new J4
+    metadata, one data value changed gives the new value."""
     d = tmp_path / "cohort"
     _write_small_cohort(d, "csv")
     size = (d / "sample_metadata.csv").stat().st_size
@@ -620,6 +624,9 @@ def test_same_size_rewrite_invalidates_load_facts(spark, tmp_path):
     assert load()[2] == {"g1": {"symbol": "A"}, "g2": {"symbol": "B"}}
     _write_small_cohort(d, "csv", targets="abac", symbols="AC")
     assert load()[2] == {"g1": {"symbol": "A"}, "g2": {"symbol": "C"}}
+    _write_small_cohort(d, "csv", targets="abac", symbols="AC", g1="9234")
+    rows = load_dataset(path=str(d), spark=spark).head(4)
+    assert {r["sample"]: r["g1"] for r in rows}["s1"] == 9
 
 
 def test_label_dictionary_is_computed_on_the_joined_frame(spark, tmp_path, count_jobs):
@@ -664,3 +671,150 @@ def test_materialize_reads_back_with_the_written_schema(spark, tmp_path, count_j
         assert [(f.name, f.dataType, f.metadata) for f in out.df.schema] == want
         assert all(f.nullable for f in out.df.schema)
     assert sorted(map(tuple, hit.df.collect())) == sorted(map(tuple, ds.df.collect()))
+
+
+def _load_small(d, count_jobs=None, **kw):
+    def load():
+        return load_dataset(path=str(d), **kw)
+    return count_jobs(load) if count_jobs else load()
+
+
+def test_reload_returns_the_memoized_plan(spark, tmp_path, count_jobs):
+    """Each split's built frame is a fact of its relations: a repeat
+    load of unchanged files returns the same frame in a fresh wrapper,
+    submits no job and pins nothing; split= slicing still applies."""
+    from biosets_spark import pins
+
+    d = tmp_path / "cohort"
+    _write_small_cohort(d, "csv")
+    first, _ = _load_small(d, count_jobs, spark=spark)
+    pinned = list(pins._PINS)
+    again, warm = _load_small(d, count_jobs, spark=spark)
+    assert warm == 0
+    assert again.df is first.df and again is not first
+    assert pins._PINS == pinned
+    first.split = "changed"
+    assert again.split == "train"
+    head = _load_small(d, spark=spark, split="train[:2]")
+    assert head.df is not first.df and head.num_rows == 2
+
+
+@pytest.mark.parametrize("change", [
+    {"labels": ["b", "a"]},
+    {"target_column": "sample"},
+    {"add_missing_columns": True},
+    {"infer_schema": False},
+])
+def test_a_plan_shaping_argument_is_a_miss(spark, tmp_path, change):
+    """A load that differs in labels=, target_column=,
+    add_missing_columns= or a reader option builds its own plan, and
+    the plan of the first load is still served unchanged."""
+    import warnings as W
+
+    d = tmp_path / "cohort"
+    _write_small_cohort(d, "csv", symbols="ABC")
+    with W.catch_warnings():
+        W.simplefilter("ignore")
+        base = _load_small(d, spark=spark)
+        other = _load_small(d, spark=spark, **change)
+        again = _load_small(d, spark=spark)
+    assert other.df is not base.df and again.df is base.df
+    df = other.df
+    if "labels" in change:
+        assert roles.get_labels(df, "encoded_labels") == ["b", "a"]
+    elif "target_column" in change:
+        assert roles.get_labels(df, "encoded_labels") == ["s1", "s2", "s3", "s4"]
+    elif "add_missing_columns" in change:
+        assert "g3" in df.columns and "g3" not in base.df.columns
+    else:
+        assert df.schema["g1"].dataType.simpleString() == "string"
+        assert base.df.schema["g1"].dataType.simpleString() == "int"
+
+
+def test_a_memoized_plan_replays_its_warnings(spark, tmp_path, monkeypatch, count_jobs):
+    """The warnings a plan's build raised (an inferred feature-metadata
+    key, rows matching no data column) are raised again by every load
+    that is served the plan, and the row-count warning is judged on
+    every load."""
+    import warnings as W
+
+    import biosets_spark.load as load_mod
+
+    d = tmp_path / "cohort"
+    _write_small_cohort(d, "csv")
+    (d / "feature_metadata.csv").write_text("gene,symbol\nx1,A\nx2,B\nx3,C\n")
+    monkeypatch.setattr(load_mod, "FEATURE_METADATA_WARN_ROWS", 2)
+    frames, jobs = [], []
+    for _ in range(2):
+        with W.catch_warnings(record=True) as caught:
+            W.simplefilter("always")
+            ds, n = _load_small(d, count_jobs, spark=spark)
+        frames.append(ds.df)
+        jobs.append(n)
+        text = " | ".join(str(w.message) for w in caught)
+        assert "key column inferred as 'gene'" in text
+        assert "no matching data column: ['x1', 'x2', 'x3']" in text
+        assert "has 3 rows" in text
+    assert frames[1] is frames[0] and jobs[1] == 0
+
+
+def test_positional_and_mixed_format_loads_build_every_time(spark, tmp_path):
+    """A J2 positional join pins its row index and a mixed-format load
+    reads through a union the memo did not return: neither plan is
+    memoized, and each load stays correct after every pin is
+    released."""
+    import warnings as W
+
+    from biosets_spark import pins
+    from biosets_spark.sources import relations
+
+    pos = tmp_path / "positional"
+    pos.mkdir()
+    (pos / "data.csv").write_text("header1,header2\n1,10\n2,20\n")
+    (pos / "sample_metadata.csv").write_text("batch,target\nb1,a\nb2,b\n")
+    mixed = tmp_path / "mixed"
+    _write_small_cohort(mixed, "parquet")
+    (mixed / "more.csv").write_text("sample,g1,g2\ns5,9,9\n")
+    loads = {
+        "positional": lambda: load_dataset(path=str(pos), spark=spark),
+        "mixed": lambda: load_dataset(
+            data_files=[str(mixed / "counts.parquet"), str(mixed / "more.csv")],
+            sample_metadata_files=[str(mixed / "sample_metadata.csv")],
+            labels=["a", "b"], spark=spark),
+    }
+    relations.clear()
+    for name, load in loads.items():
+        with W.catch_warnings():
+            W.simplefilter("ignore")
+            first = load()
+            want = sorted(map(tuple, first.df.collect()))
+            pins.release()
+            again = load()
+        assert again.df is not first.df, name
+        assert sorted(map(tuple, again.df.collect())) == want, name
+        pins.release()
+    assert not [k for k in relations._RELATIONS
+                if k[1][0] == "fact" and k[1][1][0] == "split_plan"]
+
+
+def test_two_splits_share_the_resolved_feature_key_on_a_hit(spark, tmp_path, count_jobs):
+    """The J5 key the first split resolves by value containment keys
+    the second split's metadata too; a repeat load gives what the cold
+    load gave, although the second split alone would resolve another
+    key."""
+    d = tmp_path / "cohort"
+    d.mkdir()
+    (d / "train-counts.csv").write_text("sample,g1,g2\ns1,1,5\ns2,2,6\n")
+    (d / "test-counts.csv").write_text("sample,g1\ns3,3\n")
+    (d / "feature_metadata.csv").write_text("alias,gene,symbol\ng1,g1,A\nzz,g2,B\n")
+
+    def load():
+        out = load_dataset(data_files=[str(d / "train-counts.csv"), str(d / "test-counts.csv")],
+                           feature_metadata_files=[str(d / "feature_metadata.csv")], spark=spark)
+        return {s: roles.roles_snapshot(out[s].df) for s in ("train", "test")}, out
+
+    (cold, first), _ = count_jobs(load)
+    (warm, again), jobs = count_jobs(load)
+    assert jobs == 0 and again["test"].df is first["test"].df
+    assert warm == cold
+    assert cold["test"]["g1"][roles.META_KEY] == {"alias": "g1", "symbol": "A"}

@@ -135,3 +135,47 @@ def test_arrow_udf_runs_from_foreign_working_directory(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     assert "apply_session_conf ['feature']" in out.stdout
     assert "get_spark ['feature']" in out.stdout
+
+
+class _LockedConf:
+    """A session conf that refuses some keys with ``error``."""
+
+    def __init__(self, refused, error):
+        self.values = {"spark.sql.shuffle.partitions": "200"}
+        self.refused, self.error = refused, error
+
+    def set(self, key, value):
+        if key in self.refused:
+            raise self.error
+        self.values[key] = value
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+
+def test_apply_session_conf_keeps_refused_confs_and_raises_the_rest(spark):
+    """A conf the session refuses (Spark's AnalysisException) keeps the
+    session's value and the other confs are still set; any other error
+    from ``conf.set`` propagates."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        spark.conf.set("spark.sql.warehouse.dir", "/elsewhere")
+    except AnalysisException as e:
+        refusal = e
+    locked = "spark.sql.autoBroadcastJoinThreshold"
+
+    def session(error):
+        conf = _LockedConf({locked}, error)
+        env = {}
+        return SimpleNamespace(conf=conf, sparkContext=SimpleNamespace(environment=env)), conf
+
+    fake, conf = session(refusal)
+    assert apply_session_conf(fake) is fake
+    assert locked not in conf.values
+    assert conf.values["spark.sql.shuffle.partitions"] == "32"
+    assert conf.values["spark.sql.codegen.maxFields"] == "400"
+    assert "spark.sql.streaming.stateStore.providerClass" in conf.values
+    fake, _ = session(RuntimeError("py4j gateway is gone"))
+    with pytest.raises(RuntimeError, match="gateway"):
+        apply_session_conf(fake)

@@ -1128,23 +1128,69 @@ def test_read_files_memoizes_only_stat_able_native_reads(spark, tmp_path):
 
 
 def test_relation_memo_stays_at_its_bound(spark, tmp_path, monkeypatch):
-    """Archive members are unpacked to a fresh scratch directory on
-    every load, so each load is a new memo key; the memo drops its
+    """Each rewrite of an archive is unpacked to a directory of its
+    own, so each load of a rewritten zip stores new memo entries (its
+    relation, label dictionary and split plan); the memo drops its
     oldest entries to stay at MAX_RELATIONS."""
     from biosets_spark.sources import relations
 
     monkeypatch.setattr(relations, "MAX_RELATIONS", 3)
     zp = tmp_path / "data.zip"
-    with zipfile.ZipFile(zp, "w") as z:
-        z.writestr("data.csv", "sample,h1,target\ns1,1,a\ns2,2,b\n")
-    facts = 0
-    for _ in range(5):
+    kinds = []
+    for i in range(5):
+        with zipfile.ZipFile(zp, "w") as z:
+            z.writestr("data.csv", f"sample,h1,target\ns1,1,a\ns2,{i},b\n")
         assert load_dataset(data_files=[str(zp)], spark=spark).num_rows == 2
         assert len(relations._RELATIONS) <= 3
-        facts += any(k[1][0] == "fact" for k in relations._RELATIONS)
+        kinds.append({k[1][1][0] for k in relations._RELATIONS if k[1][0] == "fact"})
     assert len(relations._RELATIONS) == 3
-    # each load's label dictionary is a fact sharing the same bound
-    assert facts == 5
+    # each load's label dictionary and plan are facts sharing the bound
+    assert kinds == [{"label_dictionary", "split_plan"}] * 5
+
+
+def test_archive_is_unpacked_once_per_snapshot(tmp_path, monkeypatch):
+    """An unchanged archive or lone .xz file expands to the same member
+    paths on every call, from one directory; a rewrite gets new members
+    and removes the old directory; a failed unpack leaves nothing."""
+    import lzma
+    import os
+
+    from biosets_spark.sources import archives
+
+    scratch = tmp_path / "scratch"
+    monkeypatch.setattr(archives, "_SCRATCH", str(scratch))
+    zp, xz = tmp_path / "bundle.zip", tmp_path / "t.csv.xz"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("data.csv", "a,b\n1,2\n")
+    xz.write_bytes(lzma.compress(b"a\n1\n"))
+    first = expand_paths([str(zp), str(xz)])
+    assert expand_paths([str(zp), str(xz)]) == first
+    assert len(os.listdir(scratch)) == 2
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("data.csv", "a,b\n3,4\n")
+    second = expand_paths([str(zp)])
+    assert second != first[:1] and open(second[0]).read() == "a,b\n3,4\n"
+    assert not os.path.exists(first[0]) and len(os.listdir(scratch)) == 2
+    bad = tmp_path / "bad.zip"
+    bad.write_bytes(b"not a zip")
+    with pytest.raises(zipfile.BadZipFile):
+        extract(str(bad))
+    assert len(os.listdir(scratch)) == 2
+
+
+def test_reload_of_an_archived_cohort_submits_no_job(spark, tmp_path, count_jobs):
+    zp = tmp_path / "data.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("data.csv", "sample,h1,target\ns1,1,a\ns2,2,b\n")
+
+    def load():
+        return load_dataset(data_files=[str(zp)], spark=spark)
+
+    first, cold = count_jobs(load)
+    again, warm = count_jobs(load)
+    assert cold > 0 and warm == 0
+    assert again.df is first.df
+    assert sorted(r["encoded_labels"] for r in again.head(2)) == [0, 1]
 
 
 def test_relation_fact_is_memoized_with_its_inputs(spark, tmp_path):
