@@ -299,11 +299,13 @@ def load_dataset(
     fill_type = roles.FEATURE_TYPES.get(feature_type or "")
     multi_shard = len(data_files) > 1
     # every argument that shapes a split's plan (experiment_type through
-    # the feature and fill types it resolves to); reader options are
-    # part of the data relation's identity
+    # the feature type it resolves to); reader options are part of the
+    # data relation's identity. Labels are keyed with their types: 0,
+    # 0.0 and False are equal but encode differently, and a bare
+    # string is not the list of its characters
     plan_args = (
-        feature_type, fill_type, sample_column, batch_column, target_column,
-        *(None if x is None else tuple(x)
+        feature_type, sample_column, batch_column, target_column,
+        *(None if x is None else (type(x).__name__, tuple((type(v).__name__, v) for v in x))
           for x in (labels, positive_labels, negative_labels)),
         add_missing_columns, zero_as_missing, multi_shard)
 

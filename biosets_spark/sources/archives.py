@@ -13,11 +13,18 @@ the normal extension-dispatch readers take over. At 100 TB the
 recommendation stands: unpack once at ingest, store Parquet.
 
 Each archive snapshot, ``(realpath, size, mtime_ns)``, is unpacked
-once into a directory of its own under the system temp directory and
-reused while the archive is unchanged: its members keep their paths,
-so a reload hits the source-relation memo (sources/relations.py). A
-rewritten archive is unpacked afresh and its superseded directory
-removed.
+once into a directory of its own and reused while the archive is
+unchanged: its members keep their paths, so a reload hits the
+source-relation memo (sources/relations.py). The snapshots live in a
+per-user directory under the system temp directory, owned by the user
+and closed to everyone else (mode 0700); if that directory cannot be
+made or fails the check (another owner, a symlink, other modes), each
+call unpacks into a private ``mkdtemp`` directory instead, and its
+members get new paths every time. A rewritten archive is unpacked
+afresh; its superseded directories are removed once they are
+``_STALE_S`` old, not at once, because Spark reads lazily and a
+dataset loaded from an old snapshot (in this process or another one
+of the same user) still reads its members.
 """
 
 from __future__ import annotations
@@ -26,8 +33,10 @@ import hashlib
 import os
 import re
 import shutil
+import stat
 import tarfile
 import tempfile
+import time
 import urllib.parse
 import zipfile
 
@@ -68,8 +77,26 @@ def _to_local(path: str) -> str:
     return parsed.path
 
 
-# one directory per unpacked archive snapshot
-_SCRATCH = os.path.join(tempfile.gettempdir(), "biosets_unpack")
+# a superseded snapshot is removed once it is this old (seconds)
+_STALE_S = 24 * 3600
+
+
+def _scratch() -> str | None:
+    """This user's snapshot directory, made if absent; None unless it
+    is a real directory owned by the user with mode 0700, so that no
+    other user can have put (or can replace) a snapshot in it."""
+    path = os.path.join(tempfile.gettempdir(), f"biosets_unpack-{os.getuid()}")
+    try:
+        os.mkdir(path, 0o700)
+    except FileExistsError:
+        pass
+    except OSError:
+        return None
+    st = os.lstat(path)
+    if (stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid()
+            and stat.S_IMODE(st.st_mode) == 0o700):
+        return path
+    return None
 
 
 def _snapshot_dir(local: str, fill) -> str:
@@ -77,16 +104,26 @@ def _snapshot_dir(local: str, fill) -> str:
     named by its ``(realpath, size, mtime_ns)`` and reused while that
     is unchanged. It is filled under a temporary name and renamed into
     place, so a directory under a snapshot's name is complete. A new
-    snapshot removes the directories of the archive's older ones."""
+    snapshot removes the archive's older ones that are ``_STALE_S``
+    old. Without a trusted scratch directory every call fills a
+    private ``mkdtemp`` directory."""
+    scratch = _scratch()
+    if scratch is None:
+        tmp = tempfile.mkdtemp(prefix="biosets_unpack_")
+        try:
+            fill(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
     real = os.path.realpath(local)
     st = os.stat(real)
     tag = hashlib.sha256(real.encode()).hexdigest()[:16]
     name = f"{tag}-{st.st_size}-{st.st_mtime_ns}"
-    dest = os.path.join(_SCRATCH, name)
+    dest = os.path.join(scratch, name)
     if os.path.isdir(dest):
         return dest
-    os.makedirs(_SCRATCH, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f".{tag}-", dir=_SCRATCH)
+    tmp = tempfile.mkdtemp(prefix=f".{tag}-", dir=scratch)
     try:
         fill(tmp)
         os.rename(tmp, dest)
@@ -98,9 +135,15 @@ def _snapshot_dir(local: str, fill) -> str:
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
-    for old in os.listdir(_SCRATCH):
-        if old.startswith(tag + "-") and old != name:
-            shutil.rmtree(os.path.join(_SCRATCH, old), ignore_errors=True)
+    stale = time.time() - _STALE_S
+    for old in os.listdir(scratch):
+        path = os.path.join(scratch, old)
+        try:
+            if (old.startswith(tag + "-") and old != name
+                    and os.lstat(path).st_mtime < stale):
+                shutil.rmtree(path, ignore_errors=True)
+        except FileNotFoundError:  # removed by another caller meanwhile
+            pass
     return dest
 
 

@@ -699,36 +699,48 @@ def test_reload_returns_the_memoized_plan(spark, tmp_path, count_jobs):
     assert head.df is not first.df and head.num_rows == 2
 
 
-@pytest.mark.parametrize("change", [
-    {"labels": ["b", "a"]},
-    {"target_column": "sample"},
-    {"add_missing_columns": True},
-    {"infer_schema": False},
-])
-def test_a_plan_shaping_argument_is_a_miss(spark, tmp_path, change):
-    """A load that differs in labels=, target_column=,
-    add_missing_columns= or a reader option builds its own plan, and
-    the plan of the first load is still served unchanged."""
+@pytest.mark.parametrize("base, change", [
+    ({}, {"labels": ["b", "a"]}),
+    ({}, {"target_column": "sample"}),
+    ({}, {"add_missing_columns": True}),
+    ({}, {"infer_schema": False}),
+    ({"labels": [0, 1]}, {"labels": [0.0, 1.0]}),
+    ({"positive_labels": ["a", "b"]}, {"positive_labels": "ab"}),
+], ids=["labels", "target_column", "add_missing_columns", "infer_schema",
+        "label_types", "bare_string_labels"])
+def test_a_plan_shaping_argument_is_a_miss(spark, tmp_path, base, change):
+    """A load that differs in labels= (also only in the labels' types,
+    or a bare string for a list), target_column=, add_missing_columns=
+    or a reader option builds its own plan, and the plan of the first
+    load is still served unchanged."""
     import warnings as W
 
     d = tmp_path / "cohort"
-    _write_small_cohort(d, "csv", symbols="ABC")
+    _write_small_cohort(d, "csv", targets="0101" if "labels" in base else "abab",
+                        symbols="ABC")
     with W.catch_warnings():
         W.simplefilter("ignore")
-        base = _load_small(d, spark=spark)
+        first = _load_small(d, spark=spark, **base)
         other = _load_small(d, spark=spark, **change)
-        again = _load_small(d, spark=spark)
-    assert other.df is not base.df and again.df is base.df
+        again = _load_small(d, spark=spark, **base)
+    assert other.df is not first.df and again.df is first.df
     df = other.df
-    if "labels" in change:
+    if "positive_labels" in change:
+        # isin("ab") matches no label; the list matches both
+        assert [r["encoded_labels"] for r in df.head(4)] == [0] * 4
+        assert [r["encoded_labels"] for r in first.df.head(4)] == [1] * 4
+    elif "labels" in base:
+        assert [type(v) for v in roles.get_labels(df, "encoded_labels")] == [float, float]
+        assert [type(v) for v in roles.get_labels(first.df, "encoded_labels")] == [int, int]
+    elif "labels" in change:
         assert roles.get_labels(df, "encoded_labels") == ["b", "a"]
     elif "target_column" in change:
         assert roles.get_labels(df, "encoded_labels") == ["s1", "s2", "s3", "s4"]
     elif "add_missing_columns" in change:
-        assert "g3" in df.columns and "g3" not in base.df.columns
+        assert "g3" in df.columns and "g3" not in first.df.columns
     else:
         assert df.schema["g1"].dataType.simpleString() == "string"
-        assert base.df.schema["g1"].dataType.simpleString() == "int"
+        assert first.df.schema["g1"].dataType.simpleString() == "int"
 
 
 def test_a_memoized_plan_replays_its_warnings(spark, tmp_path, monkeypatch, count_jobs):

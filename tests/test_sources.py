@@ -1132,9 +1132,13 @@ def test_relation_memo_stays_at_its_bound(spark, tmp_path, monkeypatch):
     own, so each load of a rewritten zip stores new memo entries (its
     relation, label dictionary and split plan); the memo drops its
     oldest entries to stay at MAX_RELATIONS."""
+    import tempfile
+
     from biosets_spark.sources import relations
 
     monkeypatch.setattr(relations, "MAX_RELATIONS", 3)
+    # the superseded unpack directories stay; keep them under tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     zp = tmp_path / "data.zip"
     kinds = []
     for i in range(5):
@@ -1150,32 +1154,84 @@ def test_relation_memo_stays_at_its_bound(spark, tmp_path, monkeypatch):
 
 def test_archive_is_unpacked_once_per_snapshot(tmp_path, monkeypatch):
     """An unchanged archive or lone .xz file expands to the same member
-    paths on every call, from one directory; a rewrite gets new members
-    and removes the old directory; a failed unpack leaves nothing."""
+    paths on every call, from one directory the user alone can enter;
+    a rewrite gets new members, and the superseded directory stays
+    until it is _STALE_S old; a failed unpack leaves nothing."""
     import lzma
     import os
+    import tempfile
+    import time
 
     from biosets_spark.sources import archives
 
-    scratch = tmp_path / "scratch"
-    monkeypatch.setattr(archives, "_SCRATCH", str(scratch))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    scratch = tmp_path / f"biosets_unpack-{os.getuid()}"
     zp, xz = tmp_path / "bundle.zip", tmp_path / "t.csv.xz"
-    with zipfile.ZipFile(zp, "w") as z:
-        z.writestr("data.csv", "a,b\n1,2\n")
+
+    def write_zip(text, mtime_s):
+        with zipfile.ZipFile(zp, "w") as z:
+            z.writestr("data.csv", text)
+        os.utime(zp, (mtime_s, mtime_s))
+
+    write_zip("a,b\n1,2\n", 1_000_000)
     xz.write_bytes(lzma.compress(b"a\n1\n"))
     first = expand_paths([str(zp), str(xz)])
     assert expand_paths([str(zp), str(xz)]) == first
     assert len(os.listdir(scratch)) == 2
-    with zipfile.ZipFile(zp, "w") as z:
-        z.writestr("data.csv", "a,b\n3,4\n")
+    assert os.stat(scratch).st_mode & 0o777 == 0o700
+    write_zip("a,b\n3,4\n", 2_000_000)
     second = expand_paths([str(zp)])
     assert second != first[:1] and open(second[0]).read() == "a,b\n3,4\n"
-    assert not os.path.exists(first[0]) and len(os.listdir(scratch)) == 2
+    # a dataset loaded from the first snapshot may still read it
+    assert open(first[0]).read() == "a,b\n1,2\n" and len(os.listdir(scratch)) == 3
+    old = time.time() - archives._STALE_S - 1
+    os.utime(os.path.dirname(first[0]), (old, old))
+    write_zip("a,b\n5,6\n", 3_000_000)
+    third = expand_paths([str(zp)])
+    assert open(third[0]).read() == "a,b\n5,6\n"
+    assert not os.path.exists(first[0]) and os.path.exists(second[0])
+    assert len(os.listdir(scratch)) == 3
     bad = tmp_path / "bad.zip"
     bad.write_bytes(b"not a zip")
     with pytest.raises(zipfile.BadZipFile):
         extract(str(bad))
-    assert len(os.listdir(scratch)) == 2
+    assert len(os.listdir(scratch)) == 3
+
+
+@pytest.mark.parametrize("planted", ["other_owner", "symlink", "open_mode"])
+def test_an_untrusted_unpack_directory_is_not_used(tmp_path, monkeypatch, planted):
+    """A per-user unpack directory that another user owns, that is a
+    symlink or that others can enter is never read from or written
+    to: each call unpacks into a private directory of its own."""
+    import os
+    import tempfile
+
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    uid = os.getuid()
+    if planted == "other_owner":
+        # the directory is the caller's own; the loader runs as uid+1
+        monkeypatch.setattr(os, "getuid", lambda: uid + 1)
+    scratch = root / f"biosets_unpack-{os.getuid()}"
+    target = tmp_path / "elsewhere"
+    target.mkdir(mode=0o700)
+    if planted == "symlink":
+        scratch.symlink_to(target)
+    else:
+        scratch.mkdir(mode=0o700)
+        if planted == "open_mode":
+            scratch.chmod(0o755)
+    zp = tmp_path / "bundle.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("data.csv", "a,b\n1,2\n")
+    first, second = expand_paths([str(zp)]), expand_paths([str(zp)])
+    assert first != second
+    for (member,) in (first, second):
+        assert open(member).read() == "a,b\n1,2\n"
+        assert os.path.dirname(member).startswith(str(root / "biosets_unpack_"))
+        assert os.stat(os.path.dirname(member)).st_mode & 0o777 == 0o700
+    assert os.listdir(target) == [] and (planted == "symlink" or os.listdir(scratch) == [])
 
 
 def test_reload_of_an_archived_cohort_submits_no_job(spark, tmp_path, count_jobs):
