@@ -6,13 +6,14 @@ oracle_sql()   -> {name: DuckDB-runnable ANSI SQL} for value-hash compare
 
 Query implementations live in the biosets_spark/queries/ package
 (base relational inventory in __init__.py; dedup / similarity / text
-/ events / advanced waves in ext.py, more.py, wave3..wave100.py,
+/ events / advanced waves in ext.py, more.py, wave3..wave105.py,
 loaded in registration order by the package manifest); this module is
 a thin adapter.
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -57,263 +58,43 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Current build round (bump each round; drives the defer-age invariant
-# in tests/test_registry.py).
-_ROUND = 12
+def _green_rounds(directory: Path) -> dict[str, int]:
+    """Each query's green round, derived from the driver's committed
+    ``CORRECTNESS_rNN.json`` files in ``directory``.
 
-# Queries that already have GREEN driver CORRECTNESS rows, tagged with
-# the round their (latest) green row landed. The tag drives the
-# POST-DRAIN RE-VERIFICATION POLICY documented below the defer list:
-# from r8 on, spare window rows re-sample OLDEST tag first, and a
-# re-sampled name is re-tagged with the round its fresh green lands.
-# The driver records the first ~50 entries of queries(); registration
-# order puts everything NOT in this mapping first, so queries that
-# have never had a green driver row land inside the recorded window.
-# All queries keep their oracles either way.
-_DRIVER_CHECKED_TAGGED: dict[str, int] = {
-    # --- r1/r2 windows (tag 2 = last green in CORRECTNESS_r01/r02) ---
-    "q_scan_filter_project": 8, "q_cast_project": 8, "q_pricing_summary": 8,
-    "q_forecast_revenue": 8, "q_distinct_agg": 8, "q_rollup": 8, "q_cube": 8,
-    "q_quantiles": 8, "q_join_agg": 8, "q_top_orders": 8,
-    "q_left_join_histogram": 8, "q_semi_join": 8, "q_anti_join": 8,
-    "q_full_outer": 9, "q_meta_left_join": 9, "q_set_intersect": 9,
-    "q_set_except": 9, "q_union_promote": 9, "q_window_topk_per_group": 9,
-    "q_window_running_sum": 9, "q_window_lag_gap": 9, "q_ntile_kfold": 9,
-    "q_string_funcs": 9, "q_date_funcs": 9, "q_math_funcs": 9,
-    "q_json_funcs": 9, "q_array_funcs": 9, "q_label_encode": 9,
-    "q_label_binary": 9, "q_label_decode_roundtrip": 9, "q_dedup_exact": 9,
-    "q_dedup_fingerprint": 9, "q_dedup_ngram_jaccard": 9,
-    "q_dedup_minhash_lsh": 9, "q_dedup_simhash": 9, "q_knn_bruteforce": 9,
-    "q_knn_pairs": 9, "q_knn_lsh": 9, "q_text_tokens": 9, "q_text_quality": 9,
-    "q_lang_distribution": 9, "q_events_hourly": 9, "q_events_sessions": 9,
-    "q_events_dedup_stateful": 9, "q_multimodal_binary": 9, "q_knn_ivf": 9,
-    "q_asof_join": 9, "q_cross_join": 9, "q_range_join": 9,
-    "q_flatten_struct": 9,
-    # --- r3 window (48 green, CORRECTNESS_r03.json) ---
-    "q_dedup_ngram_jaccard_bounded": 9, "q_slice_offset": 9, "q_pivot": 9,
-    "q_having": 9, "q_grouping_sets": 9, "q_join_renamed_keys": 9,
-    "q_join_multi_key": 10, "q_sort_nulls": 10, "q_union_type_promotion": 10,
-    "q_join_salted": 10, "q_events_funnel": 10, "q_events_retention": 10,
-    "q_text_langid": 10, "q_text_quality_score": 10, "q_text_bpe_tokens": 10,
-    "q_window_first_last": 10, "q_events_sliding": 10,
-    "q_grouped_map_normalize": 10, "q_approx_distinct": 10,
-    "q_term_doc_freq": 10, "q_dedup_clusters": 10, "q_window_range_frame": 10,
-    "q_pipeline_clean_corpus": 10, "q_dedup_embedding": 10,
-    "q_exists_subquery": 10, "q_scalar_subquery": 10,
-    "q_not_exists_customers": 10, "q_knn_quantized": 10, "q_events_multires": 10,
-    "q_events_gapfill": 10, "q_stratified_sample": 10, "q_mix_resample": 10,
-    "q_pack_sequences": 10, "q_top_ngrams": 10, "q_contamination": 10,
-    "q_chunk_stats": 10, "q_quality_gopher": 10, "q_text_repetition": 10,
-    "q_text_entropy": 10, "q_pii_redact": 10, "q_bm25_topk": 10,
-    "q_volume_shipping": 10, "q_market_share": 10, "q_returned_items": 10,
-    "q_promo_effect": 10, "q_large_orders": 11, "q_order_priority_check": 11,
-    "q_product_profit": 11,
-    # --- r4 window (50/50 green, CORRECTNESS_r04.json) ---
-    "q_collect_list": 11, "q_quantize_embeddings": 11,
-    "q_important_suppliers": 11, "q_ship_delay_priority": 11,
-    "q_top_supplier": 11, "q_supplier_part_variety": 11,
-    "q_disjunctive_filter": 11, "q_excess_parts_suppliers": 11,
-    "q_waiting_suppliers": 11, "q_min_cost_supplier": 11, "q_vocab_stats": 11,
-    "q_token_pmi": 11, "q_mix_temperature": 11, "q_order_count_distribution": 11,
-    "q_small_quantity_revenue": 11, "q_idle_rich_customers": 11,
-    "q_unigram_surprise": 11, "q_script_ratio": 11, "q_head_coverage": 11,
-    "q_mann_whitney": 11, "q_shard_assignment": 11, "q_cohens_kappa": 11,
-    "q_k_anonymity": 11, "q_l_diversity": 11, "q_feature_hash_collisions": 11,
-    "q_partial_correlation": 11, "q_hhi_concentration": 11, "q_cohort_ltv": 11,
-    "q_abc_xyz": 11, "q_graph_assortativity": 11, "q_powerlaw_alpha": 11,
-    "q_heaps_law": 11, "q_word_adaptation": 11, "q_retention_half_life": 11,
-    "q_peak_concurrency": 11, "q_power_analysis": 11, "q_odds_ratio": 11,
-    "q_mcnemar_paired": 11, "q_threshold_sweep": 11, "q_calibration_bins": 11,
-    "q_stratified_effect": 11, "q_anova_oneway": 4, "q_diff_in_diff": 4,
-    "q_capture_recapture": 4, "q_cramers_v": 4, "q_round_price_bias": 4,
-    "q_skyline_orders": 4, "q_knee_point": 4, "q_control_chart": 4,
-    "q_seasonal_strength": 4,
-    # --- r5 window (50/50 green, CORRECTNESS_r05.json) ---
-    "q_span_dedup": 5, "q_containment": 5, "q_keep_latest_event": 5,
-    "q_sessionize_batch": 5, "q_unpivot_measures": 5, "q_percent_rank": 5,
-    "q_corr_exact": 5, "q_length_histogram": 5, "q_levenshtein_brands": 5,
-    "q_events_anomaly": 5, "q_winsorize": 5, "q_tfidf_keywords": 5,
-    "q_zipf_slope": 5, "q_random_projection": 5, "q_cohort_retention": 5,
-    "q_quick_succession": 5, "q_grouping_id": 5, "q_token_fertility": 5,
-    "q_source_quality_matrix": 5, "q_dup_rate_by_source": 5,
-    "q_langid_confusion": 5, "q_activity_streaks": 5,
-    "q_minhash_estimate_quality": 5, "q_span_dedup_applied": 5,
-    "q_incremental_dedup": 5, "q_ann_recall_audit": 5, "q_bigram_surprise": 5,
-    "q_cogroup_reconcile": 5, "q_mad_outliers": 5, "q_group_sample": 5,
-    "q_approx_quantile_audit": 5, "q_countmin_audit": 5,
-    "q_label_centroids": 5, "q_equal_freq_bins": 5, "q_time_weighted_avg": 5,
-    "q_hll_portable_audit": 5, "q_rolling_active_users": 5,
-    "q_first_touch_attribution": 5, "q_basket_pairs": 5, "q_rfm_segments": 5,
-    "q_event_transitions": 5, "q_revenue_share": 5, "q_yoy_growth": 5,
-    "q_weekly_percentiles": 5, "q_ship_latency_histogram": 5, "q_ks_drift": 5,
-    "q_psi_drift": 5, "q_chi2_assoc": 5, "q_ewma_daily": 5,
-    "q_weighted_sample": 5,
-    # --- r6 window (50/50 green, CORRECTNESS_r06.json) ---
-    "q_scd2_pit_join": 6, "q_pagerank_nations": 6, "q_centroid_confusion": 6,
-    "q_dup_graph_degree": 6, "q_lift_rules": 6, "q_interval_overlap": 6,
-    "q_triangle_count": 6, "q_simjoin_names": 6, "q_bloom_audit": 6,
-    "q_column_profile": 6, "q_ngram_novelty": 6, "q_funnel_latency": 6,
-    "q_referential_audit": 6, "q_crosslingual_dup": 6,
-    "q_quantile_normalize": 6, "q_clr_transform": 6, "q_alpha_diversity": 6,
-    "q_bray_curtis": 6, "q_feature_correlation": 6, "q_pca_power": 6,
-    "q_cusum_changepoint": 6, "q_sax_symbolize": 6, "q_ab_test_z": 6,
-    "q_survival_km": 6, "q_bootstrap_ci": 6, "q_welch_ttest": 6,
-    "q_ols_normal_eq": 6, "q_interval_union": 6, "q_weighted_median": 6,
-    "q_gini_revenue": 6, "q_decile_lift": 6, "q_autocorrelation": 6,
-    "q_theil_sen": 6, "q_spearman_corr": 6, "q_benford_digits": 6,
-    "q_mutual_information": 6, "q_skew_kurtosis": 6, "q_rolling_median": 6,
-    "q_zorder_layout": 6, "q_readability": 6, "q_rarefaction": 6,
-    "q_core_prevalence": 6, "q_auc_roc": 6, "q_good_turing": 6,
-    "q_session_paths": 6, "q_log2_histogram": 6, "q_jackknife_variance": 6,
-    "q_entropy_rate": 6, "q_seasonal_index": 6, "q_burstiness": 6,
-    # --- r7 window (50/50 green, CORRECTNESS_r07.json) ---
-    "q_heldout_perplexity": 7, "q_forecast_backtest": 7, "q_dispersion_index": 7,
-    "q_price_index": 7, "q_mann_kendall": 7, "q_gumbel_maxima": 7,
-    "q_kendall_tau": 7, "q_hodges_lehmann": 7, "q_simpson_paradox": 7,
-    "q_recency_value": 7, "q_burrows_delta": 7, "q_renyi_spectrum": 7,
-    "q_vocab_overlap": 7, "q_interarrival_fit": 7, "q_dedup_truncation": 7,
-    "q_embedding_norms": 7, "q_embedding_anisotropy": 7, "q_session_conversion": 7,
-    "q_label_separation": 7, "q_knn_loo_eval": 7, "q_stump_split": 7,
-    "q_eta2_scan": 7, "q_skipgram_pmi": 7, "q_char_trigram_profile": 7,
-    "q_cross_entropy_sources": 7, "q_runs_test": 7, "q_js_divergence": 7,
-    "q_sprt_monitor": 7, "q_hill_tail": 7, "q_wilcoxon_signed_rank": 7,
-    "q_cochran_q": 7, "q_friedman_test": 7, "q_theil_decomposition": 7,
-    "q_jarque_bera": 7, "q_theils_u": 7, "q_unit_root_ar1": 7,
-    "q_mde_planner": 7, "q_vocab_turnover": 7, "q_rank_churn": 7,
-    "q_kendall_rankings": 7, "q_atkinson_index": 7, "q_overdispersion": 7,
-    "q_collocation_llr": 7, "q_tost_equivalence": 7, "q_cpk_capability": 7,
-    "q_trimmed_mean": 7, "q_matthews_mcc": 7, "q_brier_decomposition": 7,
-    "q_levene_bf": 7, "q_grubbs_test": 7,
-    # --- r8 window (50/50 green, CORRECTNESS_r08.json: 3 debuts +
-    # 34 backlog drains below; plus 13 tag-2 re-samples re-tagged 8
-    # in the r1/r2 block above per the post-drain policy) ---
-    "q_page_trend": 8, "q_cvar_shortfall": 8, "q_fleiss_kappa": 8,
-    "q_icc_reliability": 8, "q_average_precision": 8, "q_ndcg_at_100": 8,
-    "q_cochran_armitage": 8, "q_moods_median": 8, "q_fisher_z_diff": 8,
-    "q_welch_anova": 8, "q_capm_beta": 8, "q_max_drawdown": 8,
-    "q_hurst_exponent": 8, "q_jain_fairness": 8, "q_neyman_allocation": 8,
-    "q_mixture_gap": 8, "q_youden_cutpoint": 8, "q_hosmer_lemeshow": 8,
-    "q_mantel_haenszel": 8, "q_meta_heterogeneity": 8,
-    "q_bonferroni_family": 8, "q_bh_fdr": 8, "q_log_rank_test": 8, "q_rmst": 8,
-    "q_cuped_adjustment": 8, "q_winsor_variance_gain": 8, "q_eb_shrinkage": 8,
-    "q_kish_ess": 8, "q_covariate_balance": 8, "q_e_value": 8,
-    "q_sharpe_revenue": 8, "q_price_dispersion": 8, "q_chao1_richness": 8,
-    "q_doubling_time": 8, "q_bom_explosion": 8, "q_merge_upsert": 8,
-    "q_event_interval_join": 8,
-    # --- r9 window (50/50 green, CORRECTNESS_r09.json: 7 debuts
-    # below; plus 37 tag-2 + 6 tag-3 re-samples re-tagged 9 in their
-    # original blocks above per the post-drain policy) ---
-    "q_multimodal_jpeg_dims": 9, "q_multimodal_av_info": 9,
-    "q_table_skipping": 9, "q_kmeans_lloyd": 9, "q_dedup_semantic": 9,
-    "q_prototype_prune": 9, "q_pipeline_curated_corpus": 9,
-    # --- r10 window (50/50 green, CORRECTNESS_r10.json: 11 debuts
-    # below; plus 39 tag-3 re-samples re-tagged 10 in their original
-    # blocks above per the post-drain policy) ---
-    "q_text_normalize": 10, "q_vocab_coverage": 10, "q_asof_tolerance": 10,
-    "q_lsh_bucket_stats": 10, "q_doc_outliers_zscore": 10,
-    "q_dedup_budget_allocation": 10, "q_knn_batch": 10,
-    "q_ivf_cell_balance": 10, "q_corpus_report": 10,
-    "q_change_feed_diff": 10, "q_pipeline_funnel": 10,
-    # --- r11 window (50/50 green, CORRECTNESS_r11.json: 6 debuts
-    # below; plus 3 tag-3 + 41 tag-4 re-samples re-tagged 11 in their
-    # original blocks above per the post-drain policy) ---
-    "q_fingerprint_cache_reuse": 11, "q_pq_code_balance": 11,
-    "q_pq_knn": 11, "q_pq_recall_audit": 11, "q_pq_knn_rerank": 11,
-    "q_components_user_chains": 11,
-}
-
-_DRIVER_CHECKED = frozenset(_DRIVER_CHECKED_TAGGED)
+    The driver records only the first ~50 entries of ``queries()``, so
+    the order decides which rows it re-checks. Files are read in
+    ascending round order; a name's tag is the last round whose row
+    has ``rows_match``, ``schema_match`` and ``hash_match`` all true.
+    A name whose latest row is red loses its tag until a later round
+    is green again, so, like a never-checked name, it sorts into the
+    front of the window. Tagged names follow oldest green first: spare
+    window rows re-check the stalest rows, and a fresh file moves its
+    names to the back with no hand upkeep.
+    """
+    files = sorted((int(p.stem.removeprefix("CORRECTNESS_r")), p)
+                   for p in directory.glob("CORRECTNESS_r*.json"))
+    tags: dict[str, int] = {}
+    for rnd, path in files:
+        for name, row in json.loads(path.read_text()).items():
+            if all(row.get(k) for k in ("rows_match", "schema_match", "hash_match")):
+                tags[name] = rnd
+            else:
+                tags.pop(name, None)
+    return tags
 
 
-# Never-driver-checked queries that do NOT fit in this round's ~50-row
-# window. The backlog (judge-verified green in the full local oracle
-# re-run every round) rotates through the driver window at ~50/round:
-# round 7's front block is the 50 oldest backlog names (the r6
-# defer-list head); the 34 entries below are the tail, scheduled as
-# the FIRST 34 rows of the r8 window. Each entry is (name,
-# round_re-deferred); the test_registry invariant asserts no entry
-# ages more than 2 rounds. Round 7 adds NO new q_* names (wave freeze
-# holds until the backlog fully drains) so the backlog goes 84 -> 34.
-#
-# R8 HANDOFF: after recording CORRECTNESS_r07, (1) add its 50 green
-# names to _DRIVER_CHECKED, (2) bump _ROUND to 8, (3) EMPTY this list
-# — all 34 remaining names go in front, draining the backlog to zero.
-#
-# POST-DRAIN RE-VERIFICATION POLICY (pre-committed per the r6
-# verdict, MACHINERY ALREADY LIVE): r8's window has ~16 spare rows
-# after the 34 never-checked names, and every window from r9 on is
-# entirely spare. Spare rows re-sample OLDEST-GREEN-FIRST:
-# _DRIVER_CHECKED_TAGGED records {name: round_last_green} and
-# _ordered_names() already sorts the checked tail by ascending tag
-# (r1/r2 greens first — those rows are six rounds of code drift old),
-# so spare slots consume the stalest rows with no further code change.
-# Per-round upkeep from r8 on: re-tag each re-sampled name with the
-# round its fresh green row lands. A re-sampled name that goes RED is
-# removed from the mapping until fixed and re-verified. This keeps
-# every driver row at most ~6 rounds stale in steady state while never
-# displacing a never-checked name, which always outranks re-sampling.
-_DEFER_NEXT_WINDOW_TAGGED: tuple = ()
-# R8: defer list EMPTIED per the pre-committed handoff — the 34
-# remaining never-checked names (q_page_trend ... q_doubling_time,
-# all judge-green in the r7 full-oracle re-run) now sort into the
-# front block via the `front` rule in _ordered_names(). Wave 100
-# adds three debut names (q_bom_explosion, q_merge_upsert,
-# q_event_interval_join — each oracle-green locally at sf0.01),
-# which also front per the debut-window rule, so the r8 driver
-# window = 3 debuts + 34 backlog + 13 oldest-green (tag-2)
-# re-verification rows (the debuts consume 3 of the ~16 spare rows
-# the r7 verdict projected). Done = CORRECTNESS_r08 50/50 green →
-# driver-checked union 335/335 minus the 13 not-yet-resampled tag-2
-# cohort remainder, backlog zero, rotation started.
-#
-# R9 HANDOFF: EXECUTED — the 50 r8 greens are tagged 8 (the 13
-# re-sampled tag-2 names re-tagged in place), _ROUND bumped to 9,
-# defer list stays empty. Mid-round, r9 added SEVEN debut queries
-# (q_multimodal_jpeg_dims, q_multimodal_av_info, q_table_skipping,
-# q_kmeans_lloyd, q_dedup_semantic, q_prototype_prune,
-# q_pipeline_curated_corpus — each oracle-green locally at sf0.001 +
-# sf0.01 + sf0.1 + degenerate), which front the window per the debut
-# rule. Expected CORRECTNESS_r09 = 7 debuts + 37 tag-2 + ~6 tag-3
-# re-verifications; the tag-2 cohort (the oldest driver rows) fully
-# drains this round.
-#
-# R10 HANDOFF: EXECUTED — the 50 r9 greens are tagged 9 (7 debuts
-# added to the mapping, 37 tag-2 + 6 tag-3 re-samples re-tagged in
-# place), _ROUND bumped to 10, defer list stays empty. The r10 window
-# continues draining tag-3 (ascending-tag sort does this
-# automatically); any r10 debut queries front automatically.
-#
-# R11 HANDOFF: EXECUTED — the 50 r10 greens are tagged 10 (11 debuts
-# added to the mapping, 39 tag-3 re-samples re-tagged in place),
-# _ROUND bumped to 11, defer list stays empty. The r11 window
-# continues draining the oldest tags (tag-3 remainder, then tag-4)
-# automatically.
-#
-# R12 HANDOFF: EXECUTED — the 50 r11 greens are tagged 11 (6 debuts
-# added to the mapping, 3 tag-3 + 41 tag-4 re-samples re-tagged in
-# place), _ROUND bumped to 12, defer list stays empty. The r12 window
-# continues draining the oldest tags (tag-4 remainder) automatically.
-#
-# R13 HANDOFF: tag the r12 greens as 12, bump _ROUND to 13. The r13
-# window continues draining the oldest tags automatically.
-
-_DEFER_NEXT_WINDOW = tuple(n for n, _ in _DEFER_NEXT_WINDOW_TAGGED)
+_GREEN_ROUND = _green_rounds(Path(__file__).resolve().parent)
 
 
 def _ordered_names() -> list[str]:
+    """Never-checked (or red) names first, in registration order, then
+    the checked names oldest green round first (the stable sort keeps
+    registration order within a round)."""
     names = list(_q.QUERIES)
-    defer = [n for n in names if n in _DEFER_NEXT_WINDOW]
-    front = [n for n in names if n not in _DRIVER_CHECKED and n not in _DEFER_NEXT_WINDOW]
-    # checked tail ordered OLDEST green first (ascending round tag,
-    # registration order within a tag): once the never-checked backlog
-    # drains (r8), spare window rows automatically re-sample the
-    # stalest driver rows — the post-drain policy is already live in
-    # the ordering, it just has no spare rows to consume before then.
-    checked = sorted(
-        (n for n in names if n in _DRIVER_CHECKED),
-        key=lambda n: (_DRIVER_CHECKED_TAGGED[n], names.index(n)),
-    )
-    return front + defer + checked
+    front = [n for n in names if n not in _GREEN_ROUND]
+    checked = sorted((n for n in names if n in _GREEN_ROUND), key=lambda n: _GREEN_ROUND[n])
+    return front + checked
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

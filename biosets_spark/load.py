@@ -21,13 +21,15 @@ biodata.py:1037-1198 physical pipeline):
 
 All heavy lifting is a Catalyst plan: scan -> broadcast join ->
 withColumn(map-lookup). The only collected data is the label
-dictionary and the (small) feature-metadata table. Both are driver
-facts of the memoized relations (``relations.fact``), and so is each
-split's built frame, keyed by the call's plan-shaping arguments: a
-reload of unchanged files submits no job and rebuilds no plan. The
-feature-metadata guards are judged, and the build's warnings
-replayed, on every load. A J2 positional join pins its row index, so
-its plan is built on every load.
+dictionary and the (small) feature-metadata table. The feature-
+metadata rows are a driver fact of the memoized relations
+(``relations.fact``), and so is each split's built frame, keyed by
+the call's plan-shaping arguments: a reload of unchanged files
+submits no job and rebuilds no plan, so the label dictionary is
+inferred only when a split's plan is built. The feature-metadata
+guards are judged, and the build's warnings replayed, on every load.
+A J2 positional join pins its row index, so its plan is built on
+every load.
 """
 
 from __future__ import annotations
@@ -329,16 +331,10 @@ def load_dataset(
         # the post-join frame — joined covariates (age, sex, ...) are
         # never in the feature-metadata key column's values and would
         # defeat containment for every candidate key.
-        # The relations the joined frame is a function of, given the
-        # key columns: an inferred label dictionary is memoized on them
-        # (J1 key join or no metadata; a J2 positional join is not)
-        label_inputs: list | None = [df]
         if meta is not None:
             if s_col and m_col:
                 df = _joins.join_sample_metadata(df, meta, s_col, m_col)
-                label_inputs.append(meta)
             else:
-                label_inputs = None
                 df = _joins.align_horizontal(df, meta)
                 s_col = s_col or m_col if (s_col or m_col) in df.columns else s_col
             b_col = b_col or _match_col(df.columns, BATCH_PATTERNS)
@@ -415,17 +411,8 @@ def load_dataset(
                         "Multiple data files without explicit labels=: pass the full label "
                         "dictionary so codes are consistent across shards and splits."
                     )
-                split_labels = labels
-                if (labels is None and label_inputs is not None
-                        and not (positive_labels or negative_labels)):
-                    # computed on the JOINED frame: under the left join
-                    # a metadata row whose sample has no data row adds
-                    # no label, so the metadata alone would not do
-                    split_labels = list(relations.fact(
-                        spark, ("label_dictionary", s_col, m_col, t_col), label_inputs,
-                        lambda: tuple(_labels.label_dictionary(df, t_col))))
                 df, _ = _labels.encode_labels(
-                    df, t_col, labels=split_labels,
+                    df, t_col, labels=labels,
                     positive_labels=positive_labels, negative_labels=negative_labels,
                 )
 

@@ -32,6 +32,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from ..session import _set_if_allowed
+
 
 def _bracket_groups(s: str) -> int:
     """Count top-level ``[...]`` groups in a plan-node argument string."""
@@ -84,26 +86,21 @@ _PLAN_CONFS = {
 
 def executed_plan_string(df: DataFrame) -> str:
     """The physical plan text the audit reads (AQE initial plan).
-    Session conf is saved and restored — the audit is read-only."""
+    Session conf is saved and restored — the audit is read-only. A
+    conf the session refuses keeps its value (the plan string may then
+    be truncated); any other error propagates."""
     spark = df.sparkSession
-    saved = {}
-    for k, v in _PLAN_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+    saved = {k: spark.conf.get(k, None) for k in _PLAN_CONFS}
     try:
+        for k, v in _PLAN_CONFS.items():
+            _set_if_allowed(spark, k, v)
         return df._jdf.queryExecution().executedPlan().toString()
     finally:
         for k, old in saved.items():
-            try:
-                if old is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, old)
-            except Exception:
-                pass
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                _set_if_allowed(spark, k, old)
 
 
 def count_exchanges(plan: str) -> int:

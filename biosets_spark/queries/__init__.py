@@ -881,10 +881,12 @@ def q_label_decode_roundtrip(spark, sf_dir):
 #
 # Importing this package registers the FULL query inventory. ORDER IS
 # LOAD-BEARING: the driver records only the first ~50 entries of
-# __spark_entry__.queries(), whose _ordered_names() tie-breaks on
-# registration order — so the manifest preserves the exact historical
-# import order (base inventory above, then ext, more, wave3..wave100).
-# Append new waves at the END; never reorder.
+# __spark_entry__.queries(). That order comes from the committed
+# CORRECTNESS files (never-checked names first, then oldest green
+# round first), and registration order breaks its ties — so the
+# manifest preserves the exact historical import order (base inventory
+# above, then ext, more, wave3..wave105). Append new waves at the END;
+# never reorder.
 _MANIFEST = (
     "ext", "more", "wave3", "wave4", "wave5", "wave6", "wave7", "wave8",
     "wave9", "wave10", "wave11", "wave12", "wave13", "wave14", "wave15",

@@ -2,7 +2,9 @@
 driver contract's structural conventions, so a future wave can't
 silently regress the correctness gate."""
 
+import json
 import re
+from pathlib import Path
 
 
 def _registry():
@@ -58,58 +60,69 @@ def test_oracles_reference_known_tables_only():
     assert bad == {}, f"oracles referencing unknown tables: {bad}"
 
 
-def test_driver_checked_names_exist():
-    """_DRIVER_CHECKED must only name real queries (a typo would
-    silently shrink the recorded window)."""
+def _correctness_files():
+    """{round: path} of the driver's committed CORRECTNESS files."""
     import __spark_entry__ as e
 
+    root = Path(e.__file__).resolve().parent
+    return {int(p.stem.removeprefix("CORRECTNESS_r")): p
+            for p in root.glob("CORRECTNESS_r*.json")}
+
+
+def test_driver_checked_names_exist():
+    """Every name in a committed CORRECTNESS file is a registered query
+    (a rename would silently drop its green round)."""
     qs = _registry()
-    stale = [n for n in e._DRIVER_CHECKED if n not in qs]
-    assert stale == []
+    files = _correctness_files()
+    assert files
+    stale = {n for p in files.values() for n in json.loads(p.read_text()) if n not in qs}
+    assert stale == set()
 
 
 def test_unchecked_fit_driver_window():
-    """Everything without a green driver row must fit inside the ~50
-    rows the driver records — except an explicit, small defer list of
-    precedent-covered variants ordered immediately after the window."""
+    """Everything without a green driver row fits inside, and leads,
+    the ~50 rows the driver records."""
     import __spark_entry__ as e
 
     qs = _registry()
-    unchecked = [n for n in qs if n not in e._DRIVER_CHECKED]
-    prioritized = [n for n in unchecked if n not in e._DEFER_NEXT_WINDOW]
-    assert len(prioritized) <= 50
-    # the window must be FULL whenever enough unchecked queries exist:
-    # an under-filled window wastes driver rows (the scarce resource
-    # the defer list exists to ration)
-    if len(unchecked) >= 50:
-        assert len(prioritized) == 50
-    # every deferred name is still unchecked (a name that lands a
-    # green driver row moves to _DRIVER_CHECKED, not the defer list).
-    # With a fixed 50-row window and 100+ unchecked queries,
-    # |defers| = |unchecked| - 50 by arithmetic — the list's size is
-    # set by the window, not by restraint. The invariants that matter:
-    # fullness, membership, ordering (below), and ROTATION — no name
-    # may sit deferred forever.
-    assert all(n not in e._DRIVER_CHECKED for n in e._DEFER_NEXT_WINDOW)
-    # rotation invariant: each defer entry is round-tagged with the
-    # round it (re-)entered the schedule; at ~50 recorded rows/round a
-    # deferred name must reach the window within 2 rounds of its tag.
-    # A name aging past that means deferral became permanent exclusion
-    # from driver verification — exactly the failure mode this guards.
-    overdue = [
-        (n, r) for n, r in e._DEFER_NEXT_WINDOW_TAGGED if e._ROUND - r > 2
-    ]
-    assert overdue == [], f"defer entries older than 2 rounds: {overdue}"
-    assert e._DEFER_NEXT_WINDOW == tuple(
-        n for n, _ in e._DEFER_NEXT_WINDOW_TAGGED
-    )
-    # deferred names sit right after the prioritized block, so they are
-    # first in line for the next window
+    unchecked = [n for n in qs if n not in e._GREEN_ROUND]
+    assert len(unchecked) <= 50
+    assert e._ordered_names()[:len(unchecked)] == unchecked
+
+
+def test_green_round_is_the_last_green_row(tmp_path, monkeypatch):
+    """The last green round wins; a red row after a green one untags
+    the name, so it moves to the front; a name with no row goes first.
+    Rounds compare as numbers, not as file names."""
+    import __spark_entry__ as e
+
+    names = list(_registry())
+    kept, redone, red, unseen = names[:4]
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    rows = {9: {kept: green, redone: green, red: green},
+            10: {redone: green, red: {**green, "hash_match": False}}}
+    for rnd, r in rows.items():
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(r))
+    tags = e._green_rounds(tmp_path)
+    assert tags == {kept: 9, redone: 10}
+    monkeypatch.setattr(e, "_GREEN_ROUND", tags)
     ordered = e._ordered_names()
-    n_front = len(prioritized)
-    assert set(ordered[n_front:n_front + len(e._DEFER_NEXT_WINDOW)]) == set(
-        n for n in e._DEFER_NEXT_WINDOW if n in qs
-    )
+    assert ordered[-2:] == [kept, redone]
+    assert ordered[:2] == [red, unseen]
+
+
+def test_driver_window_skips_the_newest_greens():
+    """Once the tagged tail outgrows two windows, the recorded rows
+    re-check older greens instead of the ones the newest CORRECTNESS
+    file just recorded."""
+    import __spark_entry__ as e
+
+    files = _correctness_files()
+    newest = json.loads(files[max(files)].read_text())
+    fresh = {n for n, row in newest.items()
+             if row["rows_match"] and row["schema_match"] and row["hash_match"]}
+    if len(e._GREEN_ROUND) > 100:
+        assert fresh.isdisjoint(list(e.queries())[:50])
 
 
 def test_no_wave_redeclares_oracle_fragments():
@@ -378,21 +391,16 @@ def test_no_role_tagging_inside_loops():
 
 
 def test_driver_checked_tail_ordered_oldest_green_first():
-    """Post-drain re-verification machinery (r6 verdict task #2, built
-    in r7): the checked tail of the driver ordering is sorted by
-    ascending green-round tag, so once the never-checked backlog
-    drains, spare window rows automatically re-sample the stalest
-    driver rows first."""
+    """The checked tail of the driver ordering is sorted by ascending
+    green round, so spare window rows re-sample the stalest driver
+    rows first."""
     import __spark_entry__ as e
 
-    assert set(e._DRIVER_CHECKED) == set(e._DRIVER_CHECKED_TAGGED)
-    assert all(2 <= r <= e._ROUND for r in e._DRIVER_CHECKED_TAGGED.values())
-    ordered = e._ordered_names()
-    tail = [n for n in ordered if n in e._DRIVER_CHECKED]
-    tags = [e._DRIVER_CHECKED_TAGGED[n] for n in tail]
+    files = _correctness_files()
+    assert set(e._GREEN_ROUND.values()) <= set(files)
+    tail = [n for n in e._ordered_names() if n in e._GREEN_ROUND]
+    tags = [e._GREEN_ROUND[n] for n in tail]
     assert tags == sorted(tags), "checked tail must be oldest-green-first"
-    # the head of the tail is the stalest cohort (r1/r2 greens)
-    assert e._DRIVER_CHECKED_TAGGED[tail[0]] == min(tags)
 
 
 def test_duplicate_query_registration_raises():

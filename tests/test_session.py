@@ -152,17 +152,26 @@ class _LockedConf:
     def get(self, key, default=None):
         return self.values.get(key, default)
 
+    def unset(self, key):
+        self.values.pop(key, None)
 
-def test_apply_session_conf_keeps_refused_confs_and_raises_the_rest(spark):
-    """A conf the session refuses (Spark's AnalysisException) keeps the
-    session's value and the other confs are still set; any other error
-    from ``conf.set`` propagates."""
+
+def _refusal(spark):
+    """The AnalysisException Spark raises for a conf it will not change."""
     from pyspark.errors import AnalysisException
 
     try:
         spark.conf.set("spark.sql.warehouse.dir", "/elsewhere")
     except AnalysisException as e:
-        refusal = e
+        return e
+    raise AssertionError("a static conf was changed at runtime")
+
+
+def test_apply_session_conf_keeps_refused_confs_and_raises_the_rest(spark):
+    """A conf the session refuses (Spark's AnalysisException) keeps the
+    session's value and the other confs are still set; any other error
+    from ``conf.set`` propagates."""
+    refusal = _refusal(spark)
     locked = "spark.sql.autoBroadcastJoinThreshold"
 
     def session(error):
@@ -179,3 +188,24 @@ def test_apply_session_conf_keeps_refused_confs_and_raises_the_rest(spark):
     fake, _ = session(RuntimeError("py4j gateway is gone"))
     with pytest.raises(RuntimeError, match="gateway"):
         apply_session_conf(fake)
+
+
+def test_plan_string_survives_refused_confs_and_raises_the_rest(spark):
+    """The plan audit still reads the plan when the session refuses one
+    of its string-length confs, and leaves the session's confs as it
+    found them; any other error from ``conf.set`` propagates."""
+    from biosets_spark.plans.audit import _PLAN_CONFS, executed_plan_string
+
+    locked, free = _PLAN_CONFS
+    jdf = spark.range(3)._jdf
+
+    def plan(error):
+        conf = _LockedConf({locked}, error)
+        df = SimpleNamespace(sparkSession=SimpleNamespace(conf=conf), _jdf=jdf)
+        return executed_plan_string(df), conf
+
+    text, conf = plan(_refusal(spark))
+    assert "Range" in text
+    assert conf.values == {"spark.sql.shuffle.partitions": "200"}
+    with pytest.raises(RuntimeError, match="gateway"):
+        plan(RuntimeError("py4j gateway is gone"))

@@ -1130,7 +1130,7 @@ def test_read_files_memoizes_only_stat_able_native_reads(spark, tmp_path):
 def test_relation_memo_stays_at_its_bound(spark, tmp_path, monkeypatch):
     """Each rewrite of an archive is unpacked to a directory of its
     own, so each load of a rewritten zip stores new memo entries (its
-    relation, label dictionary and split plan); the memo drops its
+    relation and split plan); the memo drops its
     oldest entries to stay at MAX_RELATIONS."""
     import tempfile
 
@@ -1148,8 +1148,8 @@ def test_relation_memo_stays_at_its_bound(spark, tmp_path, monkeypatch):
         assert len(relations._RELATIONS) <= 3
         kinds.append({k[1][1][0] for k in relations._RELATIONS if k[1][0] == "fact"})
     assert len(relations._RELATIONS) == 3
-    # each load's label dictionary and plan are facts sharing the bound
-    assert kinds == [{"label_dictionary", "split_plan"}] * 5
+    # each load's plan is a fact sharing the bound
+    assert kinds == [{"split_plan"}] * 5
 
 
 def test_archive_is_unpacked_once_per_snapshot(tmp_path, monkeypatch):
