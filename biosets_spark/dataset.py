@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -450,7 +451,9 @@ class BioDataset:
         try:
             self.df.write.mode("overwrite").format("avro").save(path)
             return 0
-        except Exception as e:
+        # the missing module is refused as _LEGACY_ERROR_TEMP_1139
+        # ("Failed to find data source: avro") in Spark 4.1
+        except AnalysisException as e:
             msg = str(e)
             if not (
                 "DATA_SOURCE_NOT_FOUND" in msg
@@ -820,7 +823,10 @@ class BioDataset:
         else:
             try:
                 vdf = spark.createDataFrame([(v,) for v in values]).toDF(name)
-            except Exception as e:
+            # PySparkValueError (CANNOT_INFER_EMPTY_SCHEMA,
+            # CANNOT_DETERMINE_TYPE) or PySparkTypeError
+            # (CANNOT_INFER_TYPE_FOR_FIELD)
+            except (ValueError, TypeError) as e:
                 raise ValueError(
                     f"add_column: cannot infer a type for {name!r} "
                     "(empty or all-None values) — pass dtype="

@@ -47,6 +47,7 @@ from .operators import joins as _joins
 from .operators import labels as _labels
 from .schema import roles
 from .schema.lattice import union_promote
+from .scope import origin
 from .sources import discovery, readers, relations
 
 # column-name patterns for role inference, case-insensitive, leftmost
@@ -203,6 +204,7 @@ def _read_shards(spark: SparkSession, files: list[str], **options) -> DataFrame:
     return union_promote(dfs)
 
 
+@origin("load_dataset")
 def load_dataset(
     path: str | None = None,
     data_files: list[str] | str | None = None,

@@ -24,7 +24,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from ..scope import origin
 
+
+@origin("asof_join")
 def asof_join(
     left: DataFrame,
     right: DataFrame,

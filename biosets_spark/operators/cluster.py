@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from .. import pins
+from ..scope import origin
 
 SCALE = 1_000_000
 # strictly greater than SCALE * max|component| (contract: |x| < 2.0);
@@ -95,6 +96,7 @@ def _sqdist(v: Column, cent: list[int]) -> Column:
 _LITERAL_K_MAX = 16
 
 
+@origin("assign_cells")
 def assign_cells(
     df: DataFrame, cents: list[list[int]], vec_col: str = "_v"
 ) -> DataFrame:
@@ -177,6 +179,7 @@ def sample_centroids(
     return [[int(x) for x in r[vec_col]] for r in rows]
 
 
+@origin("kmeans_fit")
 def kmeans_fit(
     df: DataFrame,
     k: int = 8,
@@ -234,6 +237,7 @@ def kmeans_fit(
             pins.unpin(v)
 
 
+@origin("prune_farthest")
 def prune_farthest(
     assigned: DataFrame,
     frac_num: int = 1,
@@ -361,6 +365,7 @@ def _dup_pairs_from(a: DataFrame, threshold_num: int,
         kernel, schema="cell int, id_a long, id_b long")
 
 
+@origin("semantic_dup_pairs")
 def semantic_dup_pairs(
     df: DataFrame,
     k: int = 16,
@@ -390,6 +395,7 @@ def semantic_dup_pairs(
     return _dup_pairs_from(a, threshold_num, threshold_den)
 
 
+@origin("semantic_dedup_stats")
 def semantic_dedup_stats(
     df: DataFrame,
     k: int = 16,

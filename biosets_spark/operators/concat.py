@@ -20,9 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..schema.lattice import union_promote
+from ..scope import origin
 from .joins import align_horizontal
 
 
+@origin("concat")
 def concat(dfs: list[DataFrame], axis: int = 0, zero_as_missing: bool = False) -> DataFrame:
     """Concatenate datasets vertically (axis=0, with upcast promotion
     and missing-column null/zero fill) or horizontally (axis=1,

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from .. import pins
+from ..scope import origin
 
 # Candidate-id sets up to this size broadcast in the LSH verification
 # prune (long ids: 2M ~ 16 MB serialized, inside the session's 32 MB
@@ -141,6 +142,7 @@ def fingerprint_md5(c: Column) -> Column:
     return F.md5(normalize_text(c))
 
 
+@origin("exact_dedup")
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the min-id representative per distinct normalized text.
     Returns (keep_id, dup_count). Shuffles only (fingerprint, id)."""
@@ -171,6 +173,7 @@ def shingles(c: Column, n: int = 4) -> Column:
     return F.array_distinct(acc)
 
 
+@origin("spread")
 def spread(df: DataFrame) -> DataFrame:
     """Repartition a compact scan to full parallelism before fan-out
     work (shingle explodes, per-row signature builds). A small corpus
@@ -185,6 +188,7 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+@origin("shingle_table")
 def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 4) -> DataFrame:
     # deliberately NOT spread(): the shingle family's heavy work sits
     # AFTER its first shuffle (signature/count aggregates, bucket
@@ -196,6 +200,7 @@ def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return df.select(col(id_col).alias("_id"), F.explode(shingles(col(text_col), n)).alias("_sh"))
 
 
+@origin("ngram_jaccard_pairs")
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -257,6 +262,7 @@ def ngram_jaccard_pairs(
     )
 
 
+@origin("containment_pairs")
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -305,6 +311,7 @@ def containment_pairs(
     )
 
 
+@origin("minhash_signatures")
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_perm: int = 32, shingle_n: int = 4,
@@ -322,6 +329,7 @@ def minhash_signatures(
     return sh.groupBy(col("_id").alias(id_col)).agg(*mins)
 
 
+@origin("minhash_lsh_pairs")
 def minhash_lsh_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_perm: int = 32, bands: int = 16, shingle_n: int = 4,
@@ -471,6 +479,7 @@ def portable_mix60(h: Column, salt: int) -> Column:
     return x.bitwiseXOR(F.shiftrightunsigned(x, 17))
 
 
+@origin("simhash")
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             shingle_n: int = 2, portable: bool = False) -> DataFrame:
     """64-bit SimHash per document.
@@ -526,6 +535,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return agg.select(id_col, sig.alias("simhash"))
 
 
+@origin("simhash_pairs")
 def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   max_hamming: int = 3, shingle_n: int = 2,
                   portable: bool = False,

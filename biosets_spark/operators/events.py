@@ -18,7 +18,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..scope import origin
 
+
+@origin("sessionize")
 def sessionize(
     df: DataFrame,
     key_col: str = "user_id",
@@ -55,6 +58,7 @@ def sessionize(
     ).drop("_start")
 
 
+@origin("keep_latest")
 def keep_latest(
     df: DataFrame,
     key_col: str = "user_id",

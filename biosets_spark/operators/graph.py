@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from .. import pins
+from ..scope import origin
 
 
 def _star_contraction(
@@ -151,6 +152,7 @@ def _star_contraction(
     return out
 
 
+@origin("connected_components")
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -319,6 +321,7 @@ def connected_components(
     return labels.select(col("u").alias("node"), "component")
 
 
+@origin("dedup_clusters")
 def dedup_clusters(
     df: DataFrame,
     pairs: DataFrame,

@@ -31,6 +31,7 @@ from pyspark.sql.functions import broadcast
 
 from .. import pins
 from ..schema import roles
+from ..scope import origin
 
 JOIN_TYPES = {
     "inner": "inner",
@@ -63,6 +64,7 @@ def _reject_list_keys(df: DataFrame, keys: list[str], side: str) -> None:
             )
 
 
+@origin("join")
 def join(
     left: DataFrame,
     right: DataFrame,
@@ -156,6 +158,7 @@ def join(
     return lsel.join(rsel, cond, how)
 
 
+@origin("join_sample_metadata")
 def join_sample_metadata(
     data: DataFrame,
     metadata: DataFrame,
@@ -186,6 +189,7 @@ def join_sample_metadata(
     return roles.with_roles(out, snap)
 
 
+@origin("zip_with_index_counted")
 def zip_with_index_counted(
     df: DataFrame, order_by: list[str] | None = None, col_name: str = "_row_id"
 ) -> tuple[DataFrame, int]:
@@ -199,6 +203,7 @@ def zip_with_index_counted(
     return _zip_with_index_impl(df, order_by, col_name)
 
 
+@origin("zip_with_index")
 def zip_with_index(df: DataFrame, order_by: list[str] | None = None, col_name: str = "_row_id") -> DataFrame:
     """Attach a contiguous 0-based row index — entirely JVM-side.
 
@@ -252,6 +257,7 @@ def _zip_with_index_impl(
     return out, acc
 
 
+@origin("align_horizontal")
 def align_horizontal(data: DataFrame, metadata: DataFrame, order_by_left: list[str] | None = None,
                      order_by_right: list[str] | None = None) -> DataFrame:
     """J2: positional horizontal alignment (metadata row i <-> data row

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import roles
+from ..scope import origin
 
 TARGET_COLUMN = "encoded_labels"  # reference: biodata.py:62
 
@@ -70,6 +71,7 @@ def binary_encode_expr(
     return expr.otherwise(F.lit(other)).cast("int")
 
 
+@origin("encode_labels")
 def encode_labels(
     df: DataFrame,
     target_col: str,
@@ -112,6 +114,7 @@ def decode_expr(col: Column, labels: list) -> Column:
     return F.when((col >= 0) & (col < len(labels)), F.element_at(arr, col + 1))
 
 
+@origin("decode")
 def decode(df: DataFrame, col: str, labels: list | None = None, output_col: str | None = None) -> DataFrame:
     labels = labels if labels is not None else roles.get_labels(df, col)
     if labels is None:

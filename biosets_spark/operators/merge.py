@@ -23,7 +23,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..scope import origin
 
+
+@origin("merge_into")
 def merge_into(
     target: DataFrame,
     source: DataFrame,

@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import col, lit
 
+from ..scope import origin
+
 MEDIA_META_TYPE = T.StructType([
     T.StructField("modality", T.StringType()),
     T.StructField("mime", T.StringType()),
@@ -47,6 +49,7 @@ MEDIA_META_TYPE = T.StructType([
 ])
 
 
+@origin("attach_media_metadata")
 def attach_media_metadata(
     df: DataFrame,
     payload_col: str,
@@ -871,6 +874,7 @@ def _decode_image(payload: bytes, fake: bool):
     )
 
 
+@origin("extract_image_features")
 def extract_image_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -966,6 +970,7 @@ def _decode_video_frames(raw: bytes, id_val, every_n: int = 1):
     return out
 
 
+@origin("sample_frames")
 def sample_frames(
     df: DataFrame,
     payload_col: str = "payload",
@@ -1005,6 +1010,7 @@ def sample_frames(
     return df.select(id_col, payload_col).mapInPandas(gen, schema=out_schema)
 
 
+@origin("extract_audio_features")
 def extract_audio_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -1046,6 +1052,7 @@ def extract_audio_features(
     return df.select(id_col, payload_col).mapInPandas(gen, schema=out_schema)
 
 
+@origin("extract_image_stats")
 def extract_image_stats(
     df: DataFrame,
     payload_col: str = "payload",

@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from ..scope import origin
+
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 # +1 555-123-4567 / 555-123-4567 / 555 123 4567
@@ -33,6 +35,7 @@ def pii_counts(c: Column) -> dict[str, Column]:
     return {kind: F.regexp_count(c, lit(pat)) for kind, pat, _ in REDACTIONS}
 
 
+@origin("redact_pii")
 def redact_pii(df: DataFrame, text_col: str = "text",
                output_col: str | None = None) -> DataFrame:
     """Replace every email/IPv4/phone match with a typed placeholder

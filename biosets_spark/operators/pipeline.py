@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..scope import origin
 from .dedup import fingerprint_md5, ngram_jaccard_pairs
 from .text import quality_score
 
@@ -86,6 +87,7 @@ def _near_dedup_survivors(
     return exact_kept.join(dropped, on=id_col, how="left_anti")
 
 
+@origin("clean_corpus")
 def clean_corpus(
     df: DataFrame,
     text_col: str = "text",
@@ -112,6 +114,7 @@ def clean_corpus(
         exact_kept, text_col, id_col, jaccard_threshold, shingle_n, use_lsh)
 
 
+@origin("curated_corpus")
 def curated_corpus(
     df: DataFrame,
     emb: DataFrame,
@@ -149,6 +152,7 @@ def curated_corpus(
     return exact_kept.join(dropped, on=id_col, how="left_anti")
 
 
+@origin("corpus_funnel")
 def corpus_funnel(
     df: DataFrame,
     text_col: str = "text",

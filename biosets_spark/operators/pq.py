@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from .. import pins
+from ..scope import origin
 from .cluster import SCALE  # 1e-6 grid, shared with kmeans/semantic
 
 
@@ -95,6 +96,7 @@ def pq_codebooks(
     ]
 
 
+@origin("pq_encode")
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[int]]],
@@ -343,6 +345,7 @@ def _adc_score_expr(table: list[list[int]], code_col: str):
     return score
 
 
+@origin("pq_adc_topk")
 def pq_adc_topk(
     encoded: DataFrame,
     codebooks: list[list[list[int]]],
@@ -366,6 +369,7 @@ def pq_adc_topk(
     return out.orderBy(col("adc_score").asc(), col("neighbor_id")).limit(k)
 
 
+@origin("pq_adc_rerank_topk")
 def pq_adc_rerank_topk(
     encoded: DataFrame,
     codebooks: list[list[list[int]]],
@@ -415,6 +419,7 @@ def pq_adc_rerank_topk(
     )
 
 
+@origin("ivfpq_build")
 def ivfpq_build(
     df: DataFrame,
     n_cells: int = 8,
@@ -499,6 +504,7 @@ def ivfpq_build(
             pins.unpin(resid)
 
 
+@origin("ivfpq_adc_topk")
 def ivfpq_adc_topk(
     encoded: DataFrame,
     cents: list[list[int]],

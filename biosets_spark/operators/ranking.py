@@ -38,7 +38,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..scope import origin
 
+
+@origin("doubled_midranks")
 def doubled_midranks(
     hist: DataFrame,
     group_cols: list[str],

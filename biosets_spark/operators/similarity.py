@@ -26,8 +26,10 @@ from .. import pins
 from .pq import _double_array_lit
 
 from ..functions.vectors import cosine, dot, norm
+from ..scope import origin
 
 
+@origin("knn_bruteforce")
 def knn_bruteforce(
     df: DataFrame,
     query_vec: list[float],
@@ -91,6 +93,7 @@ def knn_bruteforce(
     return out.orderBy(col("sim").desc(), col("neighbor_id")).limit(k)
 
 
+@origin("knn_batch")
 def knn_batch(
     df: DataFrame,
     queries: list[tuple[int, list[float]]],
@@ -248,6 +251,7 @@ def _broadcast_block(src: DataFrame, bi: int, n_blocks: int, id_col: str, vec_co
     return src.sparkSession.sparkContext.broadcast((ids, M))
 
 
+@origin("all_pairs_topk")
 def all_pairs_topk(
     df: DataFrame,
     k: int = 20,
@@ -318,7 +322,9 @@ def all_pairs_topk(
                         continue
                     s = sims[r][mask]
                     partners = ids_blk[mask]
-                    top = np.argsort(-s)[:kk]
+                    # lexsort: sim desc, then partner id asc on ties,
+                    # the final (sim desc, id_a, id_b) order
+                    top = np.lexsort((partners, -s))[:kk]
                     out_a.extend([aid] * len(top))
                     out_b.extend(partners[top])
                     out_s.extend(s[top])
@@ -366,10 +372,7 @@ def all_pairs_topk(
                 if not len(part):
                     continue
                 s = S[r][part]
-                if len(s) > kk:
-                    sel = np.argpartition(-s, kk - 1)[:kk]
-                else:
-                    sel = np.arange(len(s))
+                sel = np.lexsort((ids[part], -s))[:kk]
                 out_a.extend([ids[i]] * len(sel))
                 out_b.extend(ids[part[sel]])
                 out_s.extend(s[sel])
@@ -384,6 +387,7 @@ def all_pairs_topk(
     return cand.orderBy(col("sim").desc(), "id_a", "id_b").limit(k)
 
 
+@origin("embedding_dup_pairs")
 def embedding_dup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
@@ -483,6 +487,7 @@ def embedding_dup_pairs(
         bucket_kernel, schema="id_a long, id_b long, sim double")
 
 
+@origin("knn_all")
 def knn_all(
     df: DataFrame,
     k: int = 1,
@@ -658,6 +663,7 @@ def _seq_sqnorms(V):
     return acc
 
 
+@origin("lsh_signatures")
 def lsh_signatures(
     df: DataFrame,
     dim: int,
@@ -711,6 +717,7 @@ def lsh_signatures(
     return df.withColumn("_bucket", sig)
 
 
+@origin("lsh_knn")
 def lsh_knn(
     df: DataFrame,
     query_vec: list[float],
@@ -806,6 +813,7 @@ def _ivf_assign_kernel(
     return df.mapInPandas(batches, schema=out_schema)
 
 
+@origin("ivf_build")
 def ivf_build(
     df: DataFrame,
     n_cells: int = 16,
@@ -865,6 +873,7 @@ def ivf_build(
     return assigned, cents
 
 
+@origin("ivf_knn")
 def ivf_knn(
     assigned: DataFrame,
     cents: list[tuple[int, list[float]]],

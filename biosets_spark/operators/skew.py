@@ -19,7 +19,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from ..scope import origin
 
+
+@origin("salted_join")
 def salted_join(
     large: DataFrame,
     small: DataFrame,

@@ -16,9 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scope import origin
 from .joins import zip_with_index, zip_with_index_counted
 
 
+@origin("train_test_split")
 def train_test_split(
     df: DataFrame,
     test_size: float = 0.25,
@@ -47,6 +49,7 @@ def train_test_split(
     return {"train": train.drop("_split_id"), "test": test.drop("_split_id")}
 
 
+@origin("shuffle")
 def shuffle(df: DataFrame, seed: int | None = None, scale_safe: bool = False,
             num_partitions: int | None = None) -> DataFrame:
     """O2: deterministic permutation.
@@ -76,6 +79,7 @@ def shuffle(df: DataFrame, seed: int | None = None, scale_safe: bool = False,
     )
 
 
+@origin("slice_rows")
 def slice_rows(df: DataFrame, start: int = 0, stop: int | None = None,
                order_by: list[str] | None = None) -> DataFrame:
     """P8/O4 contiguous slicing ``ds[start:stop]`` over a defined order.
@@ -107,6 +111,7 @@ def _round_half_even(num: int, den: int) -> int:
     return q
 
 
+@origin("slice_percent")
 def slice_percent(df: DataFrame, from_pct: int = 0, to_pct: int = 100,
                   order_by: list[str] | None = None,
                   rounding: str = "closest") -> DataFrame:
@@ -139,6 +144,7 @@ def slice_percent(df: DataFrame, from_pct: int = 0, to_pct: int = 100,
     return slice_rows(df, start, stop, order_by)
 
 
+@origin("select_indices")
 def select_indices(df: DataFrame, indices: list[int], order_by: list[str] | None = None) -> DataFrame:
     """P8 arbitrary index selection: join against an index frame over a
     deterministic row id (no driver-side collect of data rows)."""
@@ -148,6 +154,7 @@ def select_indices(df: DataFrame, indices: list[int], order_by: list[str] | None
     return with_id.join(F.broadcast(idx), on="_row_id", how="inner").orderBy("_row_id").drop("_row_id")
 
 
+@origin("kfold_assign")
 def kfold_assign(df: DataFrame, k: int, order_by: list[str],
                  fold_col: str = "_fold") -> DataFrame:
     """Assign 1-based NTILE(k)-equivalent folds WITHOUT a global window.
@@ -175,6 +182,7 @@ def kfold_assign(df: DataFrame, k: int, order_by: list[str],
     return with_id.withColumn(fold_col, fold.cast("int")).drop("_kf_id")
 
 
+@origin("kfold")
 def kfold(df: DataFrame, k: int, order_by: list[str]) -> list[tuple[DataFrame, DataFrame]]:
     """k-fold with NTILE semantics over an explicit ordering (O4);
     fold assignment via ``kfold_assign`` (no single-partition sort).

@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from ..scope import origin
+
 # BPE-ish word/number/punctuation splitter: words (incl. unicode
 # letters), numbers, or single non-space symbols.
 BPE_TOKEN_RE = r"[\p{L}]+|[\p{N}]+|[^ \t\n\x0B\f\r\p{L}\p{N}]"
@@ -40,6 +42,7 @@ def token_count(c: Column) -> Column:
     return F.size(tokens(c))
 
 
+@origin("quality_features")
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append per-document quality features: token count, char count,
     mean token length, punctuation ratio, digit ratio, stopword ratio
@@ -69,6 +72,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+@origin("quality_score")
 def quality_score(df: DataFrame, text_col: str = "text",
                   min_tokens: int = 5, max_mean_token_len: float = 15.0,
                   keep_threshold: float = 0.9) -> DataFrame:
@@ -87,6 +91,7 @@ def quality_score(df: DataFrame, text_col: str = "text",
     return qf.withColumn("quality_score", score).withColumn("keep", col("quality_score") >= keep_threshold)
 
 
+@origin("lang_id")
 def lang_id(df: DataFrame, text_col: str = "text", output_col: str = "lang_pred") -> DataFrame:
     """Stopword-vote language ID: score = fraction of tokens in each
     language's stopword list; argmax wins, 'und' if no hits.
@@ -105,6 +110,7 @@ def lang_id(df: DataFrame, text_col: str = "text", output_col: str = "lang_pred"
     return df.withColumn(output_col, F.when(best["score"] > 0, best["lang"]).otherwise(lit("und")))
 
 
+@origin("doc_fingerprint")
 def doc_fingerprint(df: DataFrame, text_col: str = "text", output_col: str = "fingerprint") -> DataFrame:
     """Content-defined md5 fingerprint over normalized text (exact-dup
     key; see operators/dedup.py)."""
@@ -113,6 +119,7 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text", output_col: str = "fi
     return df.withColumn(output_col, fingerprint_md5(col(text_col)))
 
 
+@origin("term_doc_freq")
 def term_doc_freq(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-term corpus statistics: document frequency and total term
     frequency (the integer core of TF-IDF — explode + two counts, all
@@ -124,6 +131,7 @@ def term_doc_freq(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
+@origin("tf_idf")
 def tf_idf(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Sparse TF-IDF vectors as (doc, term, tf, idf, tf_idf) rows —
     the join-friendly layout for downstream similarity/clustering.
@@ -139,6 +147,7 @@ def tf_idf(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Dat
     )
 
 
+@origin("rolling_hash")
 def rolling_hash(df: DataFrame, text_col: str = "text", output_col: str = "rhash",
                  base: int = 257, mod: int = (1 << 61) - 1) -> DataFrame:
     """Polynomial rolling hash over whitespace tokens (deterministic,
@@ -154,6 +163,7 @@ def rolling_hash(df: DataFrame, text_col: str = "text", output_col: str = "rhash
     return df.withColumn(output_col, h.cast("long"))
 
 
+@origin("pack_bins")
 def pack_bins(df: DataFrame, token_col: str, order_col: str, budget: int,
               key_cols: list[str] | None = None) -> DataFrame:
     """Sequence packing, concat-and-chop style: documents are laid out
@@ -200,6 +210,7 @@ def _max_run_length(sorted_arr: Column) -> Column:
     return F.aggregate(sorted_arr, acc0, step, lambda acc: acc["best"])
 
 
+@origin("repetition_stats")
 def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                      method: str = "expr") -> DataFrame:
     """Per-document repetition signals (the Gopher repetition filters):
@@ -252,6 +263,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
+@origin("char_entropy")
 def char_entropy(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                  output_col: str = "entropy",
                  carry_cols: list[str] | None = None) -> DataFrame:
@@ -283,6 +295,7 @@ def char_entropy(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
+@origin("gopher_rules")
 def gopher_rules(df: DataFrame, text_col: str = "text",
                  min_words: int = 30, max_words: int = 100_000,
                  min_mean_word_len: float = 3.0, max_mean_word_len: float = 10.0,
@@ -316,6 +329,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     )
 
 
+@origin("bm25_scores")
 def bm25_scores(df: DataFrame, query_terms: list[str], text_col: str = "text",
                 id_col: str = "doc_id", k1: float = 1.5, b: float = 0.75) -> DataFrame:
     """BM25 relevance of every document to a fixed term set —
@@ -352,6 +366,7 @@ def bm25_scores(df: DataFrame, query_terms: list[str], text_col: str = "text",
     )
 
 
+@origin("token_cooccurrence")
 def token_cooccurrence(
     df: DataFrame,
     min_pair_count: int = 2,
@@ -428,6 +443,7 @@ def token_cooccurrence(
     )
 
 
+@origin("unigram_surprise")
 def unigram_surprise(
     df: DataFrame,
     text_col: str = "text",
@@ -484,6 +500,7 @@ def unigram_surprise(
     )
 
 
+@origin("tfidf_keywords")
 def tfidf_keywords(
     df: DataFrame,
     k: int = 3,
@@ -535,6 +552,7 @@ def spans(c: Column, span_tokens: int = 10) -> Column:
     )
 
 
+@origin("span_dedup_stats")
 def span_dedup_stats(
     df: DataFrame,
     span_tokens: int = 10,
@@ -594,6 +612,7 @@ def ascii_ratio(c: Column, n_chars: Column) -> Column:
     return F.when(n_chars > 0, n_ascii.cast("double") / n_chars.cast("double")).otherwise(lit(1.0))
 
 
+@origin("bigram_surprise")
 def bigram_surprise(
     df: DataFrame,
     text_col: str = "text",

@@ -38,6 +38,7 @@ from pyspark.sql.functions import broadcast, col, lit
 from .. import tables
 from ..oracle_fragments import REV_SQL
 from ..operators import labels as L
+from ..scope import origin
 
 
 @dataclass
@@ -58,7 +59,9 @@ def q(name: str, oracle: str | None = None, desc: str = "", tags: list[str] | No
             # silently REPLACE the earlier query and its oracle,
             # removing it from bench and the correctness gate
             raise ValueError(f"duplicate query registration: {name!r}")
-        QUERIES[name] = Query(fn=fn, oracle=oracle, desc=desc, tags=tags or [])
+        # the build runs inside an error-origin scope named after the
+        # query, so a runtime error names it (scope.origin)
+        QUERIES[name] = Query(fn=origin(name)(fn), oracle=oracle, desc=desc, tags=tags or [])
         return fn
 
     return deco

@@ -26,6 +26,13 @@ multi-executor cluster in mind:
   pickled rows.
 - Session timezone pinned to UTC so timestamp semantics are
   deterministic and match external oracles.
+- A fixed cost per query cut at its two static sources: a 2048-entry
+  codegen cache (``spark.sql.codegen.cache.maxEntries``), and
+  PySpark's per-call call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled``) off. Runtime
+  errors still name where a failing expression was built, through
+  ``biosets_spark.scope.origin``; see docs/SCALE.md, "Per-query fixed
+  cost".
 """
 
 from __future__ import annotations
@@ -116,6 +123,17 @@ def get_spark(
         # of whole-stage codegen into interpreted mode (measured 2x on
         # the minhash signature stage); 400 keeps them compiled
         .config("spark.sql.codegen.maxFields", "400")
+        # the 100-entry default evicts a warm decision_heavy pass's own
+        # classes: about 236 recompiled per pass against 4-28 with 2048
+        # (sf0.01, 4 cores). Static: an external session keeps its
+        # owner's value
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # PySpark's call-site capture walks the Python stack and sets
+        # the JVM origin on every Column call: F.col costs 14 Py4J round
+        # trips with it and 3 without, alias 11 against 1. Read once per
+        # process; scope.origin names error origins per query and
+        # operator instead. A caller turns it back on through extra_conf
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # RocksDB state store: streaming state lives off-heap on disk
         # instead of the HDFS-backed store's JVM heap maps — the
         # production choice for large state, and measured faster even
@@ -168,7 +186,10 @@ def apply_session_conf(spark: SparkSession) -> SparkSession:
     """Apply engine-required runtime conf to an externally created session.
 
     Used when the caller (e.g. the verification driver) owns the
-    SparkSession: only settings changeable at runtime are touched.
+    SparkSession: only settings changeable at runtime are touched. The
+    codegen cache size and PySpark's call-site capture are static
+    (Spark refuses ``spark.conf.set`` on them), so the session keeps
+    whatever its owner set.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -99,10 +99,11 @@ def _scratch() -> str | None:
     return None
 
 
-def _snapshot_dir(local: str, fill) -> str:
+def _snapshot_dir(local: str, fill, variant: str = "") -> str:
     """The directory ``fill(dir)`` unpacks the archive ``local`` into,
-    named by its ``(realpath, size, mtime_ns)`` and reused while that
-    is unchanged. It is filled under a temporary name and renamed into
+    named by its ``(realpath, size, mtime_ns)`` plus ``variant`` (what
+    else shapes the contents, e.g. the rows a stripped copy skips) and
+    reused while that is unchanged. It is filled under a temporary name and renamed into
     place, so a directory under a snapshot's name is complete. A new
     snapshot removes the archive's older ones that are ``_STALE_S``
     old. Without a trusted scratch directory every call fills a
@@ -118,7 +119,7 @@ def _snapshot_dir(local: str, fill) -> str:
         return tmp
     real = os.path.realpath(local)
     st = os.stat(real)
-    tag = hashlib.sha256(real.encode()).hexdigest()[:16]
+    tag = hashlib.sha256(f"{real}\0{variant}".encode()).hexdigest()[:16]
     name = f"{tag}-{st.st_size}-{st.st_mtime_ns}"
     dest = os.path.join(scratch, name)
     if os.path.isdir(dest):

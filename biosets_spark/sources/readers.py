@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -153,37 +154,43 @@ def _strip_leading_rows(paths: list[str], n: int,
     be handed a scratch file whose bytes were a text-mode mangling of
     the gzip stream. The scratch copy is plain uncompressed bytes in
     the ORIGINAL encoding, so the caller's encoding option still
-    applies."""
+    applies. Each copy is a snapshot (``archives._snapshot_dir``) keyed
+    by the file, ``n`` and the encoding: an unchanged file is copied
+    once and keeps its path, so a repeat read hits the source-relation
+    memo."""
     import bz2
     import gzip
     import lzma
-    import tempfile
+
+    from .archives import _snapshot_dir
 
     openers = {".gz": gzip.open, ".bz2": bz2.open, ".xz": lzma.open}
+    enc = (encoding or "utf-8").lower().replace("_", "-")
     out = []
-    scratch = tempfile.mkdtemp(prefix="biosets_skiprows_")
-    for i, p in enumerate(paths):
+    for p in paths:
         ext = os.path.splitext(p)[1].lower()
         op = openers.get(ext, open)
         base = os.path.basename(p)
         if ext in openers:
             base = os.path.splitext(base)[0]
-        dest = os.path.join(scratch, f"{i}_{base}")
-        enc = (encoding or "utf-8").lower().replace("_", "-")
-        if enc.startswith(("utf-16", "utf-32")):
-            # multi-byte newlines: binary b'\n' splitting would cut
-            # mid-code-unit; decode/re-encode with the DECLARED encoding
-            with op(p, "rt", encoding=encoding) as src, \
-                    open(dest, "w", encoding=encoding) as dst:
-                for j, line in enumerate(src):
-                    if j >= n:
-                        dst.write(line)
-        else:
-            with op(p, "rb") as src, open(dest, "wb") as dst:
-                for j, line in enumerate(src):
-                    if j >= n:
-                        dst.write(line)
-        out.append(dest)
+
+        def fill(scratch):
+            dest = os.path.join(scratch, base)
+            if enc.startswith(("utf-16", "utf-32")):
+                # multi-byte newlines: binary b'\n' splitting would cut
+                # mid-code-unit; decode/re-encode with the DECLARED encoding
+                with op(p, "rt", encoding=encoding) as src, \
+                        open(dest, "w", encoding=encoding) as dst:
+                    for j, line in enumerate(src):
+                        if j >= n:
+                            dst.write(line)
+            else:
+                with op(p, "rb") as src, open(dest, "wb") as dst:
+                    for j, line in enumerate(src):
+                        if j >= n:
+                            dst.write(line)
+
+        out.append(os.path.join(_snapshot_dir(p, fill, f"skip_rows={n} {enc}"), base))
     return out
 
 
@@ -241,6 +248,10 @@ def _looks_multiline_json(path: str, spark: SparkSession | None = None):
     import gzip
     import json
     import lzma
+    import zlib
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
 
     first = None
     try:
@@ -252,12 +263,19 @@ def _looks_multiline_json(path: str, spark: SparkSession | None = None):
         op = openers.get(os.path.splitext(path)[1].lower(), open)
         with op(path, "rt", errors="ignore") as f:
             first = f.readline().strip()
-    except Exception:
+    # a path the driver cannot open (remote URI, directory), or bytes
+    # that are not the codec's: gzip raises zlib.error on a corrupt
+    # body and EOFError on a truncated one, xz LZMAError, bz2 OSError
+    except (OSError, EOFError, lzma.LZMAError, zlib.error):
         if spark is not None:
             try:
                 row = spark.read.text(path).limit(1).collect()
                 first = row[0][0].strip() if row else ""
-            except Exception:
+            # Spark's read failure: AnalysisException (PATH_NOT_FOUND)
+            # and IllegalArgumentException (unknown host) are captured
+            # PySparkExceptions; a filesystem with no Hadoop client
+            # (s3a, gs) arrives as the raw Py4JJavaError
+            except (PySparkException, Py4JJavaError):
                 return None
         else:
             return None
@@ -432,11 +450,14 @@ def _read_files(spark: SparkSession, files: list[str], fmt: str,
         # (per-file parallelism — see sources/avro_py.py docstring).
         try:
             return spark.read.format("avro").load(files)
-        except Exception as e:
+        except AnalysisException as e:
             # fall back ONLY on the missing-datasource failure; a real
             # load error (bad path, permissions) from a registered
             # spark-avro must surface as itself, not as a confusing
-            # secondary failure from the fallback (r6 review)
+            # secondary failure from the fallback (r6 review). Spark
+            # 4.1 refuses a missing avro module as _LEGACY_ERROR_TEMP_1139
+            # ("Failed to find data source: avro"), other names as
+            # DATA_SOURCE_NOT_FOUND
             msg = str(e)
             if not (
                 "DATA_SOURCE_NOT_FOUND" in msg

@@ -168,6 +168,19 @@ def test_all_pairs_topk_blocked_matches_single_block(embeddings):
     assert blocked[0] == (0, 50)
 
 
+@pytest.mark.parametrize("n", [40, 300])
+@pytest.mark.parametrize("max_index_rows", [200_000, 10])
+def test_all_pairs_topk_breaks_ties_by_id(spark, n, max_index_rows):
+    """Identical vectors tie at sim 1.0 on every pair, so the top 5 by
+    (sim desc, id_a, id_b) are (0,1)..(0,5): each row's partner cut
+    must keep the lowest ids among tied partners, in the single-block
+    plan and the block-pair grid alike."""
+    df = spark.createDataFrame([(i, [2.0, 0.0, 0.0, 0.0]) for i in range(n)],
+                               "vec_id long, embedding array<double>")
+    top = S.all_pairs_topk(df, k=5, max_index_rows=max_index_rows).collect()
+    assert [(r.id_a, r.id_b, r.sim) for r in top] == [(0, b, 1.0) for b in range(1, 6)]
+
+
 def test_embedding_dup_pairs_planted_and_blocked(embeddings):
     """The planted near-dup (0, 50) is the only pair above 0.95; the
     grid-blocked run (tiny max_index_rows) must equal the single-block

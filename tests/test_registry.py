@@ -300,6 +300,32 @@ def test_only_pins_module_pins_or_frees():
         f"pin outside biosets_spark/pins.py: {offenders}; use pins.pin / pins.unpin")
 
 
+def test_no_broad_exception_handlers():
+    """Errors surface: no handler in the package catches ``Exception``
+    (or everything, with a bare ``except``); each names the types its
+    site receives. ``BaseException`` is allowed only in a handler that
+    cleans up and re-raises."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "biosets_spark")
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, root)
+        for node in ast.walk(ast.parse(open(path).read())):
+            if not isinstance(node, ast.ExceptHandler):
+                continue
+            types = node.type.elts if isinstance(node.type, ast.Tuple) else [node.type]
+            names = {getattr(t, "id", None) for t in types}
+            reraises = any(isinstance(n, ast.Raise) and n.exc is None
+                           for n in ast.walk(node))
+            if (node.type is None or "Exception" in names
+                    or ("BaseException" in names and not reraises)):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"broad exception handler: {offenders}; catch the named types"
+
+
 def test_only_source_modules_read_files():
     """Design rule: file sources are resolved in the sources layer, so
     that every loader goes through the one source-relation memo

@@ -817,6 +817,31 @@ def test_skip_rows_preserves_bytes(spark, tmp_path):
     assert sorted(r.name for r in df2.collect()) == ["alpha", "beta"]
 
 
+def test_skip_rows_copy_is_one_snapshot_per_file(spark, tmp_path, monkeypatch, count_jobs):
+    """An unchanged file read twice with skip_rows is stripped once,
+    into one snapshot that keeps its path (no scratch directory per
+    call), and the second read hits the source-relation memo: it
+    submits no job."""
+    import os
+    import tempfile
+
+    from biosets_spark.sources.readers import read_csv, read_files
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    p = tmp_path / "d.csv"
+    p.write_text("junk\nname,x\na,1\nb,2\n")
+    assert read_files(spark, str(p), skip_rows=1).count() == 2
+    again, jobs = count_jobs(lambda: read_files(spark, str(p), skip_rows=1))
+    assert jobs == 0
+    assert sorted(r.name for r in again.collect()) == ["a", "b"]
+    direct = [read_csv(spark, str(p), skip_rows=1).inputFiles() for _ in range(2)]
+    assert direct[0] == direct[1]
+    assert os.listdir(tmp) == [f"biosets_unpack-{os.getuid()}"]
+    assert len(os.listdir(tmp / f"biosets_unpack-{os.getuid()}")) == 1
+
+
 def test_archive_nondata_members_skipped(spark, tmp_path):
     """r7 review: a README inside an archive must be ignored, not
     parsed as TSV prose or crash detect_format."""
