@@ -5,8 +5,9 @@ No reference counterpart (BASELINE.json extension surface).
 - brute-force top-k: broadcast the query vector, compute cosine as a
   JVM higher-order expression (zip_with/aggregate over doubles), top-k
   via TakeOrderedAndProject. Linear scan, perfectly partition-parallel.
-- all-pairs: self-join a.id < b.id — quadratic verifier used for
-  near-dup detection at moderate cardinality.
+- all-pairs (top-k pairs, threshold pairs, per-row top-k): one exact
+  grid kernel (``_grid_pairs``) with three pair selectors — BLAS
+  blocks over a broadcast index or block-pair buckets.
 - LSH (random hyperplanes): sign-bit signatures from fixed
   deterministic hyperplanes; bucket join prunes the quadratic pair
   space. The scale path for 100 TB corpora: signatures are tiny, the
@@ -17,6 +18,8 @@ No reference counterpart (BASELINE.json extension surface).
 """
 
 from __future__ import annotations
+
+import operator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -221,34 +224,138 @@ def _block_pair_src(base: DataFrame, id_col: str, n_blocks: int) -> DataFrame:
     )
 
 
-def _bucket_matrix(pdf, id_col: str, vec_col: str):
-    """Shared kernel prologue: ids, block ids, and the L2-normalized
-    matrix of one bucket's rows, plus the sims-chunk row count that
-    caps each BLAS product at ~32 MB."""
+def _normalize(vecs):
+    """A pandas column of vectors as an L2-normalized float64 matrix;
+    a zero vector stays zero."""
     import numpy as np
 
-    ids = pdf[id_col].to_numpy()
-    blks = pdf["_blk"].to_numpy()
-    M = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+    M = np.vstack(vecs.to_numpy()).astype("float64")
     M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    chunk = max(1, (1 << 22) // max(len(ids), 1))
-    return ids, blks, M, chunk
+    return M
 
 
-def _broadcast_block(src: DataFrame, bi: int, n_blocks: int, id_col: str, vec_col: str):
-    """Collect ONE index block to the driver, L2-normalize it, and
-    broadcast (ids, matrix). Returns None for an empty block (hash
-    assignment doesn't guarantee every block is non-empty)."""
+def _broadcast_block(src: DataFrame, id_col: str, vec_col: str):
+    """Collect the index to the driver, L2-normalize it, and broadcast
+    (ids, matrix)."""
+    pdf = src.toPandas()  # bounded: one block
+    return src.sparkSession.sparkContext.broadcast(
+        (pdf[id_col].to_numpy(), _normalize(pdf[vec_col])))
+
+
+def _top_k(k: int, partner):
+    """Selector: each row's k best partners among the columns where
+    ``partner(row id, column id)`` holds, by sim desc and then partner
+    id asc on ties."""
     import numpy as np
 
-    part = src.filter(col("_blk") == bi) if n_blocks > 1 else src
-    pdf = part.select(id_col, vec_col).toPandas()  # bounded: one block
-    if pdf.empty:
-        return None
-    ids = pdf[id_col].to_numpy()
-    M = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    return src.sparkSession.sparkContext.broadcast((ids, M))
+    def select(S, rows, cols, allowed):
+        ok = partner(rows[:, None], cols[None, :])
+        if allowed is not None:
+            ok &= allowed
+        hits = []
+        for r in range(len(rows)):
+            part = np.flatnonzero(ok[r])
+            hits.append(part[np.lexsort((cols[part], -S[r, part]))[:k]])
+        return (np.repeat(np.arange(len(rows)), [len(h) for h in hits]),
+                np.concatenate(hits))
+
+    return select
+
+
+def _at_least(threshold: float):
+    """Selector: every partner with a larger id and sim >= threshold,
+    in one vectorized pass over the chunk."""
+    import numpy as np
+
+    t = float(threshold)
+
+    def select(S, rows, cols, allowed):
+        ok = (S >= t) & (rows[:, None] < cols[None, :])
+        if allowed is not None:
+            ok &= allowed
+        return np.nonzero(ok)
+
+    return select
+
+
+def _grid_pairs(df: DataFrame, id_col: str, vec_col: str, max_index_rows: int,
+                select, schema: str, finish=lambda out: out) -> DataFrame:
+    """The exact embedding operators' one kernel: score rows against
+    their partners by cosine and keep the (row id, partner id, sim)
+    triples ``select`` picks, typed by ``schema`` (long, long, double).
+
+    ``select(S, rows, cols, allowed)`` gets one sims chunk ``S``
+    (cosine of ``rows[i]`` and ``cols[j]``) and ``allowed``, the
+    partner mask the plan shape imposes (``None``: every column), and
+    returns the row and column indices of the pairs to keep.
+
+    Plan: a corpus that fits ONE index block (n <= max_index_rows)
+    broadcasts the whole normalized matrix and streams the table
+    through an Arrow-batched mapInPandas — zero shuffle. ``finish``
+    runs on its output before an eager pin, so the broadcast can be
+    destroyed once the pin holds the result. A larger corpus runs a
+    SINGLE job over block-pair buckets (``_block_pair_src``, r8): rows
+    hash into B = ceil(n/max_index_rows) blocks, every unordered block
+    pair is one bucket, and a groupBy(bucket).applyInPandas kernel
+    scores the bucket. A cross bucket pairs a row only with the
+    partner block's rows, since the diagonal bucket (g, g) owns the
+    within-block pairs; so every pair is scored in exactly one bucket,
+    and a per-row top-k there keeps every pair a global top-k needs.
+
+    Scale story: all B(B+1)/2 buckets run CONCURRENTLY in one stage.
+    Peak task memory is one bucket (<= 2*max_index_rows vectors, ~200 MB
+    at 200k x 64 doubles) plus a ~32 MB sims chunk; shuffle volume is B
+    copies of the (id, vector) projection. Work is the same O(N^2) dot
+    products regardless of blocking; where even the grid is too slow,
+    prefilter with lsh_signatures or go IVF."""
+    import math
+
+    import pandas as pd
+
+    base = df.select(id_col, vec_col)
+    n = base.count()
+    if n == 0:
+        return finish(base.sparkSession.createDataFrame([], schema))
+
+    def pairs(ids, M, col_ids, cols_M, blks=None):
+        # output columns by position in ``schema``
+        chunk = max(1, (1 << 22) // len(col_ids))
+        for s0 in range(0, len(ids), chunk):
+            S = M[s0:s0 + chunk] @ cols_M.T
+            rows = ids[s0:s0 + chunk]
+            allowed = None if blks is None else blks[s0:s0 + chunk, None] != blks[None, :]
+            r, c = select(S, rows, col_ids, allowed)
+            yield pd.DataFrame({0: rows[r], 1: col_ids[c], 2: S[r, c]})
+
+    B = math.ceil(n / max_index_rows)
+    if B == 1:
+        from .dedup import spread
+
+        src = spread(base)
+        b = _broadcast_block(src, id_col, vec_col)
+
+        def block(batches):
+            col_ids, cols_M = b.value
+            for batch in batches:
+                yield from pairs(batch[id_col].to_numpy(), _normalize(batch[vec_col]),
+                                 col_ids, cols_M)
+
+        # materialize before destroying the broadcast the plan reads;
+        # destroy in finally so a failed checkpoint can't leak it
+        try:
+            return pins.pin(finish(src.mapInPandas(block, schema=schema)),
+                            checkpoint=True, eager=True)
+        finally:
+            b.destroy()
+
+    def bucket(key, pdf):
+        a, b_ = divmod(int(key[0]), B)
+        ids, M = pdf[id_col].to_numpy(), _normalize(pdf[vec_col])
+        blks = pdf["_blk"].to_numpy() if a != b_ else None
+        return pd.concat(pairs(ids, M, ids, M, blks), ignore_index=True)
+
+    return finish(_block_pair_src(base, id_col, B).groupBy("_bucket")
+                  .applyInPandas(bucket, schema=schema))
 
 
 @origin("all_pairs_topk")
@@ -259,132 +366,19 @@ def all_pairs_topk(
     vec_col: str = "embedding",
     max_index_rows: int = 200_000,
 ) -> DataFrame:
-    """Top-k most-similar pairs by cosine (exact), grid-blocked.
+    """Top-k most-similar pairs by cosine (exact), ordered by sim desc,
+    then id_a and id_b.
 
-    Plan: corpora that fit ONE index block (n <= max_index_rows)
-    broadcast the whole normalized matrix and stream the table through
-    an Arrow-batched mapInPandas doing one BLAS block-multiply per
-    batch — zero shuffle. Larger corpora run a SINGLE job over
-    block-pair buckets (r8, replacing the r7 sequential per-block
-    driver loop): rows hash into B = ceil(n/max_index_rows) blocks;
-    every unordered block pair (a, b) is one bucket; each row is
-    exploded to the B buckets its block participates in; a
-    groupBy(bucket).applyInPandas kernel evaluates the bucket's pairs
-    (cross-block in mixed buckets, within-block in diagonal ones) with
-    chunked BLAS multiplies. Each row emits its bucket-local top-k
-    among partners with larger id, so every global top-k pair survives
-    into the candidate set (a pair lives in exactly ONE bucket, and no
-    row contributes more than k global-top-k pairs); a final
-    TakeOrdered(k) finishes.
-
-    Scale story: all B(B+1)/2 buckets run CONCURRENTLY in one stage —
-    no per-block job-launch serialization, no driver-side candidate
-    collection. Peak task memory is one bucket (<= 2*max_index_rows
-    vectors, ~200 MB at 200k x 64 doubles) plus a ~32 MB sims chunk;
-    shuffle volume is B copies of the (id, vector) projection —
-    replacing B full-table scans + B driver broadcasts. Work is the
-    same O(N^2) dot products regardless of blocking. For corpora where
-    even the grid is too slow, prefilter with lsh_signatures or go
-    IVF.
-    """
-    import math
-
-    import numpy as np
-
-    spark = df.sparkSession
+    Runs ``_grid_pairs``: each row keeps its top-k partners with a
+    larger id, so every global top-k pair survives into the candidate
+    set (no row contributes more than k of them), and a final
+    TakeOrdered(k) finishes; a single-block corpus pins only those k
+    rows."""
     _require_integral_id(df, id_col, "all_pairs_topk")
-    base = df.select(id_col, vec_col)
-    n = base.count()
-    n_blocks = max(1, math.ceil(n / max_index_rows))
-    kk = k
-
-    if n_blocks == 1:
-        from .dedup import spread
-
-        src = spread(base)
-        b = _broadcast_block(src, 0, 1, id_col, vec_col)
-        if b is None:
-            return spark.createDataFrame(
-                [], schema="id_a long, id_b long, sim double")
-
-        def block(batches, _b=b):
-            import pandas as pd
-
-            ids_blk, Mb = _b.value
-            for batch in batches:
-                A = np.vstack(batch[vec_col].to_numpy()).astype("float64")
-                A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-                sims = A @ Mb.T  # (batch, block)
-                out_a, out_b, out_s = [], [], []
-                for r, aid in enumerate(batch[id_col].to_numpy()):
-                    mask = ids_blk > aid
-                    if not mask.any():
-                        continue
-                    s = sims[r][mask]
-                    partners = ids_blk[mask]
-                    # lexsort: sim desc, then partner id asc on ties,
-                    # the final (sim desc, id_a, id_b) order
-                    top = np.lexsort((partners, -s))[:kk]
-                    out_a.extend([aid] * len(top))
-                    out_b.extend(partners[top])
-                    out_s.extend(s[top])
-                yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim": out_s})
-
-        try:
-            best = (
-                src.mapInPandas(block, schema="id_a long, id_b long, sim double")
-                .orderBy(col("sim").desc(), "id_a", "id_b")
-                .limit(k)
-                .collect()
-            )
-        finally:
-            b.destroy()
-        cand = spark.createDataFrame(
-            [(r.id_a, r.id_b, r.sim) for r in best] or [(None, None, None)],
-            schema="id_a long, id_b long, sim double")
-        if not best:
-            cand = cand.filter(col("id_a").isNotNull())
-        return cand.orderBy(col("sim").desc(), "id_a", "id_b").limit(k)
-
-    # multi-block: one job over block-pair buckets
-    B = n_blocks
-    src = _block_pair_src(base, id_col, B)
-
-    def bucket_kernel(key, pdf):
-        import pandas as pd
-
-        a, b_ = divmod(int(key[0]), B)
-        ids, blks, M, chunk = _bucket_matrix(pdf, id_col, vec_col)
-        m = len(ids)
-        out_a: list = []
-        out_b: list = []
-        out_s: list = []
-        for s0 in range(0, m, chunk):
-            S = M[s0:s0 + chunk] @ M.T
-            for r in range(S.shape[0]):
-                i = s0 + r
-                mask = ids > ids[i]
-                if a != b_:
-                    # cross-block pairs only: the diagonal bucket
-                    # (g, g) owns this row's within-block pairs
-                    mask &= blks != blks[i]
-                part = np.nonzero(mask)[0]
-                if not len(part):
-                    continue
-                s = S[r][part]
-                sel = np.lexsort((ids[part], -s))[:kk]
-                out_a.extend([ids[i]] * len(sel))
-                out_b.extend(ids[part[sel]])
-                out_s.extend(s[sel])
-        return pd.DataFrame({
-            "id_a": np.asarray(out_a, dtype=np.int64),
-            "id_b": np.asarray(out_b, dtype=np.int64),
-            "sim": np.asarray(out_s, dtype=np.float64),
-        })
-
-    cand = src.groupBy("_bucket").applyInPandas(
-        bucket_kernel, schema="id_a long, id_b long, sim double")
-    return cand.orderBy(col("sim").desc(), "id_a", "id_b").limit(k)
+    return _grid_pairs(
+        df, id_col, vec_col, max_index_rows, _top_k(k, operator.lt),
+        "id_a long, id_b long, sim double",
+        finish=lambda c: c.orderBy(col("sim").desc(), "id_a", "id_b").limit(k))
 
 
 @origin("embedding_dup_pairs")
@@ -400,91 +394,14 @@ def embedding_dup_pairs(
     alongside the textual ones (exact / MinHash-LSH / SimHash / n-gram
     Jaccard in operators.dedup).
 
-    Same plan family as ``all_pairs_topk``: a single-block corpus
-    broadcasts the whole normalized index and streams the table
-    through one BLAS mapInPandas (zero shuffle); a larger corpus runs
-    ONE job over block-pair buckets (r8, replacing the sequential
-    per-block loop) — the kernel's qualifying pairs come out fully
-    vectorized (np.nonzero over each sims chunk, no per-row Python).
-    Peak task memory = one bucket + a 32 MB sims chunk. At very high
-    corpus sizes compose behind SRP banding (lsh_signatures) to prune
-    the O(N^2) work; the verify step here is exact either way.
+    Runs ``_grid_pairs``; the qualifying pairs come out of each sims
+    chunk fully vectorized (np.nonzero, no per-row Python). At very
+    high corpus sizes compose behind SRP banding (lsh_signatures) to
+    prune the O(N^2) work; the verify step here is exact either way.
     """
-    import math
-
-    import numpy as np
-
-    spark = df.sparkSession
     _require_integral_id(df, id_col, "embedding_dup_pairs")
-    base = df.select(id_col, vec_col)
-    n = base.count()
-    n_blocks = max(1, math.ceil(n / max_index_rows))
-
-    if n_blocks == 1:
-        from .dedup import spread
-
-        src = spread(base)
-        b = _broadcast_block(src, 0, 1, id_col, vec_col)
-        if b is None:
-            return spark.createDataFrame(
-                [], schema="id_a long, id_b long, sim double")
-
-        def block(batches, _b=b, _t=threshold):
-            import pandas as pd
-
-            ids_blk, Mb = _b.value
-            for batch in batches:
-                A = np.vstack(batch[vec_col].to_numpy()).astype("float64")
-                A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-                sims = A @ Mb.T
-                rows_a = batch[id_col].to_numpy()
-                r_idx, c_idx = np.nonzero((sims >= _t) & (rows_a[:, None] < ids_blk[None, :]))
-                yield pd.DataFrame(
-                    {"id_a": rows_a[r_idx], "id_b": ids_blk[c_idx], "sim": sims[r_idx, c_idx]}
-                )
-
-        # materialize before destroying the broadcast the plan reads;
-        # destroy in finally so a failed checkpoint can't leak it
-        try:
-            out = pins.pin(
-                src.mapInPandas(block, schema="id_a long, id_b long, sim double"),
-                checkpoint=True, eager=True)
-        finally:
-            b.destroy()
-        return out
-
-    B = n_blocks
-    src = _block_pair_src(base, id_col, B)
-
-    _t = float(threshold)
-
-    def bucket_kernel(key, pdf):
-        import pandas as pd
-
-        a, b_ = divmod(int(key[0]), B)
-        ids, blks, M, chunk = _bucket_matrix(pdf, id_col, vec_col)
-        m = len(ids)
-        frames = []
-        for s0 in range(0, m, chunk):
-            S = M[s0:s0 + chunk] @ M.T
-            ids_rows = ids[s0:s0 + chunk]
-            cond = (S >= _t) & (ids_rows[:, None] < ids[None, :])
-            if a != b_:
-                # cross-block pairs only: bucket (g, g) owns
-                # within-block pairs
-                cond &= blks[s0:s0 + chunk][:, None] != blks[None, :]
-            r_idx, c_idx = np.nonzero(cond)
-            frames.append(pd.DataFrame({
-                "id_a": ids_rows[r_idx], "id_b": ids[c_idx],
-                "sim": S[r_idx, c_idx]}))
-        if not frames:
-            return pd.DataFrame({"id_a": np.empty(0, np.int64),
-                                 "id_b": np.empty(0, np.int64),
-                                 "sim": np.empty(0, np.float64)})
-        return pd.concat(frames, ignore_index=True)
-
-    return src.groupBy("_bucket").applyInPandas(
-        bucket_kernel, schema="id_a long, id_b long, sim double")
+    return _grid_pairs(df, id_col, vec_col, max_index_rows, _at_least(threshold),
+                       "id_a long, id_b long, sim double")
 
 
 @origin("knn_all")
@@ -499,121 +416,23 @@ def knn_all(
     the per-vector twin of ``all_pairs_topk``'s global top-k, used by
     leave-one-out k-NN evaluation (q_knn_loo_eval).
 
-    Same plan family as ``all_pairs_topk``: a single-block corpus
-    broadcasts the whole normalized index and streams the table
-    through one BLAS mapInPandas; a larger corpus runs ONE job over
-    block-pair buckets (r8, replacing the sequential per-block loop).
-    In bucket (a, b) every row's candidates are the partner block's
-    rows (the diagonal bucket covers within-block partners, self
-    excluded); each row emits its bucket-local top-k (ties broken by
-    neighbor id ascending) and a per-row rank over the bounded
-    n_blocks*k candidates finishes — never the N^2 pair matrix. For
-    corpora where even the grid is too slow, evaluate on a
-    deterministic sample or prefilter with lsh_signatures/ivf_build.
+    Runs ``_grid_pairs``: each row keeps its top-k partners other than
+    itself (ties broken by neighbor id ascending), and a per-row rank
+    over the bounded n_blocks*k candidates finishes — never the N^2
+    pair matrix. For corpora where even the grid is too slow, evaluate
+    on a deterministic sample or prefilter with lsh_signatures/ivf_build.
 
     ``id_col`` must be an integral type: the kernel output schema
-    emits ids as ``long`` (same contract as ``all_pairs_topk``), so a
-    string/decimal id would silently coerce or fail mid-job — rejected
-    up front instead (r5 ADVICE fix).
+    emits ids as ``long``, so a string/decimal id would silently
+    coerce or fail mid-job — rejected up front instead (r5 ADVICE fix).
     """
-    import math
-
-    import numpy as np
-
     from pyspark.sql import Window
 
-    spark = df.sparkSession
     _require_integral_id(df, id_col, "knn_all")
-    base = df.select(id_col, vec_col)
-    n = base.count()
-    n_blocks = max(1, math.ceil(n / max_index_rows))
+    cand = _grid_pairs(df, id_col, vec_col, max_index_rows, _top_k(k, operator.ne),
+                       "qid long, nid long, sim double")
     w = Window.partitionBy("qid").orderBy(col("sim").desc(), col("nid"))
-
-    if n_blocks == 1:
-        from .dedup import spread
-
-        src = spread(base)
-        b = _broadcast_block(src, 0, 1, id_col, vec_col)
-        if b is None:
-            return spark.createDataFrame(
-                [], schema="qid long, nid long, sim double, rank int")
-
-        def block(batches, _b=b, _k=k):
-            import pandas as pd
-
-            ids_blk, Mb = _b.value
-            for batch in batches:
-                A = np.vstack(batch[vec_col].to_numpy()).astype("float64")
-                A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-                sims = A @ Mb.T
-                out_a, out_b, out_s = [], [], []
-                for r, aid in enumerate(batch[id_col].to_numpy()):
-                    mask = ids_blk != aid
-                    if not mask.any():
-                        continue
-                    s = sims[r][mask]
-                    partners = ids_blk[mask]
-                    # lexsort: sim desc, then neighbor id asc on ties
-                    order = np.lexsort((partners, -s))[:_k]
-                    out_a.extend([aid] * len(order))
-                    out_b.extend(partners[order])
-                    out_s.extend(s[order])
-                yield pd.DataFrame({"qid": out_a, "nid": out_b, "sim": out_s})
-
-        try:
-            cand = pins.pin(
-                src.mapInPandas(block, schema="qid long, nid long, sim double"),
-                checkpoint=True, eager=True)
-        finally:
-            b.destroy()
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(col("rank") <= k)
-        )
-
-    B = n_blocks
-    src = _block_pair_src(base, id_col, B)
-
-    _k = int(k)
-
-    def bucket_kernel(key, pdf):
-        import pandas as pd
-
-        a, b_ = divmod(int(key[0]), B)
-        ids, blks, M, chunk = _bucket_matrix(pdf, id_col, vec_col)
-        m = len(ids)
-        out_a: list = []
-        out_b: list = []
-        out_s: list = []
-        for s0 in range(0, m, chunk):
-            S = M[s0:s0 + chunk] @ M.T
-            for r in range(S.shape[0]):
-                i = s0 + r
-                if a != b_:
-                    mask = blks != blks[i]  # partner block only
-                else:
-                    mask = ids != ids[i]  # within-block, self excluded
-                part = np.nonzero(mask)[0]
-                if not len(part):
-                    continue
-                s = S[r][part]
-                partners = ids[part]
-                order = np.lexsort((partners, -s))[:_k]
-                out_a.extend([ids[i]] * len(order))
-                out_b.extend(partners[order])
-                out_s.extend(s[order])
-        return pd.DataFrame({
-            "qid": np.asarray(out_a, dtype=np.int64),
-            "nid": np.asarray(out_b, dtype=np.int64),
-            "sim": np.asarray(out_s, dtype=np.float64),
-        })
-
-    cand = src.groupBy("_bucket").applyInPandas(
-        bucket_kernel, schema="qid long, nid long, sim double")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(col("rank") <= k)
-    )
+    return cand.withColumn("rank", F.row_number().over(w)).filter(col("rank") <= k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:

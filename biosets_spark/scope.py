@@ -9,8 +9,13 @@ origin on every Column call, at 11 extra Py4J round trips per
 sets it once per scope instead, so an error raised at ``collect()``
 reads::
 
-    "minhash_lsh_pairs" was called from
-    q_dedup_minhash_lsh (.../queries/ext.py:146) > minhash_lsh_pairs (.../operators/dedup.py:332)
+    "q_dedup_minhash_lsh > minhash_lsh_pairs" was called from
+    .../operators/dedup.py:332
+
+The fragment names the chain of open scopes; the call site is the
+innermost scope's ``file:line`` alone, because PySpark's structured
+error record (``DataFrameQueryContextLogger``) splits it into its
+``file`` and ``line`` fields at the colon.
 
 Every registered query and every public operator that returns a
 DataFrame runs inside one; column helpers (``shingles``,
@@ -33,7 +38,8 @@ _RESOLVED: tuple = (None, None, None)
 
 
 def _stack() -> list[tuple[str, str]]:
-    """This thread's open scopes, outermost first, as (name, call site)."""
+    """This thread's open scopes, outermost first, as (chain of scope
+    names, the scope's own ``file:line``)."""
     return _LOCAL.__dict__.setdefault("stack", [])
 
 
@@ -75,13 +81,11 @@ class origin(contextlib.ContextDecorator):
 
     def __enter__(self):
         stack = _stack()
-        site = f"{self.name} ({self.where})"
-        if stack:
-            site = f"{stack[-1][1]} > {site}"
-        stack.append((self.name, site))
+        chain = f"{stack[-1][0]} > {self.name}" if stack else self.name
+        stack.append((chain, self.where))
         jvm = _jvm_origin()
         if jvm is not None:
-            jvm[0](self.name, site)
+            jvm[0](chain, self.where)
         return self
 
     def __exit__(self, *exc):

@@ -168,17 +168,67 @@ def test_all_pairs_topk_blocked_matches_single_block(embeddings):
     assert blocked[0] == (0, 50)
 
 
+def _ranked_pairs(df):
+    return [(r.id_a, r.id_b, r.sim) for r in df.collect()]
+
+
+def _sorted_pairs(df):
+    return sorted((r.id_a, r.id_b, r.sim) for r in df.collect())
+
+
+def _sorted_neighbors(df):
+    return sorted((r.qid, r.nid, r.sim, r.rank) for r in df.collect())
+
+
+# each grid operator's call on n identical vectors, and the rows it
+# must return: every pair ties at sim 1.0, so the id order decides
+TIE_CASES = {
+    "all_pairs_topk": (
+        lambda df, m: _ranked_pairs(S.all_pairs_topk(df, k=5, max_index_rows=m)),
+        lambda n: [(0, b, 1.0) for b in range(1, 6)]),
+    "knn_all": (
+        lambda df, m: _sorted_neighbors(S.knn_all(df, k=3, max_index_rows=m)),
+        lambda n: [(q, nid, 1.0, rank + 1) for q in range(n)
+                   for rank, nid in enumerate([i for i in range(n) if i != q][:3])]),
+    "embedding_dup_pairs": (
+        lambda df, m: _sorted_pairs(S.embedding_dup_pairs(df, threshold=0.99, max_index_rows=m)),
+        lambda n: [(a, b, 1.0) for a in range(n) for b in range(a + 1, n)]),
+}
+
+
+def _identical(spark, n):
+    return spark.createDataFrame([(i, [2.0, 0.0, 0.0, 0.0]) for i in range(n)],
+                                 "vec_id long, embedding array<double>")
+
+
 @pytest.mark.parametrize("n", [40, 300])
 @pytest.mark.parametrize("max_index_rows", [200_000, 10])
-def test_all_pairs_topk_breaks_ties_by_id(spark, n, max_index_rows):
-    """Identical vectors tie at sim 1.0 on every pair, so the top 5 by
-    (sim desc, id_a, id_b) are (0,1)..(0,5): each row's partner cut
-    must keep the lowest ids among tied partners, in the single-block
-    plan and the block-pair grid alike."""
-    df = spark.createDataFrame([(i, [2.0, 0.0, 0.0, 0.0]) for i in range(n)],
-                               "vec_id long, embedding array<double>")
-    top = S.all_pairs_topk(df, k=5, max_index_rows=max_index_rows).collect()
-    assert [(r.id_a, r.id_b, r.sim) for r in top] == [(0, b, 1.0) for b in range(1, 6)]
+@pytest.mark.parametrize("op", list(TIE_CASES))
+def test_grid_kernels_break_ties_by_id(spark, op, max_index_rows, n):
+    """Identical vectors tie at sim 1.0 on every pair, so each
+    operator's partner cut must keep the lowest ids among tied
+    partners, in the single-block plan and the block-pair grid alike:
+    the top 5 pairs are (0,1)..(0,5), each row's 3 neighbors are its 3
+    lowest other ids, and every pair a < b clears the threshold."""
+    run, expected = TIE_CASES[op]
+    assert run(_identical(spark, n), max_index_rows) == expected(n)
+
+
+@pytest.mark.parametrize("n", [0, 1, 2])
+@pytest.mark.parametrize("max_index_rows", [200_000, 1])
+@pytest.mark.parametrize("op", list(TIE_CASES))
+def test_grid_kernels_on_tiny_corpora(spark, op, max_index_rows, n):
+    """An empty, one-row and two-row corpus each give the operator's
+    schema; only two identical rows make a pair."""
+    fn = getattr(S, op)
+    out = fn(_identical(spark, n), max_index_rows=max_index_rows)
+    if op == "knn_all":
+        assert out.dtypes == [("qid", "bigint"), ("nid", "bigint"), ("sim", "double"),
+                              ("rank", "int")]
+        assert _sorted_neighbors(out) == ([(0, 1, 1.0, 1), (1, 0, 1.0, 1)] if n == 2 else [])
+    else:
+        assert out.dtypes == [("id_a", "bigint"), ("id_b", "bigint"), ("sim", "double")]
+        assert _sorted_pairs(out) == ([(0, 1, 1.0)] if n == 2 else [])
 
 
 def test_embedding_dup_pairs_planted_and_blocked(embeddings):

@@ -8,7 +8,7 @@ import pytest
 import biosets_spark.queries.wave21  # noqa: F401  (registers the wave)
 from biosets_spark import release_pinned_indexes
 from biosets_spark.operators.graph import connected_components
-from biosets_spark.operators.similarity import embedding_dup_pairs
+from biosets_spark.operators.similarity import all_pairs_topk, embedding_dup_pairs, knn_all
 from biosets_spark.queries import QUERIES
 from tests.conftest import SF_SMOKE
 
@@ -18,10 +18,21 @@ def _distributed_components(spark):
     return connected_components(pairs, small_graph_threshold=0)
 
 
-def _single_block_embedding_pairs(spark):
+def _embeddings(spark):
     rows = [(i, [float(i), 1.0, 0.0]) for i in range(8)] + [(8, [0.0, 1.0, 0.001])]
-    return embedding_dup_pairs(
-        spark.createDataFrame(rows, "vec_id long, embedding array<float>"), threshold=0.99)
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _single_block_embedding_pairs(spark):
+    return embedding_dup_pairs(_embeddings(spark), threshold=0.99)
+
+
+def _single_block_top_pairs(spark):
+    return all_pairs_topk(_embeddings(spark), k=3)
+
+
+def _single_block_neighbors(spark):
+    return knn_all(_embeddings(spark), k=2)
 
 
 def _lazy_query_checkpoint(spark):
@@ -29,8 +40,10 @@ def _lazy_query_checkpoint(spark):
 
 
 @pytest.mark.parametrize(
-    "build", [_distributed_components, _single_block_embedding_pairs, _lazy_query_checkpoint],
-    ids=["connected_components", "embedding_dup_pairs", "q_triangle_count"])
+    "build", [_distributed_components, _single_block_embedding_pairs, _single_block_top_pairs,
+              _single_block_neighbors, _lazy_query_checkpoint],
+    ids=["connected_components", "embedding_dup_pairs", "all_pairs_topk", "knn_all",
+         "q_triangle_count"])
 def test_release_frees_every_pin_behind_a_result(spark, build):
     def persistent():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

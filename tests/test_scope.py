@@ -25,10 +25,12 @@ REPO = str(Path(__file__).resolve().parent.parent)
 # call, so the costs are measured in a process that starts cold
 FRESH_SESSION_SCRIPT = textwrap.dedent("""
     import json
+    import logging
     import sys
     sys.path.insert(0, REPO)
     import py4j.clientserver
     from pyspark.errors import NumberFormatException
+    from pyspark.logger import PySparkLogger
     from pyspark.sql import functions as F
     from biosets_spark.scope import origin
     from biosets_spark.session import get_spark
@@ -66,6 +68,15 @@ FRESH_SESSION_SCRIPT = textwrap.dedent("""
     def query():
         return operator(spark.createDataFrame([("a",)], "s string"))
 
+    # the structured ERROR record PySpark logs for a DataFrame error
+    records = []
+
+    class Keep(logging.Handler):
+        def emit(self, record):
+            records.append(record.__dict__["context"])
+
+    PySparkLogger.getLogger("DataFrameQueryContextLogger").addHandler(Keep())
+
     spark.conf.set("spark.sql.ansi.enabled", "true")
     df = query()
     try:
@@ -73,6 +84,9 @@ FRESH_SESSION_SCRIPT = textwrap.dedent("""
         out["error"] = None
     except NumberFormatException as e:
         out["error"] = str(e)
+    code = operator.__wrapped__.__code__
+    out["operator_site"] = [code.co_filename, str(code.co_firstlineno)]
+    out["records"] = [[r["file"], r["line"]] for r in records]
     print("RESULT", json.dumps(out))
     spark.stop()
 """)
@@ -98,8 +112,11 @@ def test_engine_session_columns_cost_their_bare_round_trips(fresh_session):
 def test_runtime_error_names_its_query_and_operator(fresh_session):
     msg = fresh_session["error"]
     assert msg is not None and "CAST_INVALID_INPUT" in msg
-    assert '"cast_probe" was called from' in msg
-    assert "q_origin_probe (" in msg and " > cast_probe (" in msg
+    file, line = fresh_session["operator_site"]
+    assert f'"q_origin_probe > cast_probe" was called from\n{file}:{line}' in msg
+    # PySpark's structured record splits the call site into file and line
+    assert fresh_session["records"]
+    assert all(r == [file, line] for r in fresh_session["records"])
 
 
 def test_scope_restores_the_enclosing_origin(monkeypatch):
@@ -115,9 +132,8 @@ def test_scope_restores_the_enclosing_origin(monkeypatch):
         with pytest.raises(ValueError):
             inner()
     (outer, outer_site), (name, site), restored, cleared = log
-    assert (outer, name) == ("outer", "inner")
-    assert site.startswith(outer_site + " > inner (") and site.endswith(
-        f"{__file__}:{inner.__wrapped__.__code__.co_firstlineno})")
+    assert (outer, name) == ("outer", "outer > inner")
+    assert site == f"{__file__}:{inner.__wrapped__.__code__.co_firstlineno}"
     assert restored == (outer, outer_site) and cleared is None
     assert scope._stack() == []
 
