@@ -287,9 +287,16 @@ def _semantic_assigned(
 ) -> DataFrame:
     """Shared SemDeDup E-step: (_id, _v, _cell) — grid vector and
     nearest sampled centroid (squared norms come out of the pair
-    kernel's Gram diagonal, not a separate pass)."""
-    v = df.select(col(id_col).alias("_id"),
-                  scaled_vec(col(vec_col)).alias("_v"))
+    kernel's Gram diagonal, not a separate pass).
+
+    The (id, grid vector) frame is pinned as a lazy local checkpoint
+    (a cache would add a table-cache job under AQE): the centroid
+    sample's job fills it and the assignment reads it back, instead of
+    re-running the caller's plan (a corpus pipeline's quality gate,
+    exact-dedup window and embedding join) a second time. ``release``
+    frees it after the caller's collect."""
+    v = pins.pin(df.select(col(id_col).alias("_id"),
+                           scaled_vec(col(vec_col)).alias("_v")), checkpoint=True)
     cents = sample_centroids(v, k, "_id", "_v", seed)
     return assign_cells(v, cents).drop("_dist")
 

@@ -42,8 +42,9 @@ _DEFAULT_MAX_BUCKET = 1024
 
 
 def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
-                         carry: list[str] | None = None) -> DataFrame:
-    """Candidate pairs from an LSH bucket table with a hot-bucket cap.
+                         carry: list[str] | None = None) -> tuple[DataFrame, int]:
+    """Candidate pairs from an LSH bucket table with a hot-bucket cap,
+    and the table's row count.
 
     ``buckets`` has one row per (doc ``_id``, bucket ``key``); buckets
     with <= ``cap`` members produce ALL intra-bucket pairs (the exact
@@ -79,36 +80,37 @@ def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
             b, (col(f"a.{key}") == col(f"b.{key}")) & (col("a._id") < col("b._id"))
         ).select(*pair_cols)
 
-    # Decision job (the candidate-prune pattern below): cache the thin
-    # bucket table, probe for ANY over-cap bucket with one
-    # map-side-combined aggregate, and when there is none — the
-    # overwhelmingly common case — emit the EXACT uncapped self-join
-    # plan over the CACHED bucket table. A probe-before-cache variant
-    # (narrow count over the uncached buckets, nothing materialized on
-    # the clean path) was tried in r12 and REVERTED: it re-derives the
-    # bucket/signature subtree for the probe AND both self-join sides,
-    # and same-window alternating reps at sf0.1 measured it ~40-70 %
-    # SLOWER warm (minhash 1.9 -> 3.3 s, simhash 1.8 -> 2.5 s, two
-    # alternating rounds) — the cache materialization it avoided is
-    # exactly what the self-join and later reps reuse. The cache holds
-    # (id, bucket) pairs only — far smaller than the shingle-array
-    # cache the minhash caller already pins.
+    # Decision job (the candidate-prune pattern): cache the thin bucket
+    # table and answer every question the callers ask of it with ONE
+    # aggregate over the bucket sizes: is any bucket over the cap, how
+    # large is the largest, and how many rows are there (minhash's
+    # verification prune reads its doc count from them). When no
+    # bucket is over the cap — the overwhelmingly common case — emit
+    # the EXACT uncapped self-join plan over the CACHED bucket table. A
+    # probe-before-cache variant (narrow count over the uncached
+    # buckets, nothing materialized on the clean path) was tried in r12
+    # and REVERTED: it re-derives the bucket/signature subtree for the
+    # probe AND both self-join sides, and same-window alternating reps
+    # at sf0.1 measured it ~40-70 % SLOWER warm (minhash 1.9 -> 3.3 s,
+    # simhash 1.8 -> 2.5 s, two alternating rounds) — the cache
+    # materialization it avoided is exactly what the self-join and
+    # later reps reuse. The cache holds (id, bucket) pairs only — far
+    # smaller than the shingle-array cache the minhash caller pins.
     buckets = pins.pin(buckets)
-    hot = buckets.groupBy(key).agg(*aggs).filter(col("_bsz") > cap)
-    hot = pins.pin(hot)
-    if hot.limit(1).count() == 0:
-        return plain_pairs(buckets).distinct()
+    stats = buckets.groupBy(key).agg(F.count("*").alias("_bsz")).agg(
+        F.coalesce(F.sum("_bsz"), lit(0)).alias("rows"),
+        F.count(F.when(col("_bsz") > cap, 1)).alias("n_hot"),
+        F.max("_bsz").alias("mx"),
+    ).first()
+    if stats["n_hot"] == 0:
+        return plain_pairs(buckets).distinct(), stats["rows"]
     # The star-degradation path changes the OUTPUT CONTRACT (pair
     # completeness, see docstring) — surface a runtime signal so
-    # callers consuming pairs directly can tell it activated. The
-    # stats aggregate runs over the already-cached thin `hot` frame,
-    # so this costs one tiny job only on the degraded path.
-    stats = hot.agg(
-        F.count("*").alias("n"), F.max("_bsz").alias("mx")).first()
+    # callers consuming pairs directly can tell it activated.
     import warnings
 
     warnings.warn(
-        f"LSH hot-bucket cap engaged on key '{key}': {stats['n']} "
+        f"LSH hot-bucket cap engaged on key '{key}': {stats['n_hot']} "
         f"bucket(s) above max_bucket_size={cap} (largest: "
         f"{stats['mx']} members) degrade to star pairing — pair "
         "recall inside those buckets is representative-only (cluster "
@@ -117,6 +119,7 @@ def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
         RuntimeWarning,
         stacklevel=3,
     )
+    hot = pins.pin(buckets.groupBy(key).agg(*aggs).filter(col("_bsz") > cap))
     small = buckets.join(hot.select(key), key, "left_anti")
     pairs = plain_pairs(small)
     star_cols = [col("_bmin").alias("id_a"), col("_id").alias("id_b")]
@@ -128,7 +131,7 @@ def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
         .filter(col("_id") != col("_bmin"))
         .select(*star_cols)
     )
-    return pairs.unionByName(star).distinct()
+    return pairs.unionByName(star).distinct(), stats["rows"]
 
 
 def normalize_text(c: Column) -> Column:
@@ -388,7 +391,8 @@ def minhash_lsh_pairs(
     ]
     buckets = sig.select("_id", F.explode(F.array(*band_cols)).alias("bk"))
     if max_bucket_size is not None:
-        cands = _capped_bucket_pairs(buckets, "bk", max_bucket_size)
+        cands, n_rows = _capped_bucket_pairs(buckets, "bk", max_bucket_size)
+        n_docs = n_rows // bands  # one bucket row per (doc, band)
     else:
         a, b = buckets.alias("a"), buckets.alias("b")
         cands = (
@@ -396,20 +400,21 @@ def minhash_lsh_pairs(
             .select(col("a._id").alias("id_a"), col("b._id").alias("id_b"))
             .distinct()
         )
+        n_docs = base.count()  # one lightweight job; fills the base cache
     # Prune the shingle table to candidate docs BEFORE the verification
     # joins: LSH exists because candidates are rare, so the exact-Jaccard
     # stage should shuffle candidates' shingles, not the corpus's (the
     # r9 1M-doc probe measured 2.2 GB of verification shuffle without
-    # this — ~10x the candidate shingle volume). One decision job counts
-    # the candidate pairs (and fills the cands/base caches the main job
-    # reuses); a provably-small id set broadcasts (longs only: 2M ids ~
-    # 16 MB, inside the 32 MB session threshold) so the corpus-sized
-    # side never shuffles at all, and a pathological candidate set falls
-    # back to a shuffled semi-join. Small corpora skip pruning entirely
-    # — full-table verification is cheaper than the prune's extra
-    # join/broadcast at bench scale (measured: +1.7 s at 5k docs,
-    # -1.5 GB shuffle at 1M docs).
-    n_docs = base.count()  # one lightweight job; fills the base cache
+    # this — ~10x the candidate shingle volume). The doc count comes
+    # from the bucket decision job above, which also filled the base
+    # cache. One more decision job counts the candidate pairs (and fills
+    # the cands cache the main job reuses); a provably-small id set
+    # broadcasts (longs only: 2M ids ~ 16 MB, inside the 32 MB session
+    # threshold) so the corpus-sized side never shuffles at all, and a
+    # pathological candidate set falls back to a shuffled semi-join.
+    # Small corpora skip pruning entirely — full-table verification is
+    # cheaper than the prune's extra join/broadcast at bench scale
+    # (measured: +1.7 s at 5k docs, -1.5 GB shuffle at 1M docs).
     if n_docs <= _PRUNE_MIN_DOCS:
         verif = base
     else:
@@ -580,7 +585,7 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         F.explode(F.array(*[chunk_expr(i) for i in range(n_chunks)])).alias("ck"),
     )
     if max_bucket_size is not None:
-        cands = _capped_bucket_pairs(chunks, "ck", max_bucket_size, carry=["simhash"])
+        cands, _ = _capped_bucket_pairs(chunks, "ck", max_bucket_size, carry=["simhash"])
         cands = cands.select("id_a", "id_b", col("simhash_a").alias("sig_a"),
                              col("simhash_b").alias("sig_b"))
     else:

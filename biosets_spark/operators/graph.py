@@ -14,7 +14,9 @@ Two distributed strategies behind one API (``algorithm=``):
   round contracts every node toward its neighborhood minimum, so a
   path graph of n nodes converges in O(log n) rounds instead of the
   O(n) a label-propagation sweep needs. Each round is two
-  groupBy+join passes over the (shrinking) edge list.
+  ``min OVER (PARTITION BY u)`` windows and a distinct over the
+  (shrinking) edge list, and the loop stops when the round's input is
+  a star forest, counted by the round's own windows.
 - ``"label"``: plain min-label propagation ("hash-to-min") — one
   join + one groupBy per round, converges in O(diameter) rounds.
   Near-dup graphs are almost always star/clique shaped (diameter
@@ -30,7 +32,7 @@ pinned by pytest on planted clusters rather than the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
@@ -42,114 +44,78 @@ def _star_contraction(
     edges: DataFrame, max_iterations: int, on_nonconvergence: str
 ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.
-    SoCC'14). ``edges`` is the symmetrized, null-free, distinct (u, v)
-    frame built by connected_components. Returns (node, component).
+    SoCC'14). ``edges`` is the canonical (u >= v), null-free, distinct
+    checkpoint built by connected_components; this function owns it
+    and frees it once the first round is filled. Returns (node,
+    component).
 
-    Invariant maintained: the working edge list ``e`` is directed
-    u > v (each undirected edge once, no self-loops). Large-star
-    connects every neighbor v > u to m = min(Γ(u) ∪ {u}); small-star
-    connects every smaller neighbor (and u itself) to m = min of the
-    smaller neighborhood. At the fixpoint ``e`` is a star forest:
-    every non-root node points directly at its component's min id.
-    Convergence is O(log n) rounds on any graph shape.
+    The working list ``e`` holds each undirected edge once as u > v,
+    plus root rows (x, x): a self-pair of the input, or a node that no
+    smaller node points at yet. A round is three exchanges.
+    Large-star takes m = min(Γ(u) ∪ {u}) with one
+    ``min(v) OVER (PARTITION BY u)`` window over both edge directions
+    and connects every neighbor v > u to m. Small-star takes m = min
+    of each node's smaller neighborhood and itself with a second
+    window and connects those nodes to m; a distinct closes the round.
+    Root rows pass through both steps, and small-star emits (m, m) for
+    every minimum, so every node of the graph is the ``u`` of some row
+    of every round's output.
+
+    The fixpoint is exactly a star forest whose centers are the
+    component minima: no node has two smaller neighbors, and no node
+    has both a smaller and a larger one. The large-star window counts
+    the rows of the round's input whose ``u`` breaks this, through an
+    ``Observation`` on the round's own checkpoint job, so the proof
+    costs no job. At a zero count the round keeps the input's star
+    edges and adds a root row per center, so its output holds one row
+    per node: (leaf, center) or (root, root). That checkpoint is the
+    result. Convergence is O(log n) rounds on any graph shape.
     """
-    def _checkpoint_with_stats(
-        frame: DataFrame,
-    ) -> tuple[DataFrame, int, int]:
-        """Eager localCheckpoint whose (count, order-independent
-        xxhash64 checksum) fixpoint stats ride the materialization job
-        itself via ``observe`` — ZERO extra jobs, where the former
-        shape ran a separate agg job per round (r12: observe metrics
-        are delivered when the checkpoint's internal collect finishes,
-        verified empirically; one job per round instead of two).
-        Differing stats prove the edge set changed without the exact
-        anti-join probe; matching stats are CONFIRMED by the probe
-        before declaring convergence (the checksum alone is a
-        2^-64-ish collision risk, not a proof)."""
-        obs = Observation()
-        ck = pins.pin(frame.observe(
-            obs,
-            F.count(lit(1)).alias("n"),
-            # decimal accumulator: a long sum of xxhash64 values
-            # overflows under ANSI within a handful of rows
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                lit(0).cast("decimal(38,0)"),
-            ).alias("chk"),
-        ), checkpoint=True, eager=True)
-        m = obs.get
-        return ck, int(m["n"]), int(m["chk"])
-
-    e, n_e, chk_e = _checkpoint_with_stats(edges.filter(col("u") > col("v")))
-    converged = False
+    w = Window.partitionBy("u")
+    e = edges
     for _ in range(max_iterations):
-        # large-star over both edge directions
-        nbrs = e.union(e.select(col("v").alias("u"), col("u").alias("v")))
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
-        ls = (
-            nbrs.join(mins, "u")
-            .withColumn("m", F.least(col("mn"), col("u")))
-            .filter(col("v") > col("u"))
-            .select(col("v").alias("u"), col("m").alias("v"))
+        obs = Observation()
+        large = (
+            e.union(e.select(col("v").alias("u"), col("u").alias("v")))
+            .select("u", "v",
+                    F.min("v").over(w).alias("mn"),
+                    F.max("v").over(w).alias("mx"),
+                    F.count(F.when(col("v") < col("u"), 1)).over(w).alias("n_lt"))
+            .observe(obs, F.count(F.when(
+                (col("n_lt") > 1) | ((col("n_lt") == 1) & (col("mx") > col("u"))), 1,
+            )).alias("off_star"))
             # NO distinct here: duplicates (bounded by node degree)
-            # cannot change small-star's min aggregates and the final
-            # distinct below dedups the emitted edges — dropping the
-            # exchange saves one shuffle per round (r11, measured
-            # ~15% round cost)
+            # cannot change small-star's minima, and the round's final
+            # distinct dedups the emitted edges
+            .filter(col("v") >= col("u"))
+            .select(col("v").alias("u"), F.when(
+                col("v") > col("u"), F.least("mn", "u")).otherwise(col("u")).alias("v"))
         )
-        # small-star over the (already u > v directed) large-star output
-        smins = ls.groupBy("u").agg(F.min("v").alias("m"))
-        j = ls.join(smins, "u")
-        new_e, n_new, chk_new = _checkpoint_with_stats(
-            j.select(col("v").alias("u"), col("m").alias("v"))
-            .union(j.select("u", col("m").alias("v")))
-            .filter(col("u") != col("v"))
-            .distinct()
-        )
-        if n_new == n_e and chk_new == chk_e:
-            # equal counts + empty one-sided difference => equal sets
-            changed = new_e.join(e, ["u", "v"], "left_anti").limit(1).count()
-        else:
-            changed = 1
+        small = large.select("u", "v", F.min("v").over(w).alias("m"))
+        new_e = pins.pin(
+            small.select(F.explode(F.array("u", "v")).alias("u"), col("m").alias("v"))
+            .distinct(),
+            checkpoint=True, eager=True)
         pins.unpin(e)
-        e, n_e, chk_e = new_e, n_new, chk_new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"connected_components(algorithm='star') did not converge in "
-            f"{max_iterations} iterations; raise max_iterations (expected "
-            "O(log n) rounds)"
-        )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
-    # star forest -> labels: non-roots point at the min, roots label
-    # themselves; the groupBy(min) also collapses any partial labels
-    # left by a warn-mode early exit. Reattach every original endpoint
-    # (a node whose only edges were self-pairs is dropped by the u > v
-    # orientation), self-labeled when the contraction never saw it.
-    labels = (
-        e.select(col("u").alias("node"), col("v").alias("component"))
-        .union(e.select(col("v").alias("node"), col("v").alias("component")))
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
+        e = new_e
+        if obs.get["off_star"] == 0:
+            return e.select(col("u").alias("node"), col("v").alias("component"))
+    msg = (
+        f"connected_components(algorithm='star') did not converge in "
+        f"{max_iterations} iterations; raise max_iterations (expected "
+        "O(log n) rounds)"
     )
-    out = pins.pin(
-        edges.select("u")
-        .distinct()
-        .alias("n")
-        .join(labels.alias("l"), col("n.u") == col("l.node"), "left")
-        .select(
-            col("n.u").alias("node"),
-            F.coalesce(col("l.component"), col("n.u")).alias("component"),
-        ),
-        checkpoint=True, eager=True)
-    pins.unpin(e)
-    return out
+    if on_nonconvergence == "raise":
+        raise RuntimeError(msg)
+    import warnings
+
+    warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    # partial labels: each node's smallest known neighbor, or itself
+    return (
+        e.union(e.select("v", "v"))
+        .groupBy(col("u").alias("node"))
+        .agg(F.min("v").alias("component"))
+    )
 
 
 @origin("connected_components")
@@ -164,19 +130,21 @@ def connected_components(
 ) -> DataFrame:
     """Label every node in the pair graph with its component's min id.
 
-    Returns (node, component). Iterates min-label propagation until a
-    fixpoint (checked via a cheap count of label changes). If the
+    Returns (node, component). Iterates until a fixpoint, proven by
+    counts that ride each round's checkpoint job. If the
     fixpoint is not reached within ``max_iterations`` the labels are
     WRONG (some nodes still carry a non-minimal label); by default
     this raises — pass ``on_nonconvergence="warn"`` to get the
     partial labels with a warning instead.
 
     Strategy switch (the broadcast-join pattern applied to iteration):
-    the symmetrized-distinct edge list is counted first; at or below
-    ``small_graph_threshold`` edges (bounded: 100k edge tuples ≈ a few
-    MB) the components are solved with one driver-side union-find pass
-    over the collected edges — identical labels, none of the per-
-    iteration join/checkpoint/fixpoint-count jobs. Above the threshold
+    the canonical (greatest, least) edge list is checkpointed once, and
+    the size of its symmetrized twin (2 per edge, 1 per self-pair)
+    rides that job; at or below ``small_graph_threshold`` edges
+    (bounded: 100k edge tuples ≈ a few MB) the components are solved
+    with one driver-side union-find pass over the collected edges —
+    identical labels, none of the per-iteration checkpoint jobs.
+    Above the threshold
     a distributed iterative plan runs; at 100 TB a detector emitting
     MORE than 100k pairs is exactly the regime the iterative plan
     exists for, while a detector emitting a handful of pairs (the
@@ -193,8 +161,8 @@ def connected_components(
     detectors emit).
 
     Storage note: on the distributed path the returned frame is backed
-    by the final localCheckpoint, which stays pinned on the executors
-    (intermediate rounds are freed as the loop runs). It is a
+    by the final round's localCheckpoint, which stays pinned on the
+    executors (intermediate rounds are freed as the loop runs). It is a
     ``pins.pin``, so ``release_pinned_indexes()`` frees it once the
     result has been materialized.
     """
@@ -202,17 +170,20 @@ def connected_components(
         raise ValueError("on_nonconvergence must be 'raise' or 'warn'")
     if algorithm not in ("star", "label"):
         raise ValueError("algorithm must be 'star' or 'label'")
+    # One eager checkpoint of the canonical (greatest, least) edges;
+    # the size that picks the strategy rides its job. A null endpoint
+    # carries no similarity information and goes first (``greatest``
+    # would skip it); that keeps the strategies' outputs identical.
+    obs = Observation()
+    uv = pairs.select(col(a_col).alias("u"), col(b_col).alias("v")).dropna()
     edges = pins.pin(
-        pairs.select(col(a_col).alias("u"), col(b_col).alias("v"))
-        .union(pairs.select(col(b_col).alias("u"), col(a_col).alias("v")))
-        # a null endpoint carries no similarity information; dropping
-        # it up front keeps the two strategies' outputs identical (a
-        # null would TypeError in the union-find and produce an inert
-        # orphan row in the join path — r6 review)
-        .dropna()
+        uv.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-    )
-    n_edges = edges.count()
+        .observe(obs, F.count(F.when(col("u") > col("v"), 1)).alias("n_gt"),
+                 F.count(F.when(col("u") == col("v"), 1)).alias("n_eq")),
+        checkpoint=True, eager=True)
+    # the size of the symmetrized list: 2 per edge, 1 per self-pair
+    n_edges = 2 * obs.get["n_gt"] + obs.get["n_eq"]
     if n_edges <= small_graph_threshold:
         rows = edges.collect()
         parent: dict = {}
@@ -250,11 +221,11 @@ def connected_components(
         return out
 
     if algorithm == "star":
-        out = _star_contraction(edges, max_iterations, on_nonconvergence)
-        pins.unpin(edges)
-        return out
+        return _star_contraction(edges, max_iterations, on_nonconvergence)
 
-    labels = pins.pin(edges.select("u").distinct().withColumn("component", col("u")))
+    sym = edges.union(edges.filter(col("u") > col("v")).select(
+        col("v").alias("u"), col("u").alias("v")))
+    labels = pins.pin(sym.select("u").distinct().withColumn("component", col("u")))
 
     changed = 1
     for _ in range(max_iterations):
@@ -267,7 +238,7 @@ def connected_components(
         # full join of the new and old label tables every round (at
         # scale: one extra two-sided label shuffle per round).
         neighbor_labels = (
-            edges.alias("e")
+            sym.alias("e")
             .join(labels.alias("l"), col("e.v") == col("l.u"))
             .select(
                 col("e.u").alias("u"),

@@ -290,10 +290,11 @@ def _grid_pairs(df: DataFrame, id_col: str, vec_col: str, max_index_rows: int,
     returns the row and column indices of the pairs to keep.
 
     Plan: a corpus that fits ONE index block (n <= max_index_rows)
-    broadcasts the whole normalized matrix and streams the table
-    through an Arrow-batched mapInPandas — zero shuffle. ``finish``
-    runs on its output before an eager pin, so the broadcast can be
-    destroyed once the pin holds the result. A larger corpus runs a
+    pins one ``spread`` of the table, collects the index from it,
+    broadcasts the whole normalized matrix and streams the same pin
+    through an Arrow-batched mapInPandas. ``finish`` runs on its
+    output before an eager pin, so the broadcast and the spread can be
+    freed once the pin holds the result. A larger corpus runs a
     SINGLE job over block-pair buckets (``_block_pair_src``, r8): rows
     hash into B = ceil(n/max_index_rows) blocks, every unordered block
     pair is one bucket, and a groupBy(bucket).applyInPandas kernel
@@ -331,7 +332,10 @@ def _grid_pairs(df: DataFrame, id_col: str, vec_col: str, max_index_rows: int,
     if B == 1:
         from .dedup import spread
 
-        src = spread(base)
+        # one lazily checkpointed spread: the index collect fills it
+        # and the pair scan reads it back instead of re-running the
+        # repartition (a cache would add a table-cache job under AQE)
+        src = pins.pin(spread(base), checkpoint=True)
         b = _broadcast_block(src, id_col, vec_col)
 
         def block(batches):
@@ -341,12 +345,13 @@ def _grid_pairs(df: DataFrame, id_col: str, vec_col: str, max_index_rows: int,
                                  col_ids, cols_M)
 
         # materialize before destroying the broadcast the plan reads;
-        # destroy in finally so a failed checkpoint can't leak it
+        # free both in finally so a failed checkpoint can't leak them
         try:
             return pins.pin(finish(src.mapInPandas(block, schema=schema)),
                             checkpoint=True, eager=True)
         finally:
             b.destroy()
+            pins.unpin(src)
 
     def bucket(key, pdf):
         a, b_ = divmod(int(key[0]), B)

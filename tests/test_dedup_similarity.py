@@ -601,3 +601,134 @@ def test_connected_components_strategies_agree(spark):
         results.append({(r.node, r.component) for r in comp.collect()})
     assert results[0] == results[1] == results[2]
     assert (30, 30) in results[0]  # self-loop-only node kept, self-labeled
+
+
+def _random_pairs(seed, n_nodes=60, n_pairs=70):
+    """Seeded random pair list over ``n_nodes`` ids: repeated and
+    reversed pairs, self-loops and one null endpoint, plus a path so
+    every graph has some depth."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1000), n_nodes)
+    pairs = [(rng.choice(ids), rng.choice(ids)) for _ in range(n_pairs)]
+    pairs += [(ids[i], ids[i + 1]) for i in range(8)]
+    pairs += [(b, a) for a, b in pairs[:10]]   # reversed
+    pairs += pairs[10:20]                       # repeated
+    pairs += [(ids[-1], ids[-1]), (None, ids[0]), (ids[1], None)]
+    rng.shuffle(pairs)
+    return pairs
+
+
+def _union_find_labels(pairs):
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
+@pytest.mark.parametrize("seed", [3, 17, 41])
+def test_connected_components_paths_agree_on_random_graphs(spark, seed):
+    """Star, union-find and label return the same (node, component)
+    set as a reference union-find on seeded random graphs."""
+    from biosets_spark.operators.graph import connected_components
+
+    pairs = _random_pairs(seed)
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    want = _union_find_labels(pairs)
+    for kw in (
+        dict(),                                                   # union-find
+        dict(small_graph_threshold=0, algorithm="star"),
+        dict(small_graph_threshold=0, algorithm="label", max_iterations=80),
+    ):
+        got = [tuple(r) for r in connected_components(df, **kw).collect()]
+        assert len(got) == len(set(got)), kw  # one row per node
+        assert set(got) == want, kw
+
+
+def test_connected_components_star_warn_returns_partial_labels(spark):
+    from biosets_spark.operators.graph import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "id_a long, id_b long")
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        out = connected_components(
+            chain, max_iterations=1, on_nonconvergence="warn",
+            small_graph_threshold=0, algorithm="star")
+    labels = dict(tuple(r) for r in out.collect())
+    assert sorted(labels) == list(range(7))
+    # partial: every label is a node of the chain at or below its own
+    # node, and one round cannot reach 0 from the far end
+    assert all(0 <= c <= n for n, c in labels.items())
+    assert labels[6] != 0
+
+
+def test_connected_components_star_forest_converges_in_one_round(spark, count_jobs):
+    """A star forest is the contraction's fixpoint: one round proves it
+    through the round's own Observation, with no probe job after it."""
+    from biosets_spark.operators.graph import connected_components
+
+    stars = spark.createDataFrame(
+        [(1, 2), (1, 3), (4, 1), (10, 11), (12, 10), (20, 20)],
+        "id_a long, id_b long")
+    out, jobs = count_jobs(lambda: connected_components(
+        stars, small_graph_threshold=0, algorithm="star", max_iterations=1))
+    # 2 for the canonical edge checkpoint (its distinct's exchange, then
+    # the checkpoint) and 4 for the round (three exchanges, then the
+    # checkpoint); a fixpoint probe or an output pin would add more
+    assert jobs == 6
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (12, 10), (20, 20)]
+
+
+@pytest.mark.parametrize("id_limit", [2_000_000, 0], ids=["broadcast", "shuffled"])
+def test_minhash_verification_prune_matches_unpruned(docs, monkeypatch, id_limit):
+    """The LSH verification prune, forced on the six-doc corpus, keeps
+    every verified pair in both its broadcast and its shuffled
+    semi-join. The prune starts one doc below the corpus size, so it
+    also checks the doc count read from the bucket aggregate."""
+    want = {tuple(r) for r in D.minhash_lsh_pairs(docs, threshold=0.3).collect()}
+    assert want
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    monkeypatch.setattr(D, "_BROADCAST_ID_LIMIT", id_limit)
+    monkeypatch.setattr(D, "_PRUNE_MIN_DOCS", 6)
+    assert "LeftSemi" not in plan(D.minhash_lsh_pairs(docs, threshold=0.3))
+    monkeypatch.setattr(D, "_PRUNE_MIN_DOCS", 5)
+    pruned = D.minhash_lsh_pairs(docs, threshold=0.3)
+    semi = [ln for ln in plan(pruned).splitlines() if "LeftSemi" in ln]
+    assert semi
+    assert any("strategy=broadcast" in ln for ln in semi) == (id_limit > 0)
+    assert {tuple(r) for r in pruned.collect()} == want
+
+
+def test_single_block_grid_reads_one_spread(spark, count_jobs):
+    """The single-block grid plan collects its index from one pinned
+    ``spread`` and streams the same pin, so the repartition runs once:
+    the n count (its exchange, then the result), the spread's
+    repartition, the index collect that fills the pin, and the output
+    pin that reads it back. A second repartition would add a job."""
+    from tests.conftest import SF_SMOKE
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    # one scan task, so spread() repartitions
+    assert emb.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    out, jobs = count_jobs(lambda: S.embedding_dup_pairs(emb, threshold=0.3))
+    assert jobs == 5
+    single = {(r.id_a, r.id_b) for r in out.collect()}
+    blocked = S.embedding_dup_pairs(emb, threshold=0.3, max_index_rows=10)
+    assert single and single == {(r.id_a, r.id_b) for r in blocked.collect()}

@@ -578,3 +578,31 @@ def test_canon_decimal_float_parity_beyond_10_sig_digits():
     assert canon(1) != canon("1")
     assert canon(None) != canon("None")
     assert canon(float("nan")) == canon(float("nan")) == "NaN"
+
+
+# Build-job ratchet: the Spark jobs a warm build of each decision_heavy
+# query submits at SF_SMOKE (AQE submits each exchange and each cache
+# fill below an action as a job of its own). A change that adds a
+# decision job back fails here; lower a bound when a change removes one.
+DECISION_BUILD_JOBS = {
+    "q_dedup_minhash_lsh": (6, "one bucket-stats first(): over-cap test and doc count in one row"),
+    "q_dedup_ngram_jaccard": (3, "the eager fill of the pinned shingle table"),
+    "q_components_user_chains": (7, "edge checkpoint with its size, then one star round"),
+    "q_pipeline_curated_corpus": (3, "the centroid sample, which fills the pinned vectors"),
+}
+
+
+def test_decision_heavy_build_jobs_ratchet(spark, count_jobs):
+    from biosets_spark import release_pinned_indexes
+    from tests.conftest import SF_SMOKE
+
+    qs = _registry()
+    got = {}
+    for name in DECISION_BUILD_JOBS:
+        qs[name].fn(spark, SF_SMOKE).collect()  # warm: plan caches, memo
+        release_pinned_indexes()
+        df, got[name] = count_jobs(lambda: qs[name].fn(spark, SF_SMOKE))
+        df.collect()
+        release_pinned_indexes()
+    over = {n: (got[n], b) for n, (b, _) in DECISION_BUILD_JOBS.items() if got[n] > b}
+    assert over == {}, f"build jobs above their bound (got, bound): {over}"
